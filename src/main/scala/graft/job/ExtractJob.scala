@@ -1,11 +1,15 @@
 package graft.job
 
 import graft.extract.Extractor
+import graft.html.HtmlExtract
 import graft.model._
 import graft.reflow.ExtractConfig
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.CollectionAccumulator
+import scala.util.control.NonFatal
 
 /** The corpus-dimension driver (SURVEY.md §2.11 C1, §4): Iceberg/parquet
   * scan -> resume anti-join -> skew-aware repartition -> batched
@@ -40,7 +44,7 @@ final case class JobConfig(
     numPartitions: Int = 32,
     chunks: Int = 1,
     bigDocSpanThreshold: Int = 20000,
-    /** html-kernel skew threshold in CHARS (inputKind = "html"). A
+    /** web-kernel skew threshold in CHARS (inputKind "html"/"html_bytes"). A
       * separate knob from bigDocSpanThreshold: a 20k-span layout doc is
       * pathological, but a 20k-char page is ordinary — reusing the span
       * threshold would send most real pages down the big-doc salt branch
@@ -68,19 +72,99 @@ final case class JobConfig(
       * invisible; with task-level commits use "chunk").
       */
     resumeGranularity: String = "chunk",
-    /** "spans" (default): the layout-token PDF kernel over (doc_id,
-      * spans). "html": the web kernel (graft.html.HtmlExtract) over
-      * (doc_id, html) — same chunking, bucketed pruning, skew salting
-      * (keyed on html length instead of span count), doc/chunk resume
-      * and per-partition lineage metrics; only the per-row kernel and
-      * the input columns differ. "html_bytes": the same web kernel over
-      * crawl-native (doc_id, html_bytes[, content_type]) rows — the
-      * charset ladder (HtmlCharset) runs inside the same map pass; a
-      * missing content_type column reads as null (ladder continues at
-      * the meta prescan / content sniff).
+    /** Which [[InputKind]] the job reads: "spans" (default, the
+      * layout-token PDF kernel over (doc_id, spans)), "html" (the web
+      * kernel over (doc_id, html)) or "html_bytes" (the same web kernel
+      * over crawl-native (doc_id, html_bytes[, content_type]) rows, the
+      * charset ladder inside the same map pass). Every kind shares the
+      * chunking, bucketed pruning, skew salting, doc/chunk resume and
+      * per-partition metrics; any other value fails the run.
       */
     inputKind: String = "spans",
     extract: ExtractConfig = ExtractConfig())
+
+/** The input-kind table of [[ExtractJob]]: the one place `JobConfig.inputKind`
+  * is interpreted. Each kind names the columns its kernel reads (doc_id
+  * first), its skew measure with the threshold that applies, and the
+  * per-row kernel the shared extraction loop calls.
+  */
+private[job] sealed abstract class InputKind(val name: String) {
+  /** Project a raw input table onto (doc_id, kernel columns...); idempotent. */
+  def columns(df: DataFrame): DataFrame
+  /** Skew measure and big-doc threshold for `repartitionSkewAwareDf`. */
+  def skew(cfg: JobConfig): (Column, Int)
+  /** The per-row kernel over rows of the projected `schema`, built once
+    * per chunk on the driver.
+    */
+  def kernel(schema: StructType, ecfg: ExtractConfig): InputKind.RowKernel
+}
+
+private[job] object InputKind {
+  /** (non-null doc_id, row, partition loop) => output document; throws
+    * on a malformed row. The loop is passed so the span kernel can count
+    * its input spans without a second array read.
+    */
+  type RowKernel =
+    (String, InternalRow, ExtractJob.PartitionInstrumentation) => ExtractedDoc
+
+  case object Spans extends InputKind("spans") {
+    def columns(df: DataFrame): DataFrame = df.select("doc_id", "spans")
+    def skew(cfg: JobConfig): (Column, Int) = (size(col("spans")), cfg.bigDocSpanThreshold)
+    def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel = {
+      val ord = FastScan.SpanOrdinals.from(schema)
+      (docId, row, m) => {
+        require(!row.isNullAt(1), "null spans")
+        val arr = row.getArray(1)
+        m.spansIn += arr.numElements()
+        val out = Extractor.extractTree(FastScan.decodeSpans(arr, ecfg.fast, ord), ecfg)
+        ExtractedDoc(docId, Extractor.emitSpans(out), out.text())
+      }
+    }
+  }
+
+  case object Html extends InputKind("html") {
+    def columns(df: DataFrame): DataFrame = df.select("doc_id", "html")
+    // chars, not spans: a 20k-char page is ordinary (see bigDocHtmlChars)
+    def skew(cfg: JobConfig): (Column, Int) = (length(col("html")), cfg.bigDocHtmlChars)
+    def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel =
+      (docId, row, _) => {
+        require(!row.isNullAt(1), "null html")
+        HtmlExtract.extractRow(docId, row.getUTF8String(1).toString)
+      }
+  }
+
+  case object HtmlBytes extends InputKind("html_bytes") {
+    def columns(df: DataFrame): DataFrame = {
+      // a WARC landing (Warc.ingestToTable) carries 3xx redirect rows —
+      // crawl EDGES with empty bodies; only HTTP-200 captures are
+      // documents (mirrors Warc.extractAll's filter). A table without
+      // content_type still runs: the charset ladder continues past the
+      // absent transport layer.
+      val content =
+        if (df.columns.contains("http_status")) df.filter(col("http_status") === 200)
+        else df
+      if (content.columns.contains("content_type"))
+        content.select("doc_id", "html_bytes", "content_type")
+      else content.select(col("doc_id"), col("html_bytes"),
+        lit(null).cast("string").as("content_type"))
+    }
+    // length(binary) = octet count; ~1 byte per char for the dominant
+    // encodings, so the char threshold applies
+    def skew(cfg: JobConfig): (Column, Int) = (length(col("html_bytes")), cfg.bigDocHtmlChars)
+    def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel =
+      (docId, row, _) => {
+        require(!row.isNullAt(1), "null html_bytes")
+        HtmlExtract.extractRowBytes(docId, row.getBinary(1),
+          if (row.isNullAt(2)) null else row.getUTF8String(2).toString)
+      }
+  }
+
+  private val All: Seq[InputKind] = Seq(Spans, Html, HtmlBytes)
+
+  def parse(name: String): InputKind = All.find(_.name == name).getOrElse(
+    throw new IllegalArgumentException(
+      s"unknown inputKind '$name'; accepted: ${All.map(_.name).mkString(", ")}"))
+}
 
 object ExtractJob {
 
@@ -123,169 +207,112 @@ object ExtractJob {
   /** DataFrame-generic variant: `docSize` is the skew measure (span count
     * for the layout kernel, html length for the web kernel).
     */
-  def repartitionSkewAwareDf(docs: org.apache.spark.sql.DataFrame,
-      numPartitions: Int, bigThreshold: Int,
-      docSize: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+  def repartitionSkewAwareDf(docs: DataFrame, numPartitions: Int,
+      bigThreshold: Int, docSize: Column): DataFrame = {
     val key = when(docSize >= bigThreshold,
       xxhash64(col("doc_id"), lit("bigdoc-salt"), docSize))
       .otherwise(xxhash64(col("doc_id")))
     docs.repartition(numPartitions * SaltFactor, key)
   }
 
-  /** Per-partition counters + the emit-exactly-once metric iterator,
-    * SHARED by the span and html chunk extractors: one metrics contract,
-    * one implementation — a divergence here would silently split the two
-    * kernels' lineage semantics. Constructed inside mapPartitions (task
-    * thread), never serialized.
+  /** The one extraction loop of a partition, for every [[InputKind]]: it
+    * owns the per-partition counters, emits exactly one PartitionMetric
+    * when the rows run out, and is the per-row failure seam — a null
+    * doc_id or a kernel exception fails the DOCUMENT (counted in
+    * n_failed, first error kept), never the task. The kind's kernel is
+    * resolved once per chunk on the driver; per row the loop allocates
+    * only the doc_id string. Constructed inside mapPartitions (task thread).
+    * UnsafeRows from `queryExecution.toRdd` are reused by the scanner, so
+    * each row is fully consumed by the kernel before the next is read.
     */
-  private final class PartitionInstrumentation(runId: String, chunkId: Int) {
+  private[job] final class PartitionInstrumentation(
+      rows: Iterator[InternalRow], kernel: InputKind.RowKernel,
+      acc: CollectionAccumulator[PartitionMetric], runId: String, chunkId: Int)
+      extends Iterator[ExtractedDoc] {
     private val t0 = System.currentTimeMillis()
     private val lm0 = graft.lm.Scorer.threadLmCallCount // task = one thread
     private val pid = org.apache.spark.TaskContext.getPartitionId()
-    var nDocs = 0L
-    var nFailed = 0L
+    private var nDocs, nFailed, spansOut = 0L
+    /** Input spans read; the span kernel adds to it, so it stays 0 for
+      * the web kinds, which have no span column.
+      */
     var spansIn = 0L
-    var spansOut = 0L
-    private var firstError: String = ""
-    def failed(docId: String, e: Throwable): Unit = {
-      nFailed += 1
-      if (firstError.isEmpty) firstError = s"$docId: ${e.getMessage}"
-    }
-    def wrap(out: Iterator[ExtractedDoc],
-        acc: CollectionAccumulator[PartitionMetric]): Iterator[ExtractedDoc] =
-      new Iterator[ExtractedDoc] {
-        private var metricEmitted = false
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h && !metricEmitted) {
-            metricEmitted = true
-            acc.add(PartitionMetric(
-              runId, chunkId, pid, nDocs, nFailed, spansIn, spansOut,
-              graft.lm.Scorer.threadLmCallCount - lm0,
-              System.currentTimeMillis() - t0,
-              if (nFailed == 0) "done" else "done_with_failures",
-              firstError, System.currentTimeMillis()))
-          }
-          h
-        }
-        def next(): ExtractedDoc = out.next()
+    private var firstError = ""
+    private var pending: ExtractedDoc = null
+    private var metricEmitted = false
+
+    def hasNext: Boolean = {
+      while (pending == null && rows.hasNext) pending = extractRow(rows.next())
+      if (pending == null && !metricEmitted) {
+        metricEmitted = true
+        acc.add(PartitionMetric(
+          runId, chunkId, pid, nDocs, nFailed, spansIn, spansOut,
+          graft.lm.Scorer.threadLmCallCount - lm0,
+          System.currentTimeMillis() - t0,
+          if (nFailed == 0) "done" else "done_with_failures",
+          firstError, System.currentTimeMillis()))
       }
+      pending != null
+    }
+
+    def next(): ExtractedDoc = {
+      if (!hasNext) throw new NoSuchElementException("partition exhausted")
+      val r = pending
+      pending = null
+      r
+    }
+
+    /** One row through the kernel; null when the document failed. */
+    private def extractRow(row: InternalRow): ExtractedDoc = {
+      nDocs += 1
+      var docId: String = null
+      try {
+        if (row.isNullAt(0)) throw new IllegalArgumentException("null doc_id")
+        docId = row.getUTF8String(0).toString
+        val r = kernel(docId, row, this)
+        spansOut += r.spans.length
+        r
+      } catch {
+        case NonFatal(e) =>
+          nFailed += 1
+          if (firstError.isEmpty) {
+            val who = if (docId == null) s"row ${nDocs - 1} of partition $pid" else docId
+            firstError = s"$who: ${e.getMessage}"
+          }
+          null
+      }
+    }
   }
 
-  /** Extract one chunk: returns the output Dataset; metrics are gathered
-    * through an accumulator (one row per partition — per-partition
-    * lineage). Rows are consumed on the Tungsten-direct path (FastScan) —
-    * no encoder deserialization of the span array.
+  /** Extract one chunk of `docs` with the kernel of `cfg.inputKind`:
+    * returns the output Dataset; metrics arrive through `metricsAcc`, one
+    * row per partition (per-partition lineage). Rows are consumed on the
+    * Tungsten-direct path — no encoder deserialization of the input.
     */
   def extractChunk(
-      docs: Dataset[DocRow],
+      docs: Dataset[_],
       cfg: JobConfig,
       chunkId: Int,
-      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val ecfg = cfg.extract
-    val runId = cfg.runId
-    val prunedDf = docs.toDF().select("doc_id", "spans")
-    val ord = FastScan.SpanOrdinals.from(prunedDf.schema)
-    val rdd = prunedDf
-      .queryExecution.toRdd.mapPartitions { it =>
-      val m = new PartitionInstrumentation(runId, chunkId)
-      val out = it.flatMap { row =>
-        m.nDocs += 1
-        // docId resolved defensively FIRST: a null doc_id / null spans is
-        // a malformed DOCUMENT (metrics row), never a task failure — at
-        // 10^12 rows every garbage shape occurs, and an NPE outside the
-        // try would abort the whole chunk on one dirty row
-        var docId = "(null doc_id)"
-        try {
-          if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-          val arr = row.getArray(1) // null spans -> NPE -> failed doc
-          m.spansIn += arr.numElements()
-          val tree = FastScan.decodeSpans(arr, ecfg.fast, ord)
-          val docOut = Extractor.extractTree(tree, ecfg)
-          val r = ExtractedDoc(docId, Extractor.emitSpans(docOut), docOut.text())
-          m.spansOut += r.spans.length
-          Some(r)
-        } catch {
-          case scala.util.control.NonFatal(e) => m.failed(docId, e); None
-        }
-      }
-      m.wrap(out, metricsAcc)
-    }
-    spark.createDataset(rdd)
-  }
+      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] =
+    extractKind(InputKind.parse(cfg.inputKind), docs, cfg, chunkId, metricsAcc)
 
-  /** HTML twin of extractChunk: the web kernel over (doc_id, html) rows
-    * with the SAME per-partition lineage metrics contract (one
-    * PartitionMetric per partition; a null/failed document is a metrics
-    * row, never a task failure). `n_spans_in` is 0 by definition — the
-    * web input has no span column; `n_spans_out` counts emitted blocks.
-    */
-  def extractChunkHtml(
-      docs: org.apache.spark.sql.DataFrame,
-      cfg: JobConfig,
-      chunkId: Int,
-      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val runId = cfg.runId
-    val rdd = docs.select("doc_id", "html").as[(String, String)]
-      .queryExecution.toRdd.mapPartitions { it =>
-        val m = new PartitionInstrumentation(runId, chunkId)
-        val out = it.flatMap { row =>
-          m.nDocs += 1
-          var docId = "(null doc_id)"
-          try {
-            if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-            require(!row.isNullAt(1), "null html")
-            val r = graft.html.HtmlExtract.extractRow(
-              docId, row.getUTF8String(1).toString)
-            m.spansOut += r.spans.length
-            Some(r)
-          } catch {
-            case scala.util.control.NonFatal(e) => m.failed(docId, e); None
-          }
-        }
-        m.wrap(out, metricsAcc)
-      }
-    spark.createDataset(rdd)
-  }
-
-  /** Crawl-native twin of extractChunkHtml: (doc_id, html_bytes,
-    * content_type) rows through the charset ladder + web kernel in ONE
-    * map pass, same metrics contract. A null content_type cell is fine
-    * (the ladder continues); null bytes are a counted metrics failure.
-    */
+  /** [[extractChunk]] with the `html_bytes` kernel, whatever `cfg.inputKind`. */
   def extractChunkHtmlBytes(
-      docs: org.apache.spark.sql.DataFrame,
+      docs: DataFrame,
       cfg: JobConfig,
       chunkId: Int,
-      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
+      metricsAcc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] =
+    extractKind(InputKind.HtmlBytes, docs, cfg, chunkId, metricsAcc)
+
+  private def extractKind(kind: InputKind, docs: Dataset[_], cfg: JobConfig,
+      chunkId: Int, acc: CollectionAccumulator[PartitionMetric]): Dataset[ExtractedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    val input = kind.columns(docs.toDF())
+    val kernel = kind.kernel(input.schema, cfg.extract)
     val runId = cfg.runId
-    val rdd = docs.select("doc_id", "html_bytes", "content_type")
-      .queryExecution.toRdd.mapPartitions { it =>
-        val m = new PartitionInstrumentation(runId, chunkId)
-        val out = it.flatMap { row =>
-          m.nDocs += 1
-          var docId = "(null doc_id)"
-          try {
-            if (!row.isNullAt(0)) docId = row.getUTF8String(0).toString
-            require(!row.isNullAt(1), "null html_bytes")
-            val ct = if (row.isNullAt(2)) null else row.getUTF8String(2).toString
-            val r = graft.html.HtmlExtract.extractRowBytes(
-              docId, row.getBinary(1), ct)
-            m.spansOut += r.spans.length
-            Some(r)
-          } catch {
-            case scala.util.control.NonFatal(e) => m.failed(docId, e); None
-          }
-        }
-        m.wrap(out, metricsAcc)
-      }
-    spark.createDataset(rdd)
+    spark.createDataset(input.queryExecution.toRdd.mapPartitions(rows =>
+      new PartitionInstrumentation(rows, kernel, acc, runId, chunkId)))
   }
 
   /** Chunk ids already recorded complete in the metrics table (resume).
@@ -303,7 +330,7 @@ object ExtractJob {
         .select("chunk_id").distinct()
         .collect().map(_.getInt(0)).toSet
     } catch {
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         throw new IllegalStateException(
           s"metrics table ${cfg.metricsPath} exists but is unreadable — " +
             "refusing to guess the resume state", e)
@@ -329,6 +356,7 @@ object ExtractJob {
   /** Run the job end-to-end with checkpointed resume. */
   def run(spark: SparkSession, cfg: JobConfig): Unit = {
     import spark.implicits._
+    val kind = InputKind.parse(cfg.inputKind)
     // consulted regardless of cfg.chunks: a rerun of an already-complete
     // job (chunks=1 included) must be a no-op, not a second copy
     val done = completedChunks(spark, cfg)
@@ -357,36 +385,14 @@ object ExtractJob {
 
     (0 until cfg.chunks).foreach { chunk =>
       if (!done.contains(chunk)) {
-        // the kernels share every job mechanism; only the data columns
-        // and the per-row function differ. html_bytes additionally
-        // carries content_type when the input has it (a crawl table
-        // without one still works — the charset ladder continues past
-        // the absent transport layer)
-        def inputCols(df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame = cfg.inputKind match {
-          case "html" => df.select("doc_id", "html")
-          case "html_bytes" =>
-            // a WARC landing (Warc.ingestToTable) carries 3xx redirect
-            // rows — crawl EDGES with empty bodies; only HTTP-200
-            // captures are documents (mirrors Warc.extractAll's filter)
-            val content =
-              if (df.columns.contains("http_status"))
-                df.filter(col("http_status") === 200)
-              else df
-            if (content.columns.contains("content_type"))
-              content.select("doc_id", "html_bytes", "content_type")
-            else content.select(col("doc_id"), col("html_bytes"),
-              lit(null).cast("string").as("content_type"))
-          case _ => df.select("doc_id", "spans")
-        }
         val slice =
           if (cfg.bucketedInput) {
             // partition pruning on the bucket= layout: only this chunk's
             // files are scanned (JobSpec asserts the pushed filter)
-            inputCols(spark.read.format(cfg.format).load(cfg.inputPath)
+            kind.columns(spark.read.format(cfg.format).load(cfg.inputPath)
               .filter(col("bucket") === chunk))
           } else {
-            val docs = inputCols(spark.read.format(cfg.format).load(cfg.inputPath))
+            val docs = kind.columns(spark.read.format(cfg.format).load(cfg.inputPath))
             if (cfg.chunks == 1) docs
             else docs.filter(pmod(xxhash64(col("doc_id")), lit(cfg.chunks)) === chunk)
           }
@@ -394,7 +400,7 @@ object ExtractJob {
         // doc-granular resume (J4): keep the docs a crashed attempt already
         // committed, re-extract only the missing ones (left-anti on doc_id)
         val docLevel = cfg.resumeGranularity == "doc"
-        val survivors: Option[org.apache.spark.sql.DataFrame] =
+        val survivors: Option[DataFrame] =
           if (!docLevel) None
           else {
             val p = new org.apache.hadoop.fs.Path(chunkDir)
@@ -413,27 +419,12 @@ object ExtractJob {
         }
         val part =
           if (cfg.repartitionInput) {
-            // skew measure AND threshold are per-kind: span count vs
-            // bigDocSpanThreshold for layout docs, char length vs
-            // bigDocHtmlChars for pages (the units differ by ~an order of
-            // magnitude — see the JobConfig scaladoc)
-            val (sizeCol, threshold) = cfg.inputKind match {
-              case "html" => (length(col("html")), cfg.bigDocHtmlChars)
-              // length(binary) = octet count; bytes-per-char ~1 for the
-              // dominant encodings, so the same char threshold applies
-              case "html_bytes" => (length(col("html_bytes")), cfg.bigDocHtmlChars)
-              case _ => (size(col("spans")), cfg.bigDocSpanThreshold)
-            }
+            val (sizeCol, threshold) = kind.skew(cfg)
             repartitionSkewAwareDf(sliceTodo, cfg.numPartitions,
               threshold, sizeCol)
           } else sliceTodo // ingest-time layout already distributes: map-only
         val acc = spark.sparkContext.collectionAccumulator[PartitionMetric](s"metrics-$chunk")
-        val out = cfg.inputKind match {
-          case "html" => extractChunkHtml(part, cfg, chunk, acc)
-          case "html_bytes" => extractChunkHtmlBytes(part, cfg, chunk, acc)
-          case _ =>
-            extractChunk(part.select("doc_id", "spans").as[DocRow], cfg, chunk, acc)
-        }
+        val out = extractKind(kind, part, cfg, chunk, acc)
         // chunk mode: Overwrite — the chunk directory is the retry unit, so
         // a crashed-after-partial-commit attempt (committer v2, speculative
         // tasks) is simply replaced on resume — idempotent by construction.
@@ -480,15 +471,27 @@ object ExtractJob {
     *     [--run-id r] [--partitions n] [--chunks k] [--format parquet] \
     *     [--big-doc-spans n] [--big-doc-html-chars n] [--fast true|false] \
     *     [--bucketed-input true|false] [--repartition true|false] \
-    *     [--input-kind spans|html|html_bytes]
+    *     [--input-kind spans|html|html_bytes] [--master url]
     *
     * The session is taken from spark-submit's conf (master, executors,
-    * AQE, shuffle partitions come from the cluster submit, not the code).
+    * AQE, shuffle partitions come from the cluster submit, not the code);
+    * `--master` only applies to a local/dev run outside spark-submit. An
+    * unknown flag or a flag without a value fails before any session is
+    * built, so a typo never runs the job on defaults.
     */
   def main(args: Array[String]): Unit = {
-    val kv = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val flags = Seq("input", "output", "metrics", "run-id", "partitions",
+      "chunks", "big-doc-spans", "big-doc-html-chars", "fast", "format",
+      "bucketed-input", "repartition", "input-kind", "master")
+    val pairs = args.grouped(2).toSeq
+    val bad = pairs.collect {
+      case Array(k, _) if !(k.startsWith("--") && flags.contains(k.drop(2))) => k
+      case Array(k) => s"$k (no value)"
+    }
+    if (bad.nonEmpty) throw new IllegalArgumentException(
+      s"unknown ExtractJob arguments: ${bad.mkString(", ")}; " +
+        s"accepted flags: ${flags.map("--" + _).mkString(" ")}")
+    val kv = pairs.map(p => p(0).drop(2) -> p(1)).toMap
     def req(k: String): String =
       kv.getOrElse(k, sys.error(s"missing required --$k <value>"))
     val cfg = JobConfig(

@@ -1,17 +1,16 @@
 package graft.job
 
-import graft.assemble.DocumentOutput
 import graft.codec.{SpanCodec, TreeBuilder}
-import graft.extract.Extractor
 import graft.model._
 import graft.reflow.ExtractConfig
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Tungsten-direct scan path: builds the per-document tree straight from
-  * `InternalRow`/`ArrayData`, bypassing the Dataset encoder.
+/** Tungsten-direct span decode for the `spans` kind of [[ExtractJob]]'s
+  * one extraction loop ([[InputKind.Spans]]): builds the per-document tree
+  * straight from `InternalRow`/`ArrayData`, bypassing the Dataset encoder.
   *
   * Why: the generic `as[DocRow]` deserializer materializes 4 Strings + a
   * Span + a Seq cell per span (~10M objects per 40k docs) and measurably
@@ -113,31 +112,11 @@ object FastScan {
     // unknown kinds ignored (forward compat)
   }
 
-  /** Extract a (doc_id, spans) DataFrame via the Tungsten-direct path.
-    * Returns the typed output Dataset (output-side encoding is cheap: a
-    * handful of rendered spans per doc).
+  /** [[ExtractJob.extractChunk]] over a (doc_id, spans) DataFrame with the
+    * default spans kind and no metrics reader: the same extraction loop
+    * the job runs, so a failed document is dropped exactly as in a job.
     */
-  def extract(df: DataFrame, cfg: ExtractConfig): Dataset[ExtractedDoc] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pruned = df.select("doc_id", "spans")
-    val ord = SpanOrdinals.from(pruned.schema)
-    val rdd = pruned.queryExecution.toRdd.mapPartitions(_.flatMap { row =>
-      try {
-        // null doc_id/spans are malformed DOCUMENTS, not task failures —
-        // the reads live inside the try so the row-never-task contract
-        // holds for them too
-        val docId = row.getUTF8String(0).toString
-        val tree = decodeSpans(row.getArray(1), cfg.fast, ord)
-        val out: DocumentOutput = Extractor.extractTree(tree, cfg)
-        Some(ExtractedDoc(docId, Extractor.emitSpans(out), out.text()))
-      } catch {
-        // same contract as Extractor.extractRow: any malformed document
-        // fails the row, never the task
-        case _: ExtractionException => None
-        case scala.util.control.NonFatal(_) => None
-      }
-    })
-    spark.createDataset(rdd)
-  }
+  def extract(df: DataFrame, cfg: ExtractConfig): Dataset[ExtractedDoc] =
+    ExtractJob.extractChunk(df, JobConfig("", "", "", extract = cfg), 0,
+      df.sparkSession.sparkContext.collectionAccumulator[PartitionMetric])
 }

@@ -54,14 +54,16 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("html job: web kernel through the chunked/resumable machinery") {
     import spark.implicits._
-    val pages = graft.fixtures.HtmlFixtures.corpus(30) :+ ("web-broken", null)
+    val good = graft.fixtures.HtmlFixtures.corpus(30)
+    // a null html and a null doc_id with a VALID page: both fail as docs
+    val pages = good :+ ("web-broken", null) :+ (null, good(3)._2)
     pages.toDF("doc_id", "html").write.mode("overwrite").parquet(s"$dir/hin")
     val cfg = JobConfig(s"$dir/hin", s"$dir/hout", s"$dir/hm",
       runId = "rh", numPartitions = 4, chunks = 2, inputKind = "html",
       bigDocHtmlChars = 2000) // fixture pages are ~3-4k chars: salting engages
     ExtractJob.run(spark, cfg)
     val out = ExtractJob.readOutput(spark, cfg).collect()
-    assert(out.length == 30) // null-html page failed, not emitted
+    assert(out.length == 30) // null-html and null-id pages failed, not emitted
     assert(out.forall(_.spans.nonEmpty))
     // null page is a lineage metric, not a task failure
     val metrics = spark.read.parquet(s"$dir/hm")
@@ -69,6 +71,8 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.col("status") === "done_with_failures" &&
         org.apache.spark.sql.functions.col("error").contains("web-broken"))
       .count() >= 1)
+    assert(metrics.agg(org.apache.spark.sql.functions.sum("n_failed"))
+      .head.getLong(0) == 2L)
     // rerun of the completed job is a no-op
     ExtractJob.run(spark, cfg)
     assert(ExtractJob.readOutput(spark, cfg).count() == 30)
@@ -305,9 +309,10 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("doc_id", StringType, nullable = true),
       StructField("spans", ArrayType(spanType), nullable = true)))
     val good = corpus(3)
-    val rows = good.map(d => Row(d.doc_id,
-      d.spans.map(s => Row(s.kind, s.text, s.media_ref, s.offset)))) ++
+    def spanRows(d: DocRow) = d.spans.map(s => Row(s.kind, s.text, s.media_ref, s.offset))
+    val rows = good.map(d => Row(d.doc_id, spanRows(d))) ++
       Seq(Row(null, Seq(Row("page", "", "", 0))), // null doc_id
+        Row(null, spanRows(good.head)), // null doc_id, VALID spans
         Row("doc-null-spans", null)) // null spans
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
@@ -316,10 +321,51 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
       runId = "rn", numPartitions = 2, chunks = 1)
     ExtractJob.run(spark, cfg) // must not throw
     val out = ExtractJob.readOutput(spark, cfg).collect()
-    assert(out.length == good.length) // the 2 dirty rows failed as DOCS
+    assert(out.length == good.length) // the 3 dirty rows failed as DOCS
+    assert(out.map(_.doc_id).sorted.toSeq == good.map(_.doc_id).sorted)
     val m = spark.read.parquet(s"$dir/m-null")
     assert(m.agg(org.apache.spark.sql.functions.sum("n_failed"))
-      .collect()(0).getLong(0) == 2L)
+      .collect()(0).getLong(0) == 3L)
+    // the error text names the row that has no id to name it by
+    val acc = spark.sparkContext.collectionAccumulator[PartitionMetric]("m-null-1")
+    val oneRow = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(rows(good.length + 1)), 1), schema)
+    assert(ExtractJob.extractChunk(oneRow, cfg, 0, acc).count() == 0)
+    assert(acc.value.get(0).error == "row 0 of partition 0: null doc_id")
+    // the FastScan delegate runs the same loop: it drops the same rows
+    val viaFast = graft.job.FastScan.extract(
+      spark.read.parquet(s"$dir/in-null"), graft.reflow.ExtractConfig()).collect()
+    assert(viaFast.map(_.doc_id).sorted.toSeq == good.map(_.doc_id).sorted)
+  }
+
+  test("unknown inputKind fails loudly, listing the accepted kinds") {
+    import spark.implicits._
+    spark.createDataset(corpus(3)).write.mode("overwrite").parquet(s"$dir/in-kind")
+    for (k <- Seq("pdf", "html-bytes")) {
+      val cfg = JobConfig(s"$dir/in-kind", s"$dir/out-kind", s"$dir/m-kind",
+        runId = "rk", numPartitions = 2, inputKind = k)
+      val e = intercept[IllegalArgumentException](ExtractJob.run(spark, cfg))
+      assert(e.getMessage.contains(s"'$k'") &&
+        e.getMessage.contains("spans, html, html_bytes"), e.getMessage)
+      val acc = spark.sparkContext.collectionAccumulator[PartitionMetric]("m-kind")
+      intercept[IllegalArgumentException](ExtractJob.extractChunk(
+        spark.read.parquet(s"$dir/in-kind"), cfg, 0, acc))
+    }
+    assert(!new java.io.File(s"$dir/out-kind").exists())
+  }
+
+  test("ExtractJob.main rejects an unknown flag before building a session") {
+    val before = SparkSession.getDefaultSession
+    val e = intercept[IllegalArgumentException](ExtractJob.main(Array(
+      "--input", s"$dir/no-such-input", "--output", s"$dir/out-main",
+      "--metrics", s"$dir/m-main", "--input_kind", "html")))
+    assert(e.getMessage.contains("--input_kind") &&
+      e.getMessage.contains("--input-kind"), e.getMessage)
+    // a trailing flag without its value is rejected the same way
+    intercept[IllegalArgumentException](ExtractJob.main(Array(
+      "--input", s"$dir/no-such-input", "--chunks")))
+    assert(SparkSession.getDefaultSession == before)
+    assert(!new java.io.File(s"$dir/out-main").exists())
   }
 
   test("FastScan reads span struct fields by NAME: reordered struct decodes identically") {
