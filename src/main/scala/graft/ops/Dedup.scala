@@ -8,18 +8,18 @@ import org.apache.spark.sql.functions._
   *
   *  - exact: one shuffle on a 16-byte fingerprint (not the text);
   *  - MinHash+LSH: per-doc signatures computed map-side in one pass (no
-  *    shingle explosion across the shuffle), then one shuffle on
-  *    (band, bandHash) buckets, pair generation inside buckets only;
-  *  - SimHash: one 60-bit signature per doc, candidate pairs via
-  *    (maxHamming+1) band self-joins (complete by pigeonhole for the
-  *    requested radius), verified by exact hamming distance.
+  *    shingle explosion across the shuffle), then (band, bandHash)
+  *    buckets, pair generation inside buckets only;
+  *  - SimHash: one 60-bit signature per doc, candidate pairs from
+  *    (maxHamming+1) bands (complete by pigeonhole for the requested
+  *    radius), verified by exact hamming distance;
+  *  - n-gram Jaccard and winnow overlap: inverted indexes whose postings
+  *    are the blocks.
   *
-  * Cache lifetime: operators that persist an internal index (signatures,
-  * exploded shingles) return LAZY DataFrames that read that cache at
-  * action time, so they cannot unpersist before returning — the same
-  * caller-owned-lifetime contract as CorpusPrep.persistIntermediate
-  * (ContextCleaner GCs the blocks; long-lived sessions running many
-  * operator instances should spark.catalog.clearCache() between them).
+  * Every candidate-pair operator here builds only its (key, id, payload)
+  * index and its verification: pairs come from [[Blocking.selfPairs]],
+  * which owns the purge, the hot-block split, the enumeration and the one
+  * persist of the index (its cache-lifetime contract applies).
   */
 object Dedup {
 
@@ -57,7 +57,7 @@ object Dedup {
   // ---------- MinHash + LSH ----------
 
   /** `maxBucketSize` caps LSH bucket membership: a bucket with more docs
-    * than this is skipped entirely before the self-join (pair count in a
+    * than this is skipped entirely before pairing (pair count in a
     * bucket is quadratic, and at corpus scale a mega-bucket means
     * corpus-wide boilerplate — which belongs to removeBoilerplateLines /
     * exact dedup, not pair enumeration). Int.MaxValue (default) keeps the
@@ -156,50 +156,17 @@ object Dedup {
 
   /** Candidate pairs from LSH buckets (distinct (a,b) with a<b), then
     * verified with exact shingle Jaccard by joining the texts back in.
-    * The self-join is per-bucket; bucket sizes are bounded by real
-    * duplicate-cluster sizes, not corpus size.
+    * Bucket sizes are bounded by real duplicate-cluster sizes, not corpus
+    * size.
     */
   def minHashDuplicatePairs(docs: DataFrame, p: MinHashParams = MinHashParams(),
       sortOutput: Boolean = true): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // persisted: both sides of the bucket self-join read the signatures;
-    // without it every doc is scanned + minhashed twice
-    val allBands = minHashBands(docs, p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // opt-in mega-bucket cut (see MinHashParams.maxBucketSize): one extra
-    // aggregation on the 16-byte band keys, only when a bound is set
-    val bands =
-      if (p.maxBucketSize == Int.MaxValue) allBands.toDF()
-      else {
-        val ok = allBands.toDF().groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("n")).filter(col("n") <= p.maxBucketSize)
-          .select("band", "band_hash")
-        allBands.toDF().join(ok, Seq("band", "band_hash"), "left_semi")
-          // the join puts its keys first; restore BandKey column order for
-          // the positional toDF renames below
-          .select("doc_id", "band", "band_hash")
-      }
-    val l = bands.toDF("a", "band", "h")
-    val r = bands.toDF("b", "band", "h")
-    val candidates = l.join(r, Seq("band", "h"))
-      .filter(col("a") < col("b"))
+    val candidates = Blocking.selfPairs(
+        minHashBands(docs, p).toDF("id", "band", "band_hash"),
+        Seq("band", "band_hash"), p.maxBucketSize)
       .select("a", "b").distinct()
-    val texts = docs.select(col("doc_id").cast("long").as("id"), col("text"))
-    val verified = candidates
-      .join(texts.withColumnRenamed("id", "a").withColumnRenamed("text", "text_a"), "a")
-      .join(texts.withColumnRenamed("id", "b").withColumnRenamed("text", "text_b"), "b")
-      .select(col("a"), col("b"), col("text_a"), col("text_b"))
-      .as[(Long, Long, String, String)]
-      .map { case (a, b, ta, tb) =>
-        val sa = shingles(ta, p.shingleSize)
-        val sb = shingles(tb, p.shingleSize)
-        val inter = sa.intersect(sb).size.toDouble
-        val union = sa.union(sb).size.toDouble
-        (a, b, if (union == 0) 0.0 else inter / union)
-      }.toDF("doc_a", "doc_b", "jaccard")
-    val out = verified.filter(col("jaccard") >= p.jaccardThreshold)
-      .withColumn("jaccard", round(col("jaccard"), 6))
+    val out = jaccardVerified(candidates, docs, docs, p)
+      .toDF("doc_a", "doc_b", "jaccard")
     // global sort is for the deterministic gate dump; consumers that only
     // need the pair SET (duplicateClusters in CorpusPrep) skip it — a
     // total order over all pairs is a needless full-shuffle at scale
@@ -235,42 +202,41 @@ object Dedup {
   def minHashIncrementalPairs(oldDocs: DataFrame, newDocs: DataFrame,
       p: MinHashParams = MinHashParams(),
       index: Option[DataFrame] = None): DataFrame = {
-    val spark = newDocs.sparkSession
+    // the cross-side join is the one two-sided enumeration; only the
+    // standing index is purged (the new batch is bounded by construction)
+    val idx = Blocking.purge(index.getOrElse(minHashBands(oldDocs, p).toDF())
+      .select(col("doc_id").as("a"), col("band"), col("band_hash")),
+      Seq("band", "band_hash"), p.maxBucketSize)
+    val candidates = idx
+      .join(minHashBands(newDocs, p).toDF("b", "band", "band_hash"),
+        Seq("band", "band_hash"))
+      .filter(col("a") =!= col("b"))
+      .select("a", "b").distinct()
+    jaccardVerified(candidates, oldDocs, newDocs, p)
+      .toDF("doc_old", "doc_new", "jaccard")
+      .orderBy(col("doc_old"), col("doc_new"))
+  }
+
+  /** Exact shingle Jaccard of (a, b) candidate pairs, a's text read from
+    * `docsA` and b's from `docsB`; the (a, b, jaccard) rows at or over the
+    * threshold, jaccard rounded to 6 decimals.
+    */
+  private def jaccardVerified(candidates: DataFrame, docsA: DataFrame,
+      docsB: DataFrame, p: MinHashParams): DataFrame = {
+    val spark = candidates.sparkSession
     import spark.implicits._
-    val rawIdx = index.getOrElse(minHashBands(oldDocs, p).toDF())
-      .select("doc_id", "band", "band_hash")
-    val idx =
-      if (p.maxBucketSize == Int.MaxValue) rawIdx
-      else {
-        val ok = rawIdx.groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("n")).filter(col("n") <= p.maxBucketSize)
-          .select("band", "band_hash")
-        rawIdx.join(ok, Seq("band", "band_hash"), "left_semi")
-          .select("doc_id", "band", "band_hash")
-      }
-    val l = idx.toDF("doc_old", "band", "h")
-    val r = minHashBands(newDocs, p).toDF().toDF("doc_new", "band", "h")
-    val candidates = l.join(r, Seq("band", "h"))
-      .filter(col("doc_old") =!= col("doc_new"))
-      .select("doc_old", "doc_new").distinct()
-    val oldTexts = oldDocs
-      .select(col("doc_id").cast("long").as("doc_old"), col("text").as("text_a"))
-    val newTexts = newDocs
-      .select(col("doc_id").cast("long").as("doc_new"), col("text").as("text_b"))
-    val verified = candidates
-      .join(oldTexts, "doc_old").join(newTexts, "doc_new")
-      .select(col("doc_old"), col("doc_new"), col("text_a"), col("text_b"))
+    def texts(docs: DataFrame, side: String) =
+      docs.select(col("doc_id").cast("long").as(side), col("text").as(s"text_$side"))
+    candidates.join(texts(docsA, "a"), "a").join(texts(docsB, "b"), "b")
+      .select(col("a"), col("b"), col("text_a"), col("text_b"))
       .as[(Long, Long, String, String)]
       .map { case (a, b, ta, tb) =>
-        val sa = shingles(ta, p.shingleSize)
-        val sb = shingles(tb, p.shingleSize)
-        val inter = sa.intersect(sb).size.toDouble
+        val (sa, sb) = (shingles(ta, p.shingleSize), shingles(tb, p.shingleSize))
         val union = sa.union(sb).size.toDouble
-        (a, b, if (union == 0) 0.0 else inter / union)
-      }.toDF("doc_old", "doc_new", "jaccard")
-    verified.filter(col("jaccard") >= p.jaccardThreshold)
+        (a, b, if (union == 0) 0.0 else sa.intersect(sb).size.toDouble / union)
+      }.toDF("a", "b", "jaccard")
+      .filter(col("jaccard") >= p.jaccardThreshold)
       .withColumn("jaccard", round(col("jaccard"), 6))
-      .orderBy(col("doc_old"), col("doc_new"))
   }
 
   // ---------- exact n-gram Jaccard ----------
@@ -279,13 +245,14 @@ object Dedup {
     *
     *  1. explode each doc to distinct shingle-hash rows (hash, not the
     *     shingle text, crosses the shuffle);
-    *  2. self-join on the hash and count per (a, b) — the count IS the
-    *     intersection size, so pair texts are never materialized;
+    *  2. pair the docs of each shingle's posting list and count per
+    *     (a, b) — the count IS the intersection size, so pair texts are
+    *     never materialized;
     *  3. jaccard = inter / (|A| + |B| - inter) from per-doc set sizes
     *     (broadcast-joined when small).
     *
     * `maxDocFreq` drops shingles present in more than that many documents
-    * before the self-join — stop-shingles ("of the", boilerplate) are what
+    * before pairing — stop-shingles ("of the", boilerplate) are what
     * makes the inverted-index join quadratic at corpus scale, and a shingle
     * shared by >F docs can only matter for pairs whose similarity is
     * carried by rarer shingles too (standard ppjoin-style frequency cut;
@@ -294,12 +261,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxDocFreq: Int = Int.MaxValue,
       sortOutput: Boolean = true, minKeptShingles: Int = 0): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // persisted: the (id, shingle-hash) index is read 3x (sizes + both
-    // sides of the self-join) and Catalyst does not dedupe identical
-    // DataFrame subtrees — without this the text is re-scanned and
-    // re-shingled per use. 16 bytes/shingle, far smaller than the corpus.
     // The shingle set is built as Column expressions (split/transform/
     // array_distinct — the [[shingles]] semantics exactly: lowercase,
     // whitespace split, n-token windows, whole-text fallback under n
@@ -313,43 +274,21 @@ object Dedup {
       .otherwise(array_distinct(transform(
         sequence(lit(0), size(toksC) - n),
         i => concat_ws(" ", slice(toksC, i + 1, lit(n))))))
-    val exploded = Partitioning.spreadSmall(
+    val index = Partitioning.spreadSmall(
         docs.select(col("doc_id").cast("long").as("id"), col("text")))
       .select(col("id"), explode(shC).as("graft_sh"))
       .select(col("id"), xxhash64(col("graft_sh")).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val filtered =
-      if (maxDocFreq == Int.MaxValue) exploded
-      else {
-        val hot = exploded.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq).select(col("g"))
-        // join on g moves the key to column 0 — restore (id, g) order,
-        // the positional toDF renames below depend on it
-        exploded.join(broadcast(hot), Seq("g"), "left_anti").select("id", "g")
-      }
-    // sizes over the SAME filtered universe as the intersection: with the
+    val inter = Blocking.selfPairs(index, Seq("g"), maxDocFreq)
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
+    // sizes over the SAME purged universe as the intersection: with the
     // frequency cut on, jaccard is the similarity of the KEPT (rare)
     // shingle sets. Deriving sizes from the unfiltered index would divide
     // a kept-only intersection by full-set sizes — two exact duplicates
     // that are mostly boilerplate would then score near 0 and slip the
-    // production near-dup net entirely.
-    val sizes = filtered.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    // pair enumeration via ONE exchange of the (id, g) index (groupBy g
-    // + in-group pair generation) instead of the two-sided self-join —
-    // the join shuffled the same index twice and sort-merged it; the
-    // generated pair volume is identical (ids are distinct per shingle,
-    // sorted so a < b)
-    val inter = filtered.groupBy(col("g"))
-      .agg(collect_list(col("id")).as("ids"))
-      .select(col("ids")).as[Seq[Long]]
-      .flatMap { ids0 =>
-        val ids = ids0.toArray
-        java.util.Arrays.sort(ids)
-        ids.indices.iterator.flatMap(i =>
-          (i + 1 until ids.length).iterator.map(j => (ids(i), ids(j))))
-      }
-      .toDF("a", "b")
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
+    // production near-dup net entirely. (`index` reads from the cache
+    // selfPairs put it in.)
+    val sizes = Blocking.purge(index, Seq("g"), maxDocFreq)
+      .groupBy(col("id")).agg(count(lit(1)).as("n"))
     val pairs = inter
       .join(broadcast(sizes.toDF("a", "na")), "a")
       .join(broadcast(sizes.toDF("b", "nb")), "b")
@@ -372,8 +311,8 @@ object Dedup {
     * entry runs maxDocFreq=Int.MaxValue because its DuckDB oracle is the
     * exact pair set; at corpus scale that setting lets one boilerplate
     * shingle ("terms of service", a license header) shared by millions of
-    * documents turn the inverted-index self-join quadratic. The cut drops
-    * shingles whose doc-frequency exceeds the bound BEFORE the self-join —
+    * documents turn the posting-list pairing quadratic. The cut drops
+    * shingles whose doc-frequency exceeds the bound BEFORE pairing —
     * pairs supported only by such stop-shingles are noise for near-dup
     * purposes (standard ppjoin-style prefix-frequency reasoning), and
     * everything that survives is still verified by exact Jaccard on the
@@ -595,7 +534,7 @@ object Dedup {
     * Scale shape = the inverted-index n-gram join: signatures are bounded
     * (~chars/window per doc), deduped map-side, and only the 8-byte
     * fingerprint + doc id cross the shuffle. `maxDocFreq` cuts
-    * corpus-wide fingerprints (boilerplate) before the self-join, same
+    * corpus-wide fingerprints (boilerplate) before pairing, same
     * rationale as ngramJaccardPairs.
     */
   def winnowOverlapPairs(docs: DataFrame, minShared: Int = 2,
@@ -609,26 +548,7 @@ object Dedup {
         TextAnalysis.winnowSignature(t).distinct.iterator.map(h => (id, h))
       }
       .toDF("id", "f")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept =
-      if (maxDocFreq == Int.MaxValue) sigs
-      else {
-        // the HOT set (df > bound) is the small side — broadcast anti-join
-        // instead of shuffling the whole index against its kept majority
-        // (same shape as ngramJaccardPairs' cut)
-        val hot = sigs.groupBy(col("f")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq).select(col("f"))
-        sigs.join(broadcast(hot), Seq("f"), "left_anti").select("id", "f")
-      }
-    // NOTE (r8): a grouped collect_list pair-generation rewrite (the
-    // ngramJaccardPairs shape) was tried and REVERTED here — winnow
-    // fingerprints of boilerplate-heavy corpora are hot-key skewed, and
-    // one giant fingerprint group generating all its pairs in a single
-    // task lost 5x to the join, whose sort-merge streams the same pairs
-    // through the whole partition's worth of CPUs
-    val l = kept.toDF("a", "f")
-    val r = kept.toDF("b", "f")
-    val pairs = l.join(r, Seq("f")).filter(col("a") < col("b"))
+    val pairs = Blocking.selfPairs(sigs, Seq("f"), maxDocFreq)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
@@ -641,7 +561,7 @@ object Dedup {
     * because its DuckDB oracle is the exact shared-fingerprint pair set,
     * but at corpus scale a single boilerplate fingerprint (a license
     * header, a template footer) present in millions of documents turns
-    * the fingerprint self-join quadratic. Dropping fingerprints with
+    * fingerprint pairing quadratic. Dropping fingerprints with
     * doc-frequency > maxDocFreq before the join removes exactly the pairs
     * whose only evidence is corpus-wide boilerplate — which are not
     * meaningful containment hits — while every surviving pair still
@@ -717,43 +637,27 @@ object Dedup {
     * locality-preserving signature wants exactly it (text SimHash,
     * image aHash — [[Multimodal.imageNearDupByHash]]): radius-derived
     * banding (maxHamming + 1 bands → recall 1.0 by pigeonhole), band
-    * join, exact popcount verify. `sigs` = (id: long, sig: long) rows;
+    * blocks, exact popcount verify. `sigs` = (id: long, sig: long) rows;
     * output (doc_a, doc_b, hamming) with doc_a < doc_b.
-    *
-    * Cache lifetime (ADVICE r7): the 16-byte/row signature frame is
-    * persisted so both sides of the band join read one computation; the
-    * returned frame is lazy, so the operator cannot unpersist it itself
-    * — the object-level caller-owned-lifetime contract applies
-    * (long-lived sessions `spark.catalog.clearCache()` between operator
-    * instances).
     */
   def hammingNearDupPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming < SimHashBits, s"maxHamming=$maxHamming")
-    val spark = sigs.sparkSession
-    import spark.implicits._
     val nBands = maxHamming + 1
     // near-even band widths covering all SimHashBits bits
     val widths = Array.tabulate(nBands)(b =>
       SimHashBits / nBands + (if (b < SimHashBits % nBands) 1 else 0))
     val starts = widths.scanLeft(0)(_ + _)
-    val banded = sigs.select(col("id"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .select(col("id"), col("sig"),
+    val banded = sigs.select(col("id"), col("sig"),
       explode(array((0 until nBands).map(b =>
         struct(lit(b).as("band"),
           shiftright(col("sig"), starts(b))
             .bitwiseAND(lit((1L << widths(b)) - 1)).as("key"))): _*))
         .as("bk"))
       .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
-    val l = banded.toDF("a", "sig_a", "band", "key")
-    val r = banded.toDF("b", "sig_b", "band", "key")
-    l.join(r, Seq("band", "key"))
-      .filter(col("a") < col("b"))
+    Blocking.selfPairs(banded, Seq("band", "key"))
+      .select("a", "b", "sig_a", "sig_b").distinct()
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
-        col("sig_a"), col("sig_b")).distinct()
-      .as[(Long, Long, Long, Long)]
-      .map { case (a, b, sa, sb) => (a, b, hamming(sa, sb).toLong) }
-      .toDF("doc_a", "doc_b", "hamming")
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a"), col("doc_b"))
   }

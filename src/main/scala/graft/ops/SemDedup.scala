@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * Scale design:
   *  - centroid set is tiny and broadcast; assignment is one map-side pass
   *    (zero shuffle);
-  *  - the only shuffle is the within-cluster self-join keyed on
+  *  - the only shuffle is the within-cluster pairing keyed on
   *    cluster_id; per-cluster work is quadratic BY SEMANTICS (that is
   *    SemDeDup), so the scale knob is `nClusters` ~ corpus/target-cluster
   *    -size (the paper runs 50k clusters over 1e9+ embeddings, keeping
-  *    clusters at ~1e4-1e5 rows — each a single executor's task here);
+  *    clusters at ~1e4-1e5 rows — [[Blocking.selfPairs]] splits a cluster
+  *    that large into sub-block cells across tasks);
   *  - cosine verification runs through the codegen'd dot_product/vec_norm
   *    expressions with norms hoisted out of the pair loop — no UDF
   *    encoder round-trip of the arrays.
@@ -220,30 +221,25 @@ object SemDedup {
   }
 
   /** The shared duplicate-marking layer over an assignment
-    * (vec_id, cluster_id, embedding): within-cluster self-join, exact
-    * cosine via the codegen'd dot_product/vec_norm with norms hoisted out
-    * of the pair loop, then min-lower-id aggregation. The assignment is
-    * persisted (both join sides read it); the cache lives until the
-    * ContextCleaner GCs it or the caller clearCache()s — the same
-    * caller-owned-lifetime contract as CorpusPrep.persistIntermediate.
+    * (vec_id, cluster_id, embedding): within-cluster pairs, exact cosine
+    * via the codegen'd dot_product/vec_norm with norms hoisted out of the
+    * pair loop, then min-lower-id aggregation.
     */
   private def markWithinClusterDups(assignment: DataFrame,
       threshold: Double, sortOutput: Boolean): DataFrame = {
     val spark = assignment.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val asn = assignment
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val l = asn.select(col("cluster_id"), col("vec_id").as("a"),
-      col("embedding").as("ea")).withColumn("na", expr("vec_norm(ea)"))
-    val r = asn.select(col("cluster_id"), col("vec_id").as("b"),
-      col("embedding").as("eb")).withColumn("nb", expr("vec_norm(eb)"))
-    val dupOf = l.join(r, Seq("cluster_id")).filter(col("a") < col("b"))
+    val index = assignment.select(col("cluster_id"), col("vec_id").as("id"),
+      col("embedding").as("e"), expr("vec_norm(embedding)").as("n"))
+    val dupOf = Blocking.selfPairs(index, Seq("cluster_id"))
       .withColumn("cosine", round(
-        when(col("na") * col("nb") === 0.0, lit(0.0))
-          .otherwise(expr("dot_product(ea, eb)") / (col("na") * col("nb"))), 6))
+        when(col("n_a") * col("n_b") === 0.0, lit(0.0))
+          .otherwise(expr("dot_product(e_a, e_b)") / (col("n_a") * col("n_b"))), 6))
       .filter(col("cosine") >= threshold)
       .groupBy(col("b").as("vec_id")).agg(min(col("a")).as("dup_of"))
-    val out = asn.join(dupOf, Seq("vec_id"), "left")
+    // `index` reads from the cache selfPairs put it in
+    val out = index.select(col("id").as("vec_id"), col("cluster_id"))
+      .join(dupOf, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster_id"),
         col("dup_of").isNotNull.as("is_dup"), col("dup_of"))
     if (sortOutput) out.orderBy(col("vec_id")) else out

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Cache lifetime: lshTopK/cosineNearDupPairs return LAZY DataFrames
   * whose plan reads an internal persist/broadcast at action time, so
   * those cannot be released before returning — the caller-owned-lifetime
-  * contract of graft.ops.Dedup applies (ivfTopK, which materializes its
+  * contract of graft.ops.Blocking applies (ivfTopK, which materializes its
   * result driver-side, releases its own caches before returning).
   */
 object Similarity extends Serializable {
@@ -398,7 +398,7 @@ object Similarity extends Serializable {
   }
 
   /** Embedding-cosine near-duplicate pairs: multi-table sign-LSH bucket
-    * self-join + exact cosine verification. Approximate (recall < 1 when a
+    * pairs + exact cosine verification. Approximate (recall < 1 when a
     * true pair collides in no table); recall grows with `tables` and is
     * pinned by OpsSpec against the exact formulation. The 100 TB path for
     * genuine near-dups (threshold >= ~0.9, where per-bit collision
@@ -409,7 +409,6 @@ object Similarity extends Serializable {
     val spark = vecs.sparkSession
     import spark.implicits._
     val lp = new LazyPlanes(bits, seed, tables)
-    // persisted: both sides of the bucket self-join read the signatures
     val bucketed = Partitioning.spreadSmall(
         vecs.select(col("vec_id").cast("long"), col("embedding")))
       .as[(Long, Seq[Float])]
@@ -421,15 +420,12 @@ object Similarity extends Serializable {
         }
       }
       .toDF("bucket", "id", "e")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val l = bucketed.toDF("bucket", "a", "ea")
-    val r = bucketed.toDF("bucket", "b", "eb")
     // exact verification via the native cosine_sim expression — stays in
     // whole-stage codegen, no encoder round-trip of the embedding arrays
     graft.functions.GraftFunctions.register(spark)
-    l.join(r, "bucket").filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("ea"), col("eb")).distinct()
-      .withColumn("cosine", round(expr("cosine_sim(ea, eb)"), 6))
+    Blocking.selfPairs(bucketed, Seq("bucket"))
+      .select(col("a"), col("b"), col("e_a"), col("e_b")).distinct()
+      .withColumn("cosine", round(expr("cosine_sim(e_a, e_b)"), 6))
       .filter(col("cosine") >= threshold)
       .select(col("a").as("vec_a"), col("b").as("vec_b"), col("cosine"))
       .orderBy(col("vec_a"), col("vec_b"))

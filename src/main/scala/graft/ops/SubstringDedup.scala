@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *     hash — matches are window-TEXT equality either way (no hash
   *     reaches the output), so the engine hash is free to be the cheap
   *     one at the usual 2^-64 collision odds.
-  *  2. self-join windows on h with doc_a < doc_b. A shared run of L
-  *     tokens produces L-k+1 hits on the SAME alignment diagonal
-  *     (pos_a - pos_b).
+  *  2. pair the windows of each h with doc_a < doc_b
+  *     ([[Blocking.selfPairs]]). A shared run of L tokens produces L-k+1
+  *     hits on the SAME alignment diagonal (pos_a - pos_b).
   *  3. gaps-and-islands per (doc_a, doc_b, diag): consecutive pos_a
   *     values collapse to one island = one maximal run,
   *     run_tokens = hits + k - 1.
@@ -29,16 +29,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale: windows are O(total tokens) fixed-width rows; the only
   * dangerous key is a corpus-hot window (boilerplate) — `maxWindowDocFreq`
-  * drops windows present in more than that many documents before the
-  * self-join, the same cut ngramJaccardPairsAtScale applies (a stop-phrase
-  * window otherwise makes the join quadratic; gate entries run it
+  * drops windows present in more than that many documents before
+  * pairing, the same cut ngramJaccardPairsAtScale applies (a stop-phrase
+  * window otherwise makes the pairing quadratic; gate entries run it
   * unbounded because their oracle is the exact formulation).
   */
 object SubstringDedup {
 
   /** Pipeline parameters (CorpusPrep's substring_dedup stage): production
     * defaults — 50-token runs are the Lee et al. reporting threshold, and
-    * a bounded window doc-frequency keeps the self-join linear.
+    * a bounded window doc-frequency keeps the pairing linear.
     */
   final case class RunParams(k: Int = 8, minRunTokens: Int = 50,
       maxWindowDocFreq: Int = 5000)
@@ -62,26 +62,12 @@ object SubstringDedup {
         transform(sequence(lit(0), col("n") - k),
           i => xxhash64(concat_ws(" ", slice(col("toks"), i + 1, lit(k))))))
         .as(Seq("pos", "h")))
-    val cut = {
-      val kept =
-        if (maxWindowDocFreq == Int.MaxValue) w
-        else {
-          val hot = w.groupBy("h").agg(countDistinct("id").as("df"))
-            .filter(col("df") > maxWindowDocFreq).select("h")
-          w.join(hot, Seq("h"), "left_anti")
-        }
-      // persisted: BOTH sides of the self-join read the window hashes and
-      // Catalyst does not dedupe identical subtrees — without this the
-      // tokenize + md5-per-window pass runs twice (the ngramJaccardPairs
-      // `exploded` convention; 24-byte rows, O(total tokens), and the
-      // same caller-owned cache lifetime documented on Dedup)
-      kept.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val a = cut.select(col("h"), col("id").as("doc_a"), col("pos").as("pa"))
-    val b = cut.select(col("h"), col("id").as("doc_b"), col("pos").as("pb"))
-    val hits = a.join(b, "h").filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("pa"), col("pb"),
-        (col("pa") - col("pb")).as("diag"))
+    // a doc repeating a window holds several rows under its h
+    val hits = Blocking.selfPairs(w, Seq("h"), maxWindowDocFreq,
+        idsRepeat = true)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"),
+        col("pos_a").as("pa"), col("pos_b").as("pb"),
+        (col("pos_a") - col("pos_b")).as("diag"))
     val islands = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
     val runs = hits.withColumn("grp", col("pa") - row_number().over(islands))
       .groupBy("doc_a", "doc_b", "diag", "grp")

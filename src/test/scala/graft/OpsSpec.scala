@@ -390,8 +390,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unique = "rare payload alpha beta gamma delta epsilon"
     // 5 boilerplate-only docs push the boilerplate shingles over the cut;
     // docs 6 and 7 are exact duplicates that are MOSTLY boilerplate
+    // plus a 10^5-member hot gram: unpurged, its block alone would pair
+    // ~5e9 times
     val docs = (0L until 5L).map(i => (i, s"pre$i $boiler")) ++
-      Seq((6L, s"$boiler $unique"), (7L, s"$boiler $unique"))
+      Seq((6L, s"$boiler $unique"), (7L, s"$boiler $unique")) ++
+      (100L until 100100L).map(i => (i, "hot gram here"))
     val pairs = Dedup.ngramJaccardPairsAtScale(docsDf(docs), n = 3,
       threshold = 0.9, maxDocFreq = 4, minKeptShingles = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard")))

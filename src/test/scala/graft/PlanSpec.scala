@@ -358,15 +358,22 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("winnowOverlapPairsAtScale: hot-fingerprint cut is a broadcast anti-join") {
     assume(sfPresent)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(graft.ops.Dedup.winnowOverlapPairsAtScale(docs, maxDocFreq = 100))
-    // the hot (df > bound) set is the small side: broadcast LeftAnti, so
-    // the full fingerprint index is never shuffled against its own
-    // kept-majority just to apply the cut
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
-    // prod config: no global output sort (a range-partitioned exchange is
-    // exactly the needless full shuffle the AtScale wrapper turns off;
-    // local SMJ sorts inside the self-join are fine)
-    assert(!p.contains("rangepartitioning"), p)
+    // every purge goes through the one blocking core: the same plan shape
+    // for the winnow, token-window and n-gram cuts
+    Seq(graft.ops.Dedup.winnowOverlapPairsAtScale(docs, maxDocFreq = 100),
+      graft.ops.SubstringDedup.sharedTokenRuns(docs, maxWindowDocFreq = 100,
+        sortOutput = false),
+      graft.ops.Dedup.ngramJaccardPairsAtScale(docs)).foreach { df =>
+      val p = plan(df)
+      // the hot (df > bound) set is the small side: broadcast LeftAnti, so
+      // the full fingerprint index is never shuffled against its own
+      // kept-majority just to apply the cut
+      assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
+      // prod config: no global output sort (a range-partitioned exchange is
+      // exactly the needless full shuffle the AtScale wrapper turns off;
+      // local SMJ sorts inside the self-join are fine)
+      assert(!p.contains("rangepartitioning"), p)
+    }
   }
 
   test("decontaminate: eval gram set broadcast; training grams never shuffled for the join") {
