@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** THE shared per-query measurement discipline for `graft.Bench` (the
-  * round artifact) and `graft.tools.BenchTool` (`queryall` /
-  * `querytime`), so the committed walls are self-honest without
+  * round artifact) and `graft.tools.BenchTool profile`
+  * (`graft.obs.QueryProfile`), so the committed walls are self-honest without
   * quiet-window re-measure folklore (round-6 verdict: x23 read 15.7 s
   * in the artifact vs 9.58 s re-measured alone — pure GC-neighbor
   * contamination from the contract-quadratic queries that alphabetical

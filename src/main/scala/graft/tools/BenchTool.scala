@@ -2,55 +2,41 @@ package graft.tools
 
 import graft.extract.Extractor
 import graft.fixtures.Fixtures
-import graft.model.DocRow
+import graft.obs.QueryProfile
 import graft.reflow.ExtractConfig
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Bench-methodology diagnostics, one main with subcommands (round-3
-  * verdict item 10 folded the former one-shot probe mains — BenchProbe,
-  * BenchProbe2, KernelScale, SparkScale, ScanScale, DeserScale,
-  * WaveProbe, CodecProbe, FixedCostProbe, LmProbe, QueryTime, PlanDump,
-  * HeavyCorpusGen — into this tool; no capability lost).
+/** Bench-methodology diagnostics, one main with subcommands.
   *
   *   sbt "runMain graft.tools.BenchTool <cmd> [args]"
   *
-  * Commands (all read the graft.Bench corpus under target/bench unless
-  * noted; override levels via PROBE_LEVELS):
+  * Commands (override thread/core levels via PROBE_LEVELS):
   *  - kernel      raw extraction-kernel thread scaling, no Spark
   *  - htmlkernel  web-kernel (extractAllRow) thread scaling, no Spark
-  *  - sparkscale  pure-CPU Spark task scaling (no IO, no encoders)
-  *  - scan        parquet scan scaling, nested-vectorized on/off
-  *  - deser       parquet-read vs encoder-deserialization split
-  *  - stages      stage decomposition: scan/deser/extract/repart/write
-  *  - stages2     FastScan path decomposition with noop sink
-  *  - wave        task-granularity sweep (maxPartitionBytes x salt)
-  *  - codec       shuffle+sink compression codec A/B
-  *  - fixedcost   per-job fixed cost via tiny-corpus runs
-  *  - lmprobe     scorer decisions on probe sentence pairs
-  *  - querytime <q...>  time individual SparkEntry queries (noop sink)
+  *  - profile [name...]  per-query cost profile (graft.obs.QueryProfile)
+  *                on SPARK_GRAFT_SF_DIR: one cold and 3 warm runs of the
+  *                full BenchSurface, or of the named SparkEntry queries
+  *                and production twins; prints one JSON line
   *  - scaleup [src dst factor]  replicate the sf tables key-shifted to a
   *                larger scale factor (default sf0.1 -> target/sf1, 10x)
-  *  - queryall    run the FULL SparkEntry query surface once on
-  *                SPARK_GRAFT_SF_DIR, print one JSON line of per-query
-  *                seconds (the sf1 scale-proof runner)
   *  - plandump  <q...>  formatted physical plans + entry() smoke
-  *  - heavygen  [n]     generate the heavier 10-16-page bench corpus
+  *  - crawlio     WARC extract / WET round-trip scaling
+  *  - crawlloop   composed CrawlLoop scaling over a multi-host web
   *
-  * These are DIAGNOSTICS for reading bench numbers on a shared host —
-  * their findings are summarized in BENCH/BASELINE.md; the driver-facing
-  * measurement itself lives in graft.Bench.
+  * Findings are summarized in BENCH/BASELINE.md; the round's bench
+  * artifact itself is measured by graft.Bench.
   */
 object BenchTool {
 
-  private def session(level: Int, extra: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
+  private def session(level: Int): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$level]")
       .config("spark.sql.shuffle.partitions", level)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "4194304")
       .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -61,35 +47,16 @@ object BenchTool {
   private def levels(default: String): Seq[Int] =
     sys.env.getOrElse("PROBE_LEVELS", default).split(",").map(_.trim.toInt).toSeq
 
-  private def corpus(n: Int): String = s"$repoRoot/target/bench/docsv3_$n"
-
   private def timed(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def docsOf(spark: SparkSession, path: String): Dataset[DocRow] = {
-    import spark.implicits._
-    spark.read.parquet(path).select("doc_id", "spans").as[DocRow]
   }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "kernel" :: _ => kernel()
     case "htmlkernel" :: _ => htmlKernel()
-    case "sparkscale" :: _ => sparkScale()
-    case "scan" :: _ => scan()
-    case "deser" :: _ => deser()
-    case "stages" :: _ => stages()
-    case "stages2" :: _ => stages2()
-    case "wave" :: _ => wave()
-    case "codec" :: _ => codec()
-    case "fixedcost" :: _ => fixedCost()
-    case "lmprobe" :: _ => lmProbe()
-    case "querytime" :: qs => queryTime(qs)
+    case "profile" :: names => profile(names)
     case "scaleup" :: rest => scaleUp(rest)
-    case "queryall" :: _ => queryAll()
-    case "prodscale" :: _ => prodScale()
     case "plandump" :: qs => planDump(qs)
-    case "heavygen" :: rest => heavyGen(rest.headOption.map(_.toInt).getOrElse(40000))
     case "crawlio" :: _ => crawlIo()
     case "crawlloop" :: _ => crawlLoopProbe()
     case other => sys.error(s"unknown BenchTool command: $other (see scaladoc)")
@@ -152,237 +119,38 @@ object BenchTool {
     }
   }
 
-  /** Pure-CPU Spark task scaling: sum of splitmix over ranges. */
-  private def sparkScale(): Unit =
-    levels("8,32,8,32").foreach { level =>
-      val spark = session(level)
-      val sc = spark.sparkContext
-      def run(): Double = timed {
-        sc.parallelize(0 until level * 2, level * 2).map { _ =>
-          var s = 0L; var i = 0L
-          val n = 400000000L / (level * 2)
-          while (i < n) { s ^= graft.ops.Hashing.mix(i); i += 1 }
-          s
-        }.reduce(_ ^ _): Unit
-      }
-      run() // warm
-      println(f"[sparkscale] level=$level wall=${run()}%.2f s")
-      spark.stop()
-    }
+  /** Bounded production twins of the two gate queries that are quadratic
+    * by contract (q30's exact winnow overlap, q15's exact cosine pairs),
+    * profiled by name only.
+    */
+  private val prodTwins: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "winnow_overlap_atScale" -> ((s, dir) => graft.ops.Dedup.winnowOverlapPairsAtScale(
+      s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text")))),
+    "cosine_neardup_lsh_prod" -> ((s, dir) => graft.ops.Similarity.cosineNearDupPairs(
+      s.read.parquet(s"$dir/embeddings.parquet"), threshold = 0.95)))
 
-  /** Parquet scan scaling with the nested vectorized reader on/off. */
-  private def scan(): Unit =
-    for (nested <- Seq("true", "false"); level <- levels("4,16")) {
-      val spark = session(level,
-        Map("spark.sql.parquet.enableNestedColumnVectorizedReader" -> nested))
-      def run(): Double = timed {
-        spark.read.parquet(corpus(40000)).select("doc_id", "spans")
-          .selectExpr("sum(size(spans))", "sum(length(spans[0].text))").collect(): Unit
-      }
-      run()
-      println(f"[scan] nestedVec=$nested level=$level ${Seq(run(), run()).min}%.2f s")
-      spark.stop()
-    }
-
-  /** Parquet-read vs encoder-deserialization split. */
-  private def deser(): Unit =
-    levels("8,32,8,32").foreach { level =>
-      val spark = session(level)
-      def df = spark.read.parquet(corpus(40000)).select("doc_id", "spans")
-      def time(name: String)(f: => Unit): Unit =
-        println(f"[deser] level=$level $name ${timed(f)}%.2f s")
-      time("sql_only_warm") { df.selectExpr("sum(size(spans))").collect() }
-      time("sql_only") { df.selectExpr("sum(size(spans))").collect() }
-      time("sql_texthash") { df.selectExpr("sum(hash(to_json(spans)))").collect() }
-      locally {
-        import spark.implicits._
-        time("encoder_warm") {
-          df.as[DocRow].mapPartitions(_.map(_.spans.length.toLong)).reduce(_ + _): Unit
-        }
-        time("encoder") {
-          df.as[DocRow].mapPartitions(_.map(_.spans.length.toLong)).reduce(_ + _): Unit
-        }
-      }
-      spark.stop()
-    }
-
-  /** Stage decomposition: scan / deser / extract / repartition / write. */
-  private def stages(): Unit =
-    levels("4,16").foreach { level =>
-      val spark = session(level)
-      val docs = docsOf(spark, corpus(40000))
-      println(s"[stages] level=$level scan partitions: ${docs.rdd.getNumPartitions}")
-      def time(name: String)(f: => Unit): Unit =
-        println(f"[stages] level=$level $name: ${timed(f)}%.2f s")
-      val cfg = ExtractConfig()
-      import spark.implicits._
-      time("scan_count")(docs.count())
-      time("scan_count2")(docs.count())
-      time("deser_only") {
-        docs.mapPartitions(_.map(_.spans.length.toLong)).reduce(_ + _): Unit
-      }
-      time("extract_noshuffle") {
-        docs.mapPartitions(_.map(r => Extractor.extractRow(r, cfg).spans.length.toLong))
-          .reduce(_ + _): Unit
-      }
-      time("extract_noshuffle2") {
-        docs.mapPartitions(_.map(r => Extractor.extractRow(r, cfg).spans.length.toLong))
-          .reduce(_ + _): Unit
-      }
-      time("repartition_extract_count") {
-        graft.job.ExtractJob.repartitionSkewAware(docs, level, 20000)
-          .mapPartitions(_.map(r => Extractor.extractRow(r, cfg).spans.length.toLong))
-          .reduce(_ + _): Unit
-      }
-      time("repartition_extract_write") {
-        val out = java.nio.file.Files.createTempDirectory("stages").toString
-        graft.job.ExtractJob.repartitionSkewAware(docs, level, 20000)
-          .mapPartitions(_.map(r => Extractor.extractRow(r, cfg)))
-          .write.mode("overwrite").parquet(out + "/o")
-      }
-      spark.stop()
-    }
-
-  /** FastScan-path decomposition with a noop sink. */
-  private def stages2(): Unit =
-    levels("4,16").foreach { level =>
-      val spark = session(level)
-      def df = spark.read.parquet(corpus(40000)).select("doc_id", "spans")
-      def time(name: String)(f: => Unit): Unit =
-        println(f"[stages2] level=$level $name ${timed(f)}%.2f s")
-      val cfg = ExtractConfig()
-      import spark.implicits._
-      time("a_extract_noop_warm") {
-        graft.job.FastScan.extract(df, cfg).write.mode("overwrite").format("noop").save()
-      }
-      time("a_extract_noop") {
-        graft.job.FastScan.extract(df, cfg).write.mode("overwrite").format("noop").save()
-      }
-      time("b_repart_extract_noop") {
-        val part = graft.job.ExtractJob.repartitionSkewAware(df.as[DocRow], level, 20000)
-        graft.job.FastScan.extract(part.toDF(), cfg).write.mode("overwrite").format("noop").save()
-      }
-      time("c_repart_extract_parquet") {
-        val part = graft.job.ExtractJob.repartitionSkewAware(df.as[DocRow], level, 20000)
-        val out = java.nio.file.Files.createTempDirectory("stages2").toString
-        graft.job.FastScan.extract(part.toDF(), cfg).write.mode("overwrite").parquet(out + "/o")
-      }
-      spark.stop()
-    }
-
-  /** Task-granularity sweep: maxPartitionBytes x repartition salt. */
-  private def wave(): Unit =
-    for (level <- levels("4,16"); mpb <- Seq(4194304, 1048576); salt <- Seq(4, 12)) {
-      val spark = session(level,
-        Map("spark.sql.files.maxPartitionBytes" -> mpb.toString))
-      import spark.implicits._
-      val out = java.nio.file.Files.createTempDirectory("wave").toString
-      def once(tag: String): Double = {
-        val docs = docsOf(spark, corpus(40000))
-        val key = when(size(col("spans")) >= 20000,
-          xxhash64(col("doc_id"), lit("bigdoc-salt"), size(col("spans"))))
-          .otherwise(xxhash64(col("doc_id")))
-        val part = docs.repartition(level * salt, key).as[DocRow]
-        timed {
-          graft.job.FastScan.extract(part.toDF(), ExtractConfig())
-            .write.mode("overwrite").parquet(s"$out/$tag")
-        }
-      }
-      once("warm")
-      println(f"[wave] level=$level mpb=${mpb / 1048576}MB salt=$salt " +
-        f"best=${Seq(once("t1"), once("t2")).min}%.2f s")
-      spark.stop()
-    }
-
-  /** Shuffle+sink compression codec A/B on the full e2e path. */
-  private def codec(): Unit = {
-    val variants = Seq(
-      ("lz4-snappy", "lz4", "snappy"), ("zstd-zstd", "zstd", "zstd"),
-      ("lz4-zstd", "lz4", "zstd"), ("zstd-snappy", "zstd", "snappy"))
-    for ((name, io, pq) <- variants; level <- levels("4,16")) {
-      val spark = session(level, Map(
-        "spark.io.compression.codec" -> io,
-        "spark.sql.parquet.compression.codec" -> pq))
-      val out = java.nio.file.Files.createTempDirectory("codec").toString
-      def once(tag: String): Double = {
-        val part = graft.job.ExtractJob.repartitionSkewAware(
-          docsOf(spark, corpus(40000)), level, 20000)
-        timed {
-          graft.job.FastScan.extract(part.toDF(), ExtractConfig())
-            .write.mode("overwrite").parquet(s"$out/$tag")
-        }
-      }
-      once("warm")
-      val best = Seq(once("t1"), once("t2")).min
-      println(f"[codec] $name level=$level best=$best%.2f s (${40000 / best}%.0f docs/s)")
-      spark.stop()
-    }
-  }
-
-  /** Fixed per-job cost (planning/scheduling/commit) via a tiny corpus. */
-  private def fixedCost(): Unit =
-    for (level <- levels("4,16"); n <- Seq(400, 40000)) {
-      val spark = session(level)
-      import spark.implicits._
-      val path = s"$repoRoot/target/bench/fixed_$n"
-      if (!new java.io.File(path + "/_SUCCESS").exists()) {
-        spark.range(0, n).map { i =>
-          val rng = new Fixtures.Rng(42L + i)
-          val pages = if (i % 1000 == 0) 40 else 1 + rng.nextInt(3)
-          Fixtures.compositeDoc(f"doc-$i%08d", pages, rng, withMedia = i % 5 == 0)
-        }.repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val out = java.nio.file.Files.createTempDirectory("fixedcost").toString
-      def once(tag: String): Double = {
-        val part = graft.job.ExtractJob.repartitionSkewAware(
-          docsOf(spark, path), level, 20000)
-        timed {
-          graft.job.FastScan.extract(part.toDF(), ExtractConfig())
-            .write.mode("overwrite").parquet(s"$out/$tag")
-        }
-      }
-      once("warm"); once("warm2")
-      println(f"[fixedcost] level=$level n=$n best=${(1 to 3).map(i => once(s"t$i")).min}%.2f s")
-      spark.stop()
-    }
-
-  /** Scorer decisions on probe sentence pairs (fixture design aid). */
-  private def lmProbe(): Unit = {
-    import graft.lm.Scorer
-    def probe(a: String, b: String): Unit = {
-      val (sa, sb, sj) = (Scorer.score(a), Scorer.score(b), Scorer.score(a + " " + b))
-      println(f"a=$sa%.4f b=$sb%.4f join=$sj%.4f -> " +
-        s"${if (sj < math.min(sa, sb)) "JOIN" else "SEP"}  [$a | $b]")
-    }
-    probe("die bedeutung der finanziellen", "interessen der union ist gewachsen")
-    probe("die kommission hat einen", "bericht über die anwendung vorgelegt")
-    probe("Seite 3 von 10", "Die Kommission hat einen Bericht vorgelegt")
-    probe("eins zwei drei", "vier fünf sechs")
-    probe("nach ansicht der", "verbände ist eine klärung erforderlich")
-    println("newlineOrNot short a: " + Scorer.newlineOrNot("x", "whatever"))
-    println("newlineOrNot short b: " + Scorer.newlineOrNot("whatever", "x"))
-    println("single_score 1ch: " + Scorer.singleScore("x"))
-    println("score('Seite 1 von 2') = " + Scorer.score("Seite 1 von 2"))
-    println("dehyph drop: " + Scorer.dehyphenParagraph(List(List("der", "finan- "), List("ziellen", "betrag"))))
-    println("dehyph keep: " + Scorer.dehyphenParagraph(List(List("auch", "EU- "), List("Staaten", "wie"))))
-    println("dehyph chain: " + Scorer.dehyphenParagraph(List(List("finan-"), List("ziel-"), List("len", "x"))))
-  }
-
-  /** Time individual SparkEntry queries (noop sink, 2 runs each). */
-  private def queryTime(names: Seq[String]): Unit = {
+  /** Query profile on SPARK_GRAFT_SF_DIR at SPARK_GRAFT_CPUS cores, shaped
+    * like graft.Bench's query section (neutral warm-up first). Every name is
+    * checked before a session is built.
+    */
+  private def profile(names: Seq[String]): Unit = {
+    val known = graft.SparkEntry.queries ++ prodTwins
+    val unknown = names.filterNot(known.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown profile entries: ${unknown.mkString(", ")}; " +
+        s"accepted: ${known.keys.toSeq.sorted.mkString(" ")}")
+    val entries =
+      if (names.isEmpty) graft.BenchSurface.ordered else names.distinct.map(n => n -> known(n))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(32)
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      (1 to 2).foreach { i =>
-        val t = timed {
-          graft.SparkEntry.queries(n)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-        }
-        println(f"[qt] $n run$i $t%.2f s")
-      }
-    }
-    spark.stop()
+    try {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
+      spark.range(0, 100000).selectExpr("id", "cast(id as string) AS s")
+        .write.mode("overwrite").parquet(tmp)
+      spark.read.parquet(tmp).selectExpr("count(distinct s)", "sum(id)").collect()
+      println(QueryProfile.run(spark, sfDir, entries))
+    } finally spark.stop()
   }
 
   /** Key-shifted replication of the driver's sf tables to a larger scale
@@ -459,69 +227,6 @@ object BenchTool {
     spark.stop()
   }
 
-  /** Production-variant scaling probe (r04 item 1 companion): the two
-    * gate queries that are quadratic BY CONTRACT (q30 exact winnow
-    * overlap — the oracle demands exact; q15 exact cosine — the audit
-    * layer) have bounded production twins. This measures THOSE on
-    * SPARK_GRAFT_SF_DIR so the sf1 report can show the production path
-    * scaling linearly where the gate path is contractually quadratic.
-    */
-  private def prodScale(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(32)
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    def run(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t = timed { df.write.mode("overwrite").format("noop").save() }
-      println(f"[prodscale] $name $t%.2f s")
-    }
-    run("winnow_overlap_atScale") {
-      graft.ops.Dedup.winnowOverlapPairsAtScale(docs)
-    }
-    run("cosine_neardup_lsh_prod") {
-      graft.ops.Similarity.cosineNearDupPairs(vecs, threshold = 0.95)
-    }
-    spark.stop()
-  }
-
-  /** Full-surface per-query timing on SPARK_GRAFT_SF_DIR — the same loop
-    * and noop sink as graft.Bench's query section, WITHOUT the scaling
-    * rounds, so a 10x corpus can be timed standalone (r04 item 1). One
-    * JSON line, same "queries" shape as BENCH_r{N}.json.
-    */
-  private def queryAll(): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session(32)
-    spark.sparkContext.setLogLevel("ERROR")
-    locally { // the same neutral warmup as graft.Bench
-      val tmp = java.nio.file.Files.createTempDirectory("graft-warm").toString
-      spark.range(0, 100000).selectExpr("id", "cast(id as string) AS s")
-        .write.mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp).selectExpr("count(distinct s)", "sum(id)").collect()
-    }
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // same self-honest discipline as graft.Bench: heavy-last + settle
-    graft.BenchSurface.ordered.foreach { case (name, fn) =>
-      graft.BenchSurface.settle()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch {
-        case _: Throwable =>
-          try fn(spark, sfDir).count()
-          catch { case _: Throwable => }
-      }
-      results(name) = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[queryall] $name ${results(name)}%.2f s")
-    }
-    spark.stop()
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"${v}%.4f" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f"${results.values.sum}%.4f"},""" +
-      s""""unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-  }
-
   /** Formatted physical plans for the query surface + entry() smoke. */
   private def planDump(args: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -536,20 +241,6 @@ object BenchTool {
       println(s"\n================ $n ================")
       graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
-    spark.stop()
-  }
-
-  /** Generate the heavier 10-16-page bench corpus. */
-  private def heavyGen(n: Int): Unit = {
-    val spark = session(16)
-    import spark.implicits._
-    val path = s"$repoRoot/target/bench/heavy2_$n"
-    spark.range(0, n).map { i =>
-      val rng = new Fixtures.Rng(42L + i)
-      val pages = if (i % 1000 == 0) 80 else 10 + rng.nextInt(7)
-      Fixtures.compositeDoc(f"doc-$i%08d", pages, rng, withMedia = i % 5 == 0)
-    }.repartition(32).write.mode("overwrite").parquet(path)
-    println(s"[heavy] wrote $n docs -> $path")
     spark.stop()
   }
 
