@@ -4,6 +4,7 @@ import graft.extract.Extractor
 import graft.html.HtmlExtract
 import graft.model._
 import graft.reflow.ExtractConfig
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -29,7 +30,14 @@ import scala.util.control.NonFatal
   *    own chunk= directory (the retry unit — idempotent on any crash/retry
   *    interleaving) and then appends a metrics row; on restart, chunks with
   *    a 'done' metrics row are skipped — exact resume, verified by the
-  *    resume-equivalence test (FIXTURES.md §4). With `bucketedInput` the
+  *    resume-equivalence test (FIXTURES.md §4). At most two chunks are in
+  *    flight: chunk k+1 is extracted and written while chunk k's straggler
+  *    tail, commit and metrics append run. Rows are appended on the calling
+  *    thread, in chunk order, each after its own chunk committed (commit
+  *    -> row), so a crash can leave a chunk committed without its row;
+  *    resume re-extracts it into the same Overwrite. After a failure no
+  *    chunk is admitted, the in-flight one is awaited (its row appended if
+  *    it committed) and the first error is rethrown. With `bucketedInput` the
   *    input is laid out as bucket= partition dirs (bucketizeInput), so
   *    chunk selection is partition pruning and a k-chunk run scans the
   *    input ONCE total, not k times. On Iceberg the same flow maps to a
@@ -81,7 +89,12 @@ final case class JobConfig(
       * per-partition metrics; any other value fails the run.
       */
     inputKind: String = "spans",
-    extract: ExtractConfig = ExtractConfig())
+    extract: ExtractConfig = ExtractConfig()) {
+  // checked here so main and run reject them before any Spark work:
+  // 0 chunks would extract nothing and still report success
+  require(chunks >= 1, s"chunks must be >= 1, got $chunks")
+  require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
+}
 
 /** The input-kind table of [[ExtractJob]]: the one place `JobConfig.inputKind`
   * is interpreted. Each kind names the columns its kernel reads (doc_id
@@ -229,7 +242,7 @@ object ExtractJob {
       rows: Iterator[InternalRow], kernel: InputKind.RowKernel,
       acc: CollectionAccumulator[PartitionMetric], runId: String, chunkId: Int)
       extends Iterator[ExtractedDoc] {
-    private val t0 = System.currentTimeMillis()
+    private val t0 = System.nanoTime() // monotonic: a clock step cannot skew wall_ms
     private val lm0 = graft.lm.Scorer.threadLmCallCount // task = one thread
     private val pid = org.apache.spark.TaskContext.getPartitionId()
     private var nDocs, nFailed, spansOut = 0L
@@ -248,7 +261,7 @@ object ExtractJob {
         acc.add(PartitionMetric(
           runId, chunkId, pid, nDocs, nFailed, spansIn, spansOut,
           graft.lm.Scorer.threadLmCallCount - lm0,
-          System.currentTimeMillis() - t0,
+          (System.nanoTime() - t0) / 1000000,
           if (nFailed == 0) "done" else "done_with_failures",
           firstError, System.currentTimeMillis()))
       }
@@ -353,6 +366,11 @@ object ExtractJob {
       .format(format).save(bucketedPath)
   }
 
+  /** Chunks written at once by [[run]]: chunk k's tail, commit and metrics
+    * append overlap chunk k+1's extraction. A third measured no faster.
+    */
+  private val InFlight = 2
+
   /** Run the job end-to-end with checkpointed resume. */
   def run(spark: SparkSession, cfg: JobConfig): Unit = {
     import spark.implicits._
@@ -382,68 +400,106 @@ object ExtractJob {
         s"input has bucket=${over.max} but chunks=${cfg.chunks} — " +
           "a smaller chunk count would silently drop those buckets")
     }
+    // one schema/footer read a run, not one a chunk; none on a no-op rerun
+    lazy val input = spark.read.format(cfg.format).load(cfg.inputPath)
 
-    (0 until cfg.chunks).foreach { chunk =>
-      if (!done.contains(chunk)) {
-        val slice =
-          if (cfg.bucketedInput) {
-            // partition pruning on the bucket= layout: only this chunk's
-            // files are scanned (JobSpec asserts the pushed filter)
-            kind.columns(spark.read.format(cfg.format).load(cfg.inputPath)
-              .filter(col("bucket") === chunk))
-          } else {
-            val docs = kind.columns(spark.read.format(cfg.format).load(cfg.inputPath))
-            if (cfg.chunks == 1) docs
-            else docs.filter(pmod(xxhash64(col("doc_id")), lit(cfg.chunks)) === chunk)
-          }
-        val chunkDir = s"${cfg.outputPath}/chunk=$chunk"
-        // doc-granular resume (J4): keep the docs a crashed attempt already
-        // committed, re-extract only the missing ones (left-anti on doc_id)
-        val docLevel = cfg.resumeGranularity == "doc"
-        val survivors: Option[DataFrame] =
-          if (!docLevel) None
-          else {
-            val p = new org.apache.hadoop.fs.Path(chunkDir)
-            val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (fs.exists(p))
-              scala.util.Try(spark.read.format(cfg.format).load(chunkDir)
-                .select("doc_id")).toOption
-            else None
-          }
-        val sliceTodo = survivors match {
-          case Some(done) =>
-            // broadcast when small; AQE/sort-merge otherwise — doc_id is
-            // the join key on both sides, no wide rows cross the shuffle
-            slice.join(done, Seq("doc_id"), "left_anti")
-          case None => slice
+    /** Extract and commit one chunk; returns its metrics rows. */
+    def writeChunk(chunk: Int): Seq[PartitionMetric] = {
+      val slice =
+        if (cfg.bucketedInput) {
+          // partition pruning on the bucket= layout: only this chunk's
+          // files are scanned (JobSpec asserts the pushed filter)
+          kind.columns(input.filter(col("bucket") === chunk))
+        } else {
+          val docs = kind.columns(input)
+          if (cfg.chunks == 1) docs
+          else docs.filter(pmod(xxhash64(col("doc_id")), lit(cfg.chunks)) === chunk)
         }
-        val part =
-          if (cfg.repartitionInput) {
-            val (sizeCol, threshold) = kind.skew(cfg)
-            repartitionSkewAwareDf(sliceTodo, cfg.numPartitions,
-              threshold, sizeCol)
-          } else sliceTodo // ingest-time layout already distributes: map-only
-        val acc = spark.sparkContext.collectionAccumulator[PartitionMetric](s"metrics-$chunk")
-        val out = extractKind(kind, part, cfg, chunk, acc)
-        // chunk mode: Overwrite — the chunk directory is the retry unit, so
-        // a crashed-after-partial-commit attempt (committer v2, speculative
-        // tasks) is simply replaced on resume — idempotent by construction.
-        // doc mode: Append of exactly the anti-joined remainder.
-        val mode = if (survivors.isDefined) SaveMode.Append else SaveMode.Overwrite
-        out.write.mode(mode).format(cfg.format).save(chunkDir)
-        // chunk committed -> record completion (exact resume boundary);
-        // dedupe on partition id: task retries/speculation can fire an
-        // accumulator update more than once per partition
-        val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
-          .groupBy(_.partition_id).map(_._2.head).toSeq
-        val metricRows =
-          if (rows.nonEmpty) rows
-          else Seq(PartitionMetric(cfg.runId, chunk, -1, 0, 0, 0, 0, 0, 0,
-            "done", "", System.currentTimeMillis()))
-        spark.createDataset(metricRows).write.mode(SaveMode.Append)
-          .format(cfg.format).save(cfg.metricsPath)
+      val chunkDir = s"${cfg.outputPath}/chunk=$chunk"
+      // doc-granular resume (J4): keep the docs a crashed attempt already
+      // committed, re-extract only the missing ones (left-anti on doc_id)
+      val docLevel = cfg.resumeGranularity == "doc"
+      val survivors: Option[DataFrame] =
+        if (!docLevel) None
+        else {
+          val p = new org.apache.hadoop.fs.Path(chunkDir)
+          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (fs.exists(p))
+            scala.util.Try(spark.read.format(cfg.format).load(chunkDir)
+              .select("doc_id")).toOption
+          else None
+        }
+      val sliceTodo = survivors match {
+        case Some(done) =>
+          // broadcast when small; AQE/sort-merge otherwise — doc_id is
+          // the join key on both sides, no wide rows cross the shuffle
+          slice.join(done, Seq("doc_id"), "left_anti")
+        case None => slice
       }
+      val part =
+        if (cfg.repartitionInput) {
+          val (sizeCol, threshold) = kind.skew(cfg)
+          repartitionSkewAwareDf(sliceTodo, cfg.numPartitions,
+            threshold, sizeCol)
+        } else sliceTodo // ingest-time layout already distributes: map-only
+      val acc = spark.sparkContext.collectionAccumulator[PartitionMetric](s"metrics-$chunk")
+      val out = extractKind(kind, part, cfg, chunk, acc)
+      // chunk mode: Overwrite — the chunk directory is the retry unit, so
+      // a crashed-after-partial-commit attempt (committer v2, speculative
+      // tasks) is simply replaced on resume — idempotent by construction.
+      // doc mode: Append of exactly the anti-joined remainder.
+      val mode = if (survivors.isDefined) SaveMode.Append else SaveMode.Overwrite
+      out.write.mode(mode).format(cfg.format).save(chunkDir)
+      // dedupe on partition id: task retries/speculation can fire an
+      // accumulator update more than once per partition
+      val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala
+        .groupBy(_.partition_id).map(_._2.head).toSeq
+      if (rows.nonEmpty) rows
+      else Seq(PartitionMetric(cfg.runId, chunk, -1, 0, 0, 0, 0, 0, 0,
+        "done", "", System.currentTimeMillis()))
     }
+
+    // pool threads are started here, by the caller, so they inherit its
+    // Spark local properties (job group, description, scheduler pool)
+    val pool = Executors.newFixedThreadPool(InFlight, { r =>
+      val t = new Thread(r, s"graft-extract-${cfg.runId}")
+      t.setDaemon(true)
+      t
+    })
+    val inFlight = scala.collection.mutable.Queue.empty[Future[Seq[PartitionMetric]]]
+    var error: Throwable = null
+    // waits for the oldest write, then records its completion: the chunk
+    // committed -> its rows, on this thread, in chunk order (exact resume
+    // boundary); one file per append, so resume reads one file per chunk
+    def settle(): Unit =
+      try spark.createDataset(inFlight.dequeue().get()).coalesce(1)
+        .write.mode(SaveMode.Append).format(cfg.format).save(cfg.metricsPath)
+      catch {
+        case NonFatal(e) =>
+          val cause = e match {
+            case x: ExecutionException => x.getCause
+            case x => x
+          }
+          if (error == null) error = cause else error.addSuppressed(cause)
+      }
+    def failed = inFlight.exists(w => w.isDone && scala.util.Try(w.get()).isFailure)
+    try {
+      val todo = (0 until cfg.chunks).filterNot(done).iterator
+      while (error == null && todo.hasNext && !failed) {
+        if (inFlight.size == InFlight) settle()
+        else {
+          val chunk = todo.next()
+          val write: Callable[Seq[PartitionMetric]] = () => writeChunk(chunk)
+          inFlight += pool.submit(write)
+        }
+      }
+      while (inFlight.nonEmpty) settle()
+    } finally {
+      // also on an interrupt of the caller: no job of the run outlives it
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+    if (error != null) throw error
   }
 
   /** Read the combined output of all chunks. */

@@ -128,6 +128,14 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = ExtractJob.readOutput(spark, cfg1).collect().sortBy(_.doc_id)
     val b = ExtractJob.readOutput(spark, cfg4).collect().sortBy(_.doc_id)
     assert(a.toSeq == b.toSeq)
+    // one metrics file per chunk append (16 partition rows each), and the
+    // rows account for every input document
+    for ((cfg, k) <- Seq(cfg1 -> 1, cfg4 -> 4)) {
+      val files = new java.io.File(cfg.metricsPath).listFiles().map(_.getName)
+      assert(files.count(_.endsWith(".parquet")) == k, files.mkString(", "))
+      assert(spark.read.parquet(cfg.metricsPath)
+        .agg(org.apache.spark.sql.functions.sum("n_docs")).head.getLong(0) == docs.length)
+    }
   }
 
   test("resume-equivalence: kill-after-half + resume == full run") {
@@ -398,6 +406,55 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("bucket"), e.getMessage)
   }
 
+  test("a failing chunk: run rethrows its error, no job left running, resume completes") {
+    import spark.implicits._
+    spark.createDataset(corpus(45)).write.mode("overwrite").parquet(s"$dir/in-fail-raw")
+    ExtractJob.bucketizeInput(spark, s"$dir/in-fail-raw", s"$dir/in-fail", chunks = 3)
+    val cfg = JobConfig(s"$dir/in-fail", s"$dir/out-fail", s"$dir/m-fail",
+      runId = "rf", numPartitions = 2, chunks = 3, bucketedInput = true)
+    val part = new java.io.File(s"$dir/in-fail/bucket=1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val bytes = java.nio.file.Files.readAllBytes(part)
+    java.nio.file.Files.write(part, bytes.take(bytes.length / 2)) // no footer
+    val e = intercept[org.apache.spark.SparkException](ExtractJob.run(spark, cfg))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage))
+    assert(messages.exists(_.contains(part.getFileName.toString)), e)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(!ExtractJob.completedChunks(spark, cfg).contains(1))
+    java.nio.file.Files.write(part, bytes)
+    ExtractJob.run(spark, cfg)
+    assert(ExtractJob.completedChunks(spark, cfg) == Set(0, 1, 2))
+    val clean = cfg.copy(outputPath = s"$dir/out-fail-clean", metricsPath = s"$dir/m-fail-clean")
+    ExtractJob.run(spark, clean)
+    assert(ExtractJob.readOutput(spark, cfg).collect().sortBy(_.doc_id).toSeq ==
+      ExtractJob.readOutput(spark, clean).collect().sortBy(_.doc_id).toSeq)
+  }
+
+  test("every job of a run carries the caller's job group") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    spark.createDataset(corpus(30)).write.mode("overwrite").parquet(s"$dir/in-grp")
+    val cfg = JobConfig(s"$dir/in-grp", s"$dir/out-grp", s"$dir/m-grp",
+      runId = "rg", numPartitions = 2, chunks = 3)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("jobspec-group", "chunks in flight")
+    try ExtractJob.run(spark, cfg)
+    finally sc.clearJobGroup()
+    // deliver every event posted so far (waitUntilEmpty is Spark-internal)
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, Long.box(60000L))
+    sc.removeSparkListener(listener)
+    val seen = scala.jdk.CollectionConverters.CollectionHasAsScala(groups).asScala.toSeq
+    assert(seen.length >= 6 && seen.forall(_ == "jobspec-group"), seen) // 3 writes + 3 appends
+  }
+
   test("oracle diff join: output equals itself; detects a mutation") {
     import spark.implicits._
     val docs = corpus(10)
@@ -432,5 +489,25 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // single scan of the input: exactly one Scan node in the physical plan
     val plan = part.queryExecution.executedPlan.toString
     assert("Scan ".r.findAllIn(plan).length == 1, plan)
+  }
+
+  test("chunks or partitions below 1 fail before any Spark work") {
+    import spark.implicits._
+    spark.createDataset(corpus(3)).write.mode("overwrite").parquet(s"$dir/in-zero")
+    // unbucketed: 0 chunks would loop over nothing and report success
+    for ((chunks, parts) <- Seq((0, 2), (-1, 2), (1, 0))) {
+      val e = intercept[IllegalArgumentException](ExtractJob.run(spark,
+        JobConfig(s"$dir/in-zero", s"$dir/out-zero", s"$dir/m-zero",
+          runId = "rz", numPartitions = parts, chunks = chunks)))
+      assert(e.getMessage.contains(if (chunks < 1) "chunks" else "numPartitions"), e.getMessage)
+    }
+    val before = SparkSession.getDefaultSession
+    val e = intercept[IllegalArgumentException](ExtractJob.main(Array(
+      "--input", s"$dir/in-zero", "--output", s"$dir/out-zero",
+      "--metrics", s"$dir/m-zero", "--chunks", "0")))
+    assert(e.getMessage.contains("chunks"), e.getMessage)
+    assert(SparkSession.getDefaultSession == before)
+    assert(!new java.io.File(s"$dir/out-zero").exists())
+    assert(!new java.io.File(s"$dir/m-zero").exists())
   }
 }
