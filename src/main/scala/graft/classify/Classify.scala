@@ -32,20 +32,25 @@ object Classify {
         (b.t + b.h, b.l + b.w))
     }
 
+  /** One page's element set with what [[superSimiliar]] and the scorer
+    * read of it, each computed at most once per [[removeDuplicates]] call.
+    */
+  private final class PageSet(val elems: Seq[Elem], lang: String) {
+    lazy val text: String = onlyText(elems)
+    lazy val chars: Map[Char, Int] = PyText.charCounts(text)
+    lazy val points: Seq[(Double, Double)] = onlyPoints(elems)
+    lazy val bounds: Geometry.Rect = Geometry.boundsOf(points)
+    lazy val score: Double = Scorer.singleScore(text, lang)
+  }
+
   /** super_similiar (doc_info.py:102-123): char-multiset Jaccard > 0.8 AND
     * bbox overlap > 0.6; needs >= 4 points (>= 1 element) on each side.
     */
-  def superSimiliar(
-      es1: Seq[Elem],
-      es2: Seq[Elem],
-      simFactor: Double = 0.8,
-      simBox: Double = 0.6): Boolean = {
-    val points1 = onlyPoints(es1)
-    val points2 = onlyPoints(es2)
-    if (math.min(points1.length, points2.length) < 4) return false
-    val jSim = PyText.jaccardChars(onlyText(es1), onlyText(es2))
-    val bSim = Geometry.simBbox(points1, points2)
-    jSim > simFactor && bSim > simBox
+  private def superSimiliar(s1: PageSet, s2: PageSet): Boolean = {
+    if (math.min(s1.points.length, s2.points.length) < 4) return false
+    val jSim = PyText.jaccardCounts(s1.chars, s2.chars)
+    val bSim = Geometry.simRect(s1.bounds, s2.bounds)
+    jSim > 0.8 && bSim > 0.6
   }
 
   /** remove_duplicates (doc_info.py:126-152) — the header/footer
@@ -59,16 +64,17 @@ object Classify {
   def removeDuplicates(pageItems: Vector[Seq[Elem]],
       lang: String = "multi"): Vector[Seq[Elem]] = {
     if (pageItems.isEmpty) return pageItems
-    val results = scala.collection.mutable.ArrayBuffer[Seq[Elem]](pageItems.head)
+    val empty = new PageSet(Seq.empty, lang)
+    val results = scala.collection.mutable.ArrayBuffer(new PageSet(pageItems.head, lang))
     pageItems.tail.foreach { elements =>
+      val page = new PageSet(elements, lang)
       var cool = true
       var i = 0
       var break = false
       while (i < results.length && !break) {
         val r = results(i)
-        if (r.nonEmpty && superSimiliar(r, elements)) {
-          if (Scorer.singleScore(onlyText(r), lang) <=
-            Scorer.singleScore(onlyText(elements), lang)) {
+        if (r.elems.nonEmpty && superSimiliar(r, page)) {
+          if (r.score <= page.score) {
             // previous got a better/equal score -> skip this one
             cool = false
             break = true
@@ -82,9 +88,9 @@ object Classify {
         }
         i += 1
       }
-      if (cool) results.append(elements) else results.append(Seq.empty)
+      results.append(if (cool) page else empty)
     }
-    results.toVector
+    results.iterator.map(_.elems).toVector
   }
 
   /** remove_page_number_header_footer (doc_info.py:155-171) — INTENDED

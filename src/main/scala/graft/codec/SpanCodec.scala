@@ -1,7 +1,6 @@
 package graft.codec
 
 import graft.model._
-import scala.collection.mutable.ArrayBuffer
 
 /** Codec between the flat `spans` column (FIXTURES.md §2) and the
   * per-document tree. The span stream is a pre-order serialization of the
@@ -19,11 +18,21 @@ import scala.collection.mutable.ArrayBuffer
   *  - `image` / `drawing`  media_ref=<media uri>   (dropped in fast mode,
   *    mirroring Parsr's fast config, parsr_wrapper.py:44-49)
   *  - `table`  text=<csv>                media_ref=<table id>
+  *
+  * Decoding reads the kinds, the `box=`/`size=`/`level=` texts and the
+  * word refs from their UTF-8 bytes ([[SpanField]], [[SpanAttrs]]), for
+  * both decoders through one [[feed]]. A box or size number of the form `-?digits(.digits)?` with at
+  * most 15 digits is computed exactly as m / 10^k, bit-identical to
+  * `toDouble`; any other value falls back to the String parse
+  * ([[parseBox]], `toDouble`), keeping its results and exceptions. A null
+  * `text`/`media_ref` reads as "", a null `kind` skips the span.
   */
 object SpanCodec {
 
-  private val EmptyBox = Box(0, 0, 0, 0)
-
+  /** The String parse of a `box=` value: `split(",")` and `toDouble` per
+    * field. [[SpanAttrs]] falls back to it for any value outside its exact
+    * fast path, so both keep one result, exception class and message.
+    */
   def parseBox(s: String): Box = {
     val p = s.split(",")
     Box(p(0).toDouble, p(1).toDouble, p(2).toDouble, p(3).toDouble)
@@ -41,7 +50,9 @@ object SpanCodec {
 
   def fmtBox(b: Box): String = s"${fmt(b.l)},${fmt(b.t)},${fmt(b.w)},${fmt(b.h)}"
 
-  /** Decode a span stream into the document tree.
+  /** Decode a span stream into the document tree: the typed decoder.
+    * Each span's Strings are encoded to UTF-8 and go through [[feed]], the
+    * one span reader [[graft.job.FastScan]] also uses.
     *
     * @param fast drop media (image/drawing) spans, the analog of Parsr fast
     *             mode module pruning (parsr_wrapper.py:44-49) + the
@@ -63,24 +74,44 @@ object SpanCodec {
     }
     val sorted = if (isSorted) spans else spans.sortBy(_.offset)
     val b = new TreeBuilder(fast)
-    sorted.foreach(sp => feed(b, sp.kind, sp.text, sp.media_ref, sp.offset))
+    val kind, text, ref = new SpanField
+    sorted.foreach(sp =>
+      feed(b, kind.set(sp.kind), text.set(sp.text), ref.set(sp.media_ref), sp.offset))
     b.result()
   }
 
-  def feed(b: TreeBuilder, kind: String, text: String, ref: String, offset: Int): Unit =
-    kind match {
-      case "word" => b.onWord(text, ref)
-      case "line" => b.onLine(text, ref)
-      case "para" => b.onElem(isHeading = false, text, ref)
-      case "heading" => b.onElem(isHeading = true, text, ref)
-      case "page" => b.onPage()
-      case "hdr" => b.onHdr()
-      case "ftr" => b.onFtr()
-      case "font" => b.onFont(text, ref)
-      case "image" | "drawing" => b.onMedia(kind, ref, offset)
-      case "table" => b.onTable(text, ref)
-      case _ => // unknown kinds ignored (forward compat)
-    }
+  private val KWord = "word".getBytes("US-ASCII")
+  private val KLine = "line".getBytes("US-ASCII")
+  private val KPara = "para".getBytes("US-ASCII")
+  private val KHeading = "heading".getBytes("US-ASCII")
+  private val KPage = "page".getBytes("US-ASCII")
+  private val KHdr = "hdr".getBytes("US-ASCII")
+  private val KFtr = "ftr".getBytes("US-ASCII")
+  private val KFont = "font".getBytes("US-ASCII")
+  private val KImage = "image".getBytes("US-ASCII")
+  private val KDrawing = "drawing".getBytes("US-ASCII")
+  private val KTable = "table".getBytes("US-ASCII")
+
+  /** Feed one span to `b`, the one span reader of both decoders. A null
+    * `kind` skips the span; a null `text` or `ref` reads as "".
+    */
+  def feed(b: TreeBuilder, kind: SpanField, text: SpanField, ref: SpanField,
+      offset: Int): Unit = {
+    if (kind.isNull) return
+    // ordered by expected frequency: word >> line >> rest
+    if (kind.is(KWord)) b.onWord(text, ref)
+    else if (kind.is(KLine)) b.onLine(text, ref)
+    else if (kind.is(KPara)) b.onElem(isHeading = false, text, ref)
+    else if (kind.is(KPage)) b.onPage()
+    else if (kind.is(KHdr)) b.onHdr()
+    else if (kind.is(KFtr)) b.onFtr()
+    else if (kind.is(KFont)) b.onFont(text, ref)
+    else if (kind.is(KHeading)) b.onElem(isHeading = true, text, ref)
+    else if (kind.is(KImage)) b.onMedia("image", ref, offset)
+    else if (kind.is(KDrawing)) b.onMedia("drawing", ref, offset)
+    else if (kind.is(KTable)) b.onTable(text, ref)
+    // unknown kinds ignored (forward compat)
+  }
 
   /** Encode a tree back to a span stream (fixture builder + round-trip
     * property tests).

@@ -5,9 +5,12 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Streaming document-tree builder — the shared state machine behind both
   * span decoders (object Span stream and the InternalRow fast path,
-  * graft.job.FastScan). Spans MUST be fed in offset order.
+  * graft.job.FastScan), fed through [[SpanCodec.feed]]. Spans MUST be fed
+  * in offset order. Span attributes are read from the UTF-8 bytes by one
+  * [[SpanAttrs]] per document; no [[SpanField]] is kept past its call.
   */
 final class TreeBuilder(fast: Boolean) {
+  private val attrs = new SpanAttrs
   private val fonts = Vector.newBuilder[FontDef]
   private val pages = Vector.newBuilder[Page]
 
@@ -48,17 +51,17 @@ final class TreeBuilder(fast: Boolean) {
   private def ensurePage(): Unit =
     if (curPage == null) curPage = ArrayBuffer.empty[Elem]
 
-  def onFont(text: String, ref: String): Unit =
-    fonts += FontDef(ref, TreeBuilder.kv(text, "size").fold(0.0)(_.toDouble))
+  def onFont(text: SpanField, ref: SpanField): Unit =
+    fonts += FontDef(ref.toString, attrs.size(text))
 
   def onPage(): Unit = { flushPage(); curPage = ArrayBuffer.empty[Elem] }
 
-  def onElem(isHeading: Boolean, text: String, ref: String): Unit = {
+  def onElem(isHeading: Boolean, text: SpanField, ref: SpanField): Unit = {
     flushElem(); ensurePage()
-    elemId = ref
+    elemId = ref.toString
     elemTyp = if (isHeading) "heading" else "paragraph"
-    elemBox = TreeBuilder.kv(text, "box").fold(TreeBuilder.EmptyBox)(SpanCodec.parseBox)
-    elemLevel = TreeBuilder.kv(text, "level").fold(0)(_.toInt)
+    elemBox = attrs.box(text)
+    elemLevel = attrs.level(text)
     elemHdr = false; elemFtr = false
     elemLines = ArrayBuffer.empty[Line]
   }
@@ -66,7 +69,9 @@ final class TreeBuilder(fast: Boolean) {
   def onHdr(): Unit = if (elemId != null) elemHdr = true
   def onFtr(): Unit = if (elemId != null) elemFtr = true
 
-  def onLine(text: String, ref: String): Unit = {
+  def onLine(text: SpanField, ref: SpanField): Unit = openLine(ref.toString, attrs.box(text))
+
+  private def openLine(id: String, box: Box): Unit = {
     flushLine()
     if (elemLines == null) { // tolerate stray line outside element
       ensurePage()
@@ -76,12 +81,12 @@ final class TreeBuilder(fast: Boolean) {
       elemHdr = false; elemFtr = false
       elemLines = ArrayBuffer.empty[Line]
     }
-    lineId = ref
-    lineBox = TreeBuilder.kv(text, "box").fold(TreeBuilder.EmptyBox)(SpanCodec.parseBox)
+    lineId = id
+    lineBox = box
     lineWords = ArrayBuffer.empty[Word]
   }
 
-  def onWord(text: String, ref: String): Unit = {
+  def onWord(text: SpanField, ref: SpanField): Unit = {
     if (lineWords == null) {
       // a word with no open line is a malformed stream: synthesize the
       // line (the same tolerance onLine applies to a stray line outside
@@ -89,14 +94,14 @@ final class TreeBuilder(fast: Boolean) {
       // silent data loss is the one unacceptable failure mode. Unique id
       // per synthesized line: line ids become span refs on re-encode.
       autoId += 1
-      onLine("", "auto-word-line-" + autoId)
+      openLine("auto-word-line-" + autoId, TreeBuilder.EmptyBox)
     }
-    val font = TreeBuilder.kv(ref, "font").getOrElse("")
-    val box = TreeBuilder.kv(ref, "box").fold(TreeBuilder.EmptyBox)(SpanCodec.parseBox)
-    lineWords += Word(text, font, box)
+    val font = attrs.font(ref)
+    val box = attrs.box(ref)
+    lineWords += Word(text.toString, font, box)
   }
 
-  def onMedia(kind: String, ref: String, offset: Int): Unit = {
+  def onMedia(kind: String, ref: SpanField, offset: Int): Unit = {
     // fast mode drops the media element WITHOUT flushing the open element.
     // For codec-produced streams the two modes are equivalent anyway
     // (SpanCodec.encode only emits media at element boundaries, always
@@ -108,14 +113,15 @@ final class TreeBuilder(fast: Boolean) {
     if (!fast) {
       flushElem(); ensurePage()
       curPage += Elem("media-" + offset, kind, TreeBuilder.EmptyBox, 0,
-        isHeader = false, isFooter = false, Vector.empty, ref, "")
+        isHeader = false, isFooter = false, Vector.empty, ref.toString, "")
     }
   }
 
-  def onTable(text: String, ref: String): Unit = {
+  def onTable(text: SpanField, ref: SpanField): Unit = {
     flushElem(); ensurePage()
-    curPage += Elem(ref, "table", TreeBuilder.EmptyBox, 0,
-      isHeader = false, isFooter = false, Vector.empty, ref, text)
+    val id = ref.toString
+    curPage += Elem(id, "table", TreeBuilder.EmptyBox, 0,
+      isHeader = false, isFooter = false, Vector.empty, id, text.toString)
   }
 
   def result(): DocTree = {
@@ -126,22 +132,4 @@ final class TreeBuilder(fast: Boolean) {
 
 object TreeBuilder {
   val EmptyBox: Box = Box(0, 0, 0, 0)
-
-  /** extract `key=value` from a `;`-separated kv string without regex or
-    * split allocation.
-    */
-  def kv(s: String, key: String): Option[String] = {
-    var from = 0
-    while (from <= s.length) {
-      val end0 = s.indexOf(';', from)
-      val end = if (end0 < 0) s.length else end0
-      val eq = s.indexOf('=', from)
-      if (eq >= from && eq < end &&
-        eq - from == key.length && s.regionMatches(from, key, 0, key.length))
-        return Some(s.substring(eq + 1, end))
-      if (end0 < 0) return None
-      from = end + 1
-    }
-    None
-  }
 }

@@ -1,12 +1,12 @@
 package graft.job
 
-import graft.codec.{SpanCodec, TreeBuilder}
+import graft.codec.{SpanCodec, SpanField, TreeBuilder}
 import graft.model._
 import graft.reflow.ExtractConfig
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Tungsten-direct span decode for the `spans` kind of [[ExtractJob]]'s
   * one extraction loop ([[InputKind.Spans]]): builds the per-document tree
@@ -14,28 +14,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why: the generic `as[DocRow]` deserializer materializes 4 Strings + a
   * Span + a Seq cell per span (~10M objects per 40k docs) and measurably
-  * saturates around 8 threads on allocation; this path allocates only the
-  * Strings the kernel actually consumes and compares span kinds against
-  * cached UTF8String constants without decoding them. Measured ~2x less
-  * deser garbage; the kernel itself scales near-linearly (see
-  * `tools/BenchTool kernel`).
+  * saturates around 8 threads on allocation. This path points one
+  * [[SpanField]] per struct field at the row's UTF-8 bytes, span after
+  * span, and hands them to [[SpanCodec.feed]], the span reader the typed
+  * decoder also uses: kinds are compared as bytes, and the `box=` texts
+  * and `font=…;box=…` word refs are parsed from the bytes
+  * ([[graft.codec.SpanAttrs]]). A number `-?digits(.digits)?` of at most
+  * 15 digits is computed exactly as m / 10^k, bit-identical to
+  * `toDouble`; any other value falls back to the String parse, so results
+  * and exceptions match it. Font ids are interned per document; only word
+  * texts and element/line ids become Strings.
   *
   * Safety: UnsafeRows from `queryExecution.toRdd` are reused by the
-  * scanner — each row is fully consumed (tree built) before `next()`.
+  * scanner — each row is fully consumed (tree built) before `next()`, and
+  * the interned font ids are copies.
   */
 object FastScan {
-
-  private val KWord = UTF8String.fromString("word")
-  private val KLine = UTF8String.fromString("line")
-  private val KPara = UTF8String.fromString("para")
-  private val KHeading = UTF8String.fromString("heading")
-  private val KPage = UTF8String.fromString("page")
-  private val KHdr = UTF8String.fromString("hdr")
-  private val KFtr = UTF8String.fromString("ftr")
-  private val KFont = UTF8String.fromString("font")
-  private val KImage = UTF8String.fromString("image")
-  private val KDrawing = UTF8String.fromString("drawing")
-  private val KTable = UTF8String.fromString("table")
 
   /** Struct-field positions of the spans element, resolved BY NAME from
     * the actual schema: the Tungsten path reads by ordinal, and a parquet
@@ -60,56 +54,54 @@ object FastScan {
     }
   }
 
-  /** Decode one spans ArrayData (struct fields located by `ord`, in
-    * offset order as written) into a DocTree.
+  /** Decode one spans ArrayData (struct fields located by `ord`) into a
+    * DocTree, in offset order; a null offset reads as the span's index.
     */
   def decodeSpans(arr: ArrayData, fast: Boolean,
       ord: SpanOrdinals = SpanOrdinals.Default): DocTree = {
     val n = arr.numElements()
+    def offset(s: InternalRow, i: Int): Int =
+      if (s.isNullAt(ord.offset)) i else s.getInt(ord.offset)
     val b = new TreeBuilder(fast)
+    val f = new Fields(ord)
     var unsorted = false
     var prev = Int.MinValue
     var i = 0
     while (i < n && !unsorted) {
       val s = arr.getStruct(i, ord.arity)
-      val off = if (s.isNullAt(ord.offset)) i else s.getInt(ord.offset)
+      val off = offset(s, i)
       if (off < prev) unsorted = true
       else {
         prev = off
-        feed(b, s, ord)
+        f.feed(b, s, off)
         i += 1
       }
     }
-    if (unsorted) {
-      // rare path: materialize + delegate to the sorting decoder
-      val spans = (0 until n).map { j =>
-        val s = arr.getStruct(j, ord.arity)
-        Span(str(s, ord.kind), str(s, ord.text), str(s, ord.mediaRef),
-          if (s.isNullAt(ord.offset)) j else s.getInt(ord.offset))
-      }
-      SpanCodec.decode(spans, fast)
-    } else b.result()
+    if (!unsorted) b.result()
+    else {
+      // rare path: restart in (stable) offset order
+      val sorted = new TreeBuilder(fast)
+      (0 until n).map(j => (offset(arr.getStruct(j, ord.arity), j), j)).sortBy(_._1)
+        .foreach { case (off, j) => f.feed(sorted, arr.getStruct(j, ord.arity), off) }
+      sorted.result()
+    }
   }
 
-  private def str(s: InternalRow, ord: Int): String =
-    if (s.isNullAt(ord)) "" else s.getUTF8String(ord).toString
+  /** The kind, text and media_ref fields of the span being fed. */
+  private final class Fields(o: SpanOrdinals) {
+    private val kind, text, ref = new SpanField
 
-  private def feed(b: TreeBuilder, s: InternalRow, o: SpanOrdinals): Unit = {
-    val kind = if (s.isNullAt(o.kind)) null else s.getUTF8String(o.kind)
-    if (kind == null) return
-    // ordered by expected frequency: word >> line >> rest
-    if (kind.equals(KWord)) b.onWord(str(s, o.text), str(s, o.mediaRef))
-    else if (kind.equals(KLine)) b.onLine(str(s, o.text), str(s, o.mediaRef))
-    else if (kind.equals(KPara)) b.onElem(isHeading = false, str(s, o.text), str(s, o.mediaRef))
-    else if (kind.equals(KPage)) b.onPage()
-    else if (kind.equals(KHdr)) b.onHdr()
-    else if (kind.equals(KFtr)) b.onFtr()
-    else if (kind.equals(KFont)) b.onFont(str(s, o.text), str(s, o.mediaRef))
-    else if (kind.equals(KHeading)) b.onElem(isHeading = true, str(s, o.text), str(s, o.mediaRef))
-    else if (kind.equals(KImage)) b.onMedia("image", str(s, o.mediaRef), if (s.isNullAt(o.offset)) 0 else s.getInt(o.offset))
-    else if (kind.equals(KDrawing)) b.onMedia("drawing", str(s, o.mediaRef), if (s.isNullAt(o.offset)) 0 else s.getInt(o.offset))
-    else if (kind.equals(KTable)) b.onTable(str(s, o.text), str(s, o.mediaRef))
-    // unknown kinds ignored (forward compat)
+    def feed(b: TreeBuilder, s: InternalRow, off: Int): Unit =
+      SpanCodec.feed(b, set(kind, s, o.kind), set(text, s, o.text), set(ref, s, o.mediaRef), off)
+
+    private def set(f: SpanField, s: InternalRow, ord: Int): SpanField =
+      if (s.isNullAt(ord)) f.setNull()
+      else s match {
+        case u: UnsafeRow => // UnsafeRow.getUTF8String's layout, without the object
+          val offsetAndSize = u.getLong(ord)
+          f.point(u.getBaseObject, u.getBaseOffset + (offsetAndSize >> 32), offsetAndSize.toInt)
+        case _ => f.set(s.getUTF8String(ord))
+      }
   }
 
   /** [[ExtractJob.extractChunk]] over a (doc_id, spans) DataFrame with the

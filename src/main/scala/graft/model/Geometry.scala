@@ -30,9 +30,11 @@ object Geometry {
   }
 
   /** sim_bbox (geometry.py:13-17): shared area / max(area1, area2). */
-  def simBbox(p1: Seq[(Double, Double)], p2: Seq[(Double, Double)]): Double = {
-    val b1 = boundsOf(p1)
-    val b2 = boundsOf(p2)
+  def simBbox(p1: Seq[(Double, Double)], p2: Seq[(Double, Double)]): Double =
+    simRect(boundsOf(p1), boundsOf(p2))
+
+  /** [[simBbox]] over the two point sets' bounds. */
+  def simRect(b1: Rect, b2: Rect): Double = {
     val shared = intersectionArea(b1, b2)
     val denom = math.max(b1.area, b2.area)
     if (denom == 0.0) {

@@ -557,10 +557,15 @@ object PyText {
     * textdistance's default `jaccard` with qval=1 (doc_info.py:8, 118):
     * |A ∩ B| / |A ∪ B| with min/max multiplicities.
     */
-  def jaccardChars(a: String, b: String): Double = {
-    if (a.isEmpty && b.isEmpty) return 1.0
-    val ca = a.groupMapReduce(identity)(_ => 1)(_ + _)
-    val cb = b.groupMapReduce(identity)(_ => 1)(_ + _)
+  def jaccardChars(a: String, b: String): Double =
+    jaccardCounts(charCounts(a), charCounts(b))
+
+  /** The char multiset of `s`, as [[jaccardCounts]] reads it. */
+  def charCounts(s: String): Map[Char, Int] = s.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** [[jaccardChars]] over two [[charCounts]]. */
+  def jaccardCounts(ca: Map[Char, Int], cb: Map[Char, Int]): Double = {
+    if (ca.isEmpty && cb.isEmpty) return 1.0
     val keys = ca.keySet ++ cb.keySet
     var inter = 0L
     var union = 0L

@@ -13,17 +13,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class FuzzSpec extends AnyFunSuite {
 
   private val kinds = Vector("word", "line", "para", "heading", "page",
-    "hdr", "ftr", "font", "image", "drawing", "table", "garbage", "")
+    "hdr", "ftr", "font", "image", "drawing", "table", "garbage", "", null)
 
   private val texts = Vector("", "a", "box=1,2,3,4", "box=", "font=f1",
     "size=12", "size=x", "k=v;k2", ";;;", "word-", "-", "\n", " ",
     "box=0.0,0.0,0.0,0.0", "font=f1;box=1.0,2.0,3.0,4.0",
-    "äüß", "box=NaN,1,2,3", "level=9", "level=x")
+    "äüß", "box=NaN,1,2,3", "level=9", "level=x", null)
 
   private def randomSpans(rng: Fixtures.Rng, n: Int): Seq[Span] =
     (0 until n).map { i =>
       Span(kinds(rng.nextInt(kinds.length)), texts(rng.nextInt(texts.length)),
-        if (rng.nextInt(3) == 0) "" else s"ref-${rng.nextInt(5)}", i)
+        rng.nextInt(6) match {
+          case 0 | 1 => ""
+          case 2 => null
+          case _ => s"ref-${rng.nextInt(5)}"
+        }, i)
     }
 
   test("random span garbage: ExtractedDoc or ExtractionException, deterministic") {
@@ -128,7 +132,13 @@ class FuzzSpec extends AnyFunSuite {
       val cfg = ExtractConfig()
       val rows: Seq[DocRow] = (0L until 2000L).map { seed =>
         val rng = new Fixtures.Rng(0xFA57 + seed)
-        DocRow(s"fz-$seed", randomSpans(rng, 1 + rng.nextInt(40)))
+        val spans = randomSpans(rng, 1 + rng.nextInt(40))
+        // every fifth stream arrives shuffled, with duplicate offsets:
+        // both decoders must restore the same (stable) offset order
+        val perm = new scala.util.Random(seed).shuffle(spans.indices.toVector)
+        DocRow(s"fz-$seed",
+          if (seed % 5 == 0) spans.zip(perm).map { case (sp, p) => sp.copy(offset = p / 2) }
+          else spans)
       }
       val viaFast = graft.job.FastScan
         .extract(spark.createDataset(rows).toDF(), cfg)
