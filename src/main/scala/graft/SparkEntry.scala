@@ -5,6 +5,7 @@ import graft.fixtures.Fixtures
 import graft.model._
 import graft.ops.{Clustering, Corpus, Dedup, Dsir, Multimodal, Pii, SemDedup, Similarity, SubstringDedup, TextAnalysis, Web}
 import graft.reflow.ExtractConfig
+import graft.streaming.StreamingExtract
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,13 +44,8 @@ object SparkEntry {
     s.createDataset(Fixtures.corpus(n, seed = 42L, tailPermille = 0))
   }
 
-  def extracted(s: SparkSession, cfg: ExtractConfig = ExtractConfig()): DataFrame = {
-    import s.implicits._
-    docsCorpus(s).mapPartitions(_.flatMap { row =>
-      try Some(Extractor.extractRow(row, cfg))
-      catch { case _: ExtractionException => None }
-    }).toDF()
-  }
+  def extracted(s: SparkSession, cfg: ExtractConfig = ExtractConfig()): DataFrame =
+    StreamingExtract.transform(docsCorpus(s).toDF(), cfg).toDF()
 
   private def explodedSpans(df: DataFrame): DataFrame =
     df.select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "s")))
@@ -1071,11 +1067,8 @@ object SparkEntry {
       val sp = s
       import sp.implicits._
       val cfg = ExtractConfig(pageNumberTypeBugCompat = false)
-      val docs = sp.createDataset(Fixtures.footerCorpus(40))
-      val out = docs.mapPartitions(_.flatMap { row =>
-        try Some(Extractor.extractRow(row, cfg))
-        catch { case _: ExtractionException => None }
-      }).toDF()
+      val out = StreamingExtract.transform(
+        sp.createDataset(Fixtures.footerCorpus(40)).toDF(), cfg).toDF()
       explodedSpans(out).filter(col("kind") === "footer")
         .select(col("doc_id"), col("text"), col("offset"))
         .orderBy(col("doc_id"), col("offset"))
@@ -1162,11 +1155,8 @@ object SparkEntry {
       // PDF face: leveled heading spans (media_ref "hN", the HTML
       // convention now carried by emitSpans) render as ##-leveled
       // markdown through the SAME renderer
-      val pdfDocs = sp.createDataset(graft.fixtures.Fixtures.headingCorpus(8))
-        .mapPartitions(_.flatMap { row =>
-          try Some(Extractor.extractRow(row, ExtractConfig()))
-          catch { case _: ExtractionException => None }
-        }).toDF()
+      val pdfDocs = StreamingExtract.transform(
+        sp.createDataset(graft.fixtures.Fixtures.headingCorpus(8)).toDF()).toDF()
       htmlMd.unionByName(graft.assemble.SpanMarkdown.renderDocs(pdfDocs))
         .orderBy(col("doc_id"))
     }),
@@ -1744,10 +1734,8 @@ object SparkEntry {
       val bad = sp.createDataset(Seq(
         DocRow("bad-1", Seq(Span("page", "", "", 0))),
         Fixtures.flagshipDoc))
-      bad.map { row =>
-        try { Extractor.extractRow(row, ExtractConfig()); (row.doc_id, "ok", "") }
-        catch { case e: ExtractionException => (row.doc_id, "failed", e.getMessage) }
-      }.toDF("doc_id", "status", "error").orderBy(col("doc_id"))
+      StreamingExtract.transformWithStatus(bad.toDF())
+        .select("doc_id", "status", "error").orderBy(col("doc_id"))
     }))
 
   private def extractedWithMedia(s: SparkSession): DataFrame =

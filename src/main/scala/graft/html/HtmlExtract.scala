@@ -1,9 +1,12 @@
 package graft.html
 
+import graft.job.RowSeam
+import graft.job.RowSeam.nonNull
 import graft.model.{ExtractedDoc, Span}
 import graft.text.PyText
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.util.LongAccumulator
 
 /** HTML main-content extraction (north_rule: "HTML boilerplate strip …
   * DOM heuristics") — the web-side counterpart of the PDF/layout kernel,
@@ -711,9 +714,6 @@ object HtmlExtract {
       links: Seq[LinkRow], title: String, lang: String, canonical: String,
       description: String, robots: String, base: String, url: String)
 
-  /** ONE-pass kernel: spans + links + metadata from a single tokenize
-    * (see extractAll).
-    */
   /** THE one definition of per-link resolution (extractAllRow and
     * extractLinks both call it — they can never diverge).
     */
@@ -726,6 +726,9 @@ object HtmlExtract {
     }
   }
 
+  /** ONE-pass kernel: spans + links + metadata from a single tokenize
+    * (see extractAll).
+    */
   def extractAllRow(docId: String, html: String, pageUrl: String): WebDoc = {
     val (bs, ls, imgs, meta) = tokenize(html)
     val doc = assembleSpans(docId, bs, imgs)
@@ -748,49 +751,33 @@ object HtmlExtract {
     */
   def extractAll(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html", pageUrlCol: Option[String] = None,
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[WebDoc] = {
+      failedAcc: Option[LongAccumulator] = None): Dataset[WebDoc] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(idCol).cast("string"), col(htmlCol).cast("string"),
-      pageUrlCol.map(c => col(c).cast("string")).getOrElse(lit(null.asInstanceOf[String])))
-    base.as[(String, String, String)]
-      .mapPartitions(_.flatMap { case (id, html, pageUrl) =>
-        if (id == null || html == null) { failedAcc.foreach(_.add(1L)); None }
-        else
-          try Some(extractAllRow(id, html, pageUrl))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+    df.select(col(idCol).cast("string"), col(htmlCol).cast("string"), stringOrNull(pageUrlCol))
+      .as[(String, String, String)]
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html, pageUrl) =>
+        extractAllRow(nonNull(id, "doc_id"), nonNull(html, "html"), pageUrl)
       })
   }
 
+  /** The optional string column `c`, or a null literal. */
+  private def stringOrNull(c: Option[String]) =
+    c.map(col(_).cast("string")).getOrElse(lit(null.asInstanceOf[String]))
+
   /** Corpus operator: map-only, zero shuffle (the whole point — same
-    * deployment shape as the PDF kernel). Per-document failure seam like
-    * the PDF path: a null id/html cell or a (theoretically impossible —
-    * the tokenizer is total) per-row crash drops that ROW, never the job;
-    * `failedAcc`, when supplied, counts every dropped row so the loss is
-    * observable (the chunked production path records the same count in
-    * its PartitionMetric rows; this is the standalone operator's
-    * equivalent, mirroring StreamingExtract's saturation accumulator).
+    * deployment shape as the PDF kernel). Rows fail through
+    * [[graft.job.RowSeam]], a null id or html cell included.
     */
   def extract(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html",
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[ExtractedDoc] = {
+      failedAcc: Option[LongAccumulator] = None): Dataset[ExtractedDoc] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("string"), col(htmlCol).cast("string"))
       .as[(String, String)]
-      .mapPartitions(_.flatMap { case (id, html) =>
-        if (id == null || html == null) { failedAcc.foreach(_.add(1L)); None }
-        else
-          try Some(extractRow(id, html))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html) =>
+        extractRow(nonNull(id, "doc_id"), nonNull(html, "html"))
       })
   }
 
@@ -801,47 +788,35 @@ object HtmlExtract {
     * absolute per RFC 3986 against the page's effective base — the
     * document's <base href> (itself resolved against the page URL) when
     * declared, else the page URL — exactly a browser's resolution
-    * order. Map-only, zero shuffle, same failure seam as [[extract]].
+    * order. Map-only, zero shuffle; a page's links are one value of
+    * [[graft.job.RowSeam]], flattened after it.
     */
   def extractLinks(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html", pageUrlCol: Option[String] = None,
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
+      failedAcc: Option[LongAccumulator] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     pageUrlCol match {
       case None =>
         df.select(col(idCol).cast("string"), col(htmlCol).cast("string"))
           .as[(String, String)]
-          .mapPartitions(_.flatMap { case (id, html) =>
-            if (id == null || html == null) {
-              failedAcc.foreach(_.add(1L)); Iterator.empty
-            } else
-              try links(html).iterator.zipWithIndex.map {
-                case ((href, anchor), idx) => (id, idx, href, anchor)
-              } catch {
-                case scala.util.control.NonFatal(_) =>
-                  failedAcc.foreach(_.add(1L)); Iterator.empty
-              }
-          })
+          .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html) =>
+            nonNull(id, "doc_id")
+            links(nonNull(html, "html")).zipWithIndex.map {
+              case ((href, anchor), idx) => (id, idx, href, anchor)
+            }
+          }.flatten)
           .toDF("doc_id", "offset", "href", "anchor")
       case Some(urlCol) =>
         df.select(col(idCol).cast("string"), col(htmlCol).cast("string"),
             col(urlCol).cast("string"))
           .as[(String, String, String)]
-          .mapPartitions(_.flatMap { case (id, html, pageUrl) =>
-            if (id == null || html == null) {
-              failedAcc.foreach(_.add(1L)); Iterator.empty
-            } else
-              try {
-                val (_, ls, _, meta) = tokenize(html)
-                resolvedLinks(ls, meta, pageUrl).iterator
-                  .map(l => (id, l.offset, l.href, l.anchor, l.resolved))
-              } catch {
-                case scala.util.control.NonFatal(_) =>
-                  failedAcc.foreach(_.add(1L)); Iterator.empty
-              }
-          })
+          .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html, pageUrl) =>
+            nonNull(id, "doc_id")
+            val (_, ls, _, meta) = tokenize(nonNull(html, "html"))
+            resolvedLinks(ls, meta, pageUrl)
+              .map(l => (id, l.offset, l.href, l.anchor, l.resolved))
+          }.flatten)
           .toDF("doc_id", "offset", "href", "anchor", "resolved")
     }
   }
@@ -854,31 +829,21 @@ object HtmlExtract {
     * text for dedup and quality. With `pageUrlCol` set, `canonical` is
     * RESOLVED to absolute form against the page's effective base — a
     * relative rel=canonical ("/index") is host-ambiguous and would
-    * wrongly merge distinct sites in urlDedup. Same failure seam as
-    * [[extract]].
+    * wrongly merge distinct sites in urlDedup. Rows fail through
+    * [[graft.job.RowSeam]].
     */
   def extractPageMeta(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html", pageUrlCol: Option[String] = None,
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
+      failedAcc: Option[LongAccumulator] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(col(idCol).cast("string"), col(htmlCol).cast("string"),
-        pageUrlCol.map(c => col(c).cast("string"))
-          .getOrElse(lit(null.asInstanceOf[String])))
+    df.select(col(idCol).cast("string"), col(htmlCol).cast("string"), stringOrNull(pageUrlCol))
       .as[(String, String, String)]
-      .mapPartitions(_.flatMap { case (id, html, pageUrl) =>
-        if (id == null || html == null) {
-          failedAcc.foreach(_.add(1L)); None
-        } else
-          try {
-            val m = pageMeta(html)
-            Some((id, m.title, m.lang, resolvedCanonical(m, pageUrl),
-              m.description, m.robots, m.base))
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html, pageUrl) =>
+        nonNull(id, "doc_id")
+        val m = pageMeta(nonNull(html, "html"))
+        (id, m.title, m.lang, resolvedCanonical(m, pageUrl),
+          m.description, m.robots, m.base)
       })
       .toDF("doc_id", "title", "lang", "canonical", "description", "robots",
         "base")
@@ -919,26 +884,18 @@ object HtmlExtract {
   /** Byte-level [[extract]]: `htmlCol` is BINARY; `contentTypeCol`, when
     * given, feeds the transport layer of the sniffing ladder. Decode and
     * extraction run in the same map pass — map-only, zero shuffle, one
-    * failure seam for both.
+    * [[graft.job.RowSeam]] for both.
     */
   def extractBytes(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html_bytes", contentTypeCol: Option[String] = None,
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[ExtractedDoc] = {
+      failedAcc: Option[LongAccumulator] = None): Dataset[ExtractedDoc] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("string"), col(htmlCol).cast("binary"),
-        contentTypeCol.map(c => col(c).cast("string"))
-          .getOrElse(lit(null.asInstanceOf[String])))
+        stringOrNull(contentTypeCol))
       .as[(String, Array[Byte], String)]
-      .mapPartitions(_.flatMap { case (id, bytes, ct) =>
-        if (id == null || bytes == null) { failedAcc.foreach(_.add(1L)); None }
-        else
-          try Some(extractRowBytes(id, bytes, ct))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, bytes, ct) =>
+        extractRowBytes(nonNull(id, "doc_id"), nonNull(bytes, htmlCol), ct)
       })
   }
 
@@ -950,24 +907,14 @@ object HtmlExtract {
   def extractAllBytes(df: DataFrame, idCol: String = "doc_id",
       htmlCol: String = "html_bytes", contentTypeCol: Option[String] = None,
       pageUrlCol: Option[String] = None,
-      failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[WebDoc] = {
+      failedAcc: Option[LongAccumulator] = None): Dataset[WebDoc] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(col(idCol).cast("string"), col(htmlCol).cast("binary"),
-        contentTypeCol.map(c => col(c).cast("string"))
-          .getOrElse(lit(null.asInstanceOf[String])),
-        pageUrlCol.map(c => col(c).cast("string"))
-          .getOrElse(lit(null.asInstanceOf[String])))
+        stringOrNull(contentTypeCol), stringOrNull(pageUrlCol))
       .as[(String, Array[Byte], String, String)]
-      .mapPartitions(_.flatMap { case (id, bytes, ct, pageUrl) =>
-        if (id == null || bytes == null) { failedAcc.foreach(_.add(1L)); None }
-        else
-          try Some(extractAllRowBytes(id, bytes, ct, pageUrl))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, bytes, ct, pageUrl) =>
+        extractAllRowBytes(nonNull(id, "doc_id"), nonNull(bytes, htmlCol), ct, pageUrl)
       })
   }
 }

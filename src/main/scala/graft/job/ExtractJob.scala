@@ -126,7 +126,7 @@ private[job] object InputKind {
     def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel = {
       val ord = FastScan.SpanOrdinals.from(schema)
       (docId, row, m) => {
-        require(!row.isNullAt(1), "null spans")
+        if (row.isNullAt(1)) throw RowSeam.nullCell("spans")
         val arr = row.getArray(1)
         m.spansIn += arr.numElements()
         val out = Extractor.extractTree(FastScan.decodeSpans(arr, ecfg.fast, ord), ecfg)
@@ -141,7 +141,7 @@ private[job] object InputKind {
     def skew(cfg: JobConfig): (Column, Int) = (length(col("html")), cfg.bigDocHtmlChars)
     def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel =
       (docId, row, _) => {
-        require(!row.isNullAt(1), "null html")
+        if (row.isNullAt(1)) throw RowSeam.nullCell("html")
         HtmlExtract.extractRow(docId, row.getUTF8String(1).toString)
       }
   }
@@ -166,7 +166,7 @@ private[job] object InputKind {
     def skew(cfg: JobConfig): (Column, Int) = (length(col("html_bytes")), cfg.bigDocHtmlChars)
     def kernel(schema: StructType, ecfg: ExtractConfig): RowKernel =
       (docId, row, _) => {
-        require(!row.isNullAt(1), "null html_bytes")
+        if (row.isNullAt(1)) throw RowSeam.nullCell("html_bytes")
         HtmlExtract.extractRowBytes(docId, row.getBinary(1),
           if (row.isNullAt(2)) null else row.getUTF8String(2).toString)
       }
@@ -228,73 +228,43 @@ object ExtractJob {
     docs.repartition(numPartitions * SaltFactor, key)
   }
 
-  /** The one extraction loop of a partition, for every [[InputKind]]: it
-    * owns the per-partition counters, emits exactly one PartitionMetric
-    * when the rows run out, and is the per-row failure seam — a null
-    * doc_id or a kernel exception fails the DOCUMENT (counted in
-    * n_failed, first error kept), never the task. The kind's kernel is
-    * resolved once per chunk on the driver; per row the loop allocates
-    * only the doc_id string. Constructed inside mapPartitions (task thread).
-    * UnsafeRows from `queryExecution.toRdd` are reused by the scanner, so
-    * each row is fully consumed by the kernel before the next is read.
+  /** The job face of [[RowSeam]], the one extraction loop of a partition
+    * for every [[InputKind]]: the seam's failure policy (failures land in
+    * n_failed and the error column) plus the job's per-partition counters
+    * and exactly one PartitionMetric when the rows run out. The kind's
+    * kernel is resolved once per chunk on the driver; per row the loop
+    * allocates only the doc_id string. Constructed inside mapPartitions
+    * (task thread).
     */
   private[job] final class PartitionInstrumentation(
-      rows: Iterator[InternalRow], kernel: InputKind.RowKernel,
+      rows: Iterator[InternalRow], rowKernel: InputKind.RowKernel,
       acc: CollectionAccumulator[PartitionMetric], runId: String, chunkId: Int)
-      extends Iterator[ExtractedDoc] {
+      extends RowSeam[InternalRow, ExtractedDoc](rows, None) {
     private val t0 = System.nanoTime() // monotonic: a clock step cannot skew wall_ms
     private val lm0 = graft.lm.Scorer.threadLmCallCount // task = one thread
-    private val pid = org.apache.spark.TaskContext.getPartitionId()
-    private var nDocs, nFailed, spansOut = 0L
+    private var spansOut = 0L
     /** Input spans read; the span kernel adds to it, so it stays 0 for
       * the web kinds, which have no span column.
       */
     var spansIn = 0L
-    private var firstError = ""
-    private var pending: ExtractedDoc = null
-    private var metricEmitted = false
 
-    def hasNext: Boolean = {
-      while (pending == null && rows.hasNext) pending = extractRow(rows.next())
-      if (pending == null && !metricEmitted) {
-        metricEmitted = true
-        acc.add(PartitionMetric(
-          runId, chunkId, pid, nDocs, nFailed, spansIn, spansOut,
-          graft.lm.Scorer.threadLmCallCount - lm0,
-          (System.nanoTime() - t0) / 1000000,
-          if (nFailed == 0) "done" else "done_with_failures",
-          firstError, System.currentTimeMillis()))
-      }
-      pending != null
-    }
-
-    def next(): ExtractedDoc = {
-      if (!hasNext) throw new NoSuchElementException("partition exhausted")
-      val r = pending
-      pending = null
+    protected def kernel(row: InternalRow): ExtractedDoc = {
+      if (row.isNullAt(0)) throw RowSeam.nullCell("doc_id")
+      val r = rowKernel(row.getUTF8String(0).toString, row, this)
+      spansOut += r.spans.length
       r
     }
 
-    /** One row through the kernel; null when the document failed. */
-    private def extractRow(row: InternalRow): ExtractedDoc = {
-      nDocs += 1
-      var docId: String = null
-      try {
-        if (row.isNullAt(0)) throw new IllegalArgumentException("null doc_id")
-        docId = row.getUTF8String(0).toString
-        val r = kernel(docId, row, this)
-        spansOut += r.spans.length
-        r
-      } catch {
-        case NonFatal(e) =>
-          nFailed += 1
-          if (firstError.isEmpty) {
-            val who = if (docId == null) s"row ${nDocs - 1} of partition $pid" else docId
-            firstError = s"$who: ${e.getMessage}"
-          }
-          null
-      }
-    }
+    protected def idOf(row: InternalRow): String =
+      if (row.isNullAt(0)) null else row.getUTF8String(0).toString
+
+    override protected def exhausted(): Unit =
+      acc.add(PartitionMetric(
+        runId, chunkId, partition, nRows, nFailed, spansIn, spansOut,
+        graft.lm.Scorer.threadLmCallCount - lm0,
+        (System.nanoTime() - t0) / 1000000,
+        if (nFailed == 0) "done" else "done_with_failures",
+        firstError, System.currentTimeMillis()))
   }
 
   /** Extract one chunk of `docs` with the kernel of `cfg.inputKind`:

@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.job.RowSeam
+import graft.job.RowSeam.nonNull
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -525,42 +527,26 @@ object Multimodal {
     (m.width, m.height, m.frames)
   }
 
-  /** Per-row decode-failure seam shared by the media operators: a corpus
-    * crawled from the web WILL contain unknown-magic payloads (decodeMeta's
-    * loud require) and truncated files whose header sniffs OK but whose
-    * full decode throws — one such row must degrade or drop ITSELF, never
-    * abort the Spark job from inside mapPartitions. Mirrors the extract
-    * kernels' per-document failure convention (ExtractJob / HtmlExtract);
-    * `failedAcc`, when supplied, makes the loss observable.
-    */
-  private def rowSeam[T](failedAcc: Option[org.apache.spark.util.LongAccumulator])(
-      body: => Iterator[T]): Iterator[T] =
-    try body
-    catch {
-      case scala.util.control.NonFatal(_) =>
-        failedAcc.foreach(_.add(1L)); Iterator.empty
-    }
-
   /** Batched metadata extraction: one pass per partition, bytes never
     * shuffled (metadata projected out; the binary column is dropped before
-    * any wide operation). Undecodable rows drop (counted via `failedAcc`)
-    * rather than aborting the job.
+    * any wide operation). Undecodable rows drop through
+    * [[graft.job.RowSeam]]: a crawled corpus WILL hold unknown-magic and
+    * truncated payloads.
     */
   def extractMeta(media: DataFrame,
       failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRow].mapPartitions { it =>
+    media.as[MediaRow].mapPartitions { rows =>
       val md = java.security.MessageDigest.getInstance("SHA-256")
-      it.flatMap { m =>
-        rowSeam(failedAcc) {
-          val h = decodeMeta(m.bytes)
-          md.reset()
-          val digest = md.digest(m.bytes).take(4).map("%02x".format(_)).mkString
-          Iterator.single(MediaMeta(m.doc_id, m.media_ref, m.kind, h.format,
-            h.width, h.height, h.frames, m.bytes.length, digest))
-        }
+      RowSeam(rows, failedAcc)(_.doc_id) { m =>
+        nonNull(m.doc_id, "doc_id")
+        val h = decodeMeta(m.bytes)
+        md.reset()
+        val digest = md.digest(m.bytes).take(4).map("%02x".format(_)).mkString
+        MediaMeta(m.doc_id, m.media_ref, m.kind, h.format,
+          h.width, h.height, h.frames, m.bytes.length, digest)
       }
     }.toDF()
   }
@@ -569,25 +555,25 @@ object Multimodal {
     * every `stride`-th frame with the half-size output dims a thumbnail
     * pipeline would target — the batch/explode shape, metadata only (a
     * real video pipeline decodes pixels at the same seam `resize` uses).
-    * Undecodable rows drop (counted via `failedAcc`).
+    * Undecodable rows drop through [[graft.job.RowSeam]].
     */
   def sampleFrames(media: DataFrame, stride: Int,
       failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRow].flatMap { m =>
-      rowSeam(failedAcc) {
-        val h = decodeMeta(m.bytes)
-        // audio has no visual frames to thumbnail: a WAV's PCM frame count
-        // is sample frames (tens of thousands per second), not the unit
-        // this operator models — emit nothing rather than exploding one
-        // row per stride-th audio sample
-        if (h.format == "wav") Iterator.empty
-        else (0 until h.frames by stride).iterator
-          .map(i => (m.doc_id, m.media_ref, i, h.width / 2, h.height / 2))
-      }
-    }.toDF("doc_id", "media_ref", "frame_idx", "out_w", "out_h")
+    media.as[MediaRow].mapPartitions(rows => RowSeam(rows, failedAcc)(_.doc_id) { m =>
+      nonNull(m.doc_id, "doc_id")
+      val h = decodeMeta(m.bytes)
+      // audio has no visual frames to thumbnail: a WAV's PCM frame count
+      // is sample frames (tens of thousands per second), not the unit
+      // this operator models — emit nothing rather than exploding one
+      // row per stride-th audio sample. The frame rows are built lazily,
+      // after the seam: only the decode above can throw.
+      if (h.format == "wav") Iterator.empty
+      else (0 until h.frames by stride).iterator
+        .map(i => (m.doc_id, m.media_ref, i, h.width / 2, h.height / 2))
+    }.flatten).toDF("doc_id", "media_ref", "frame_idx", "out_w", "out_h")
   }
 
   /** Resize to fit maxDim: REAL bilinear downscale + re-encode for
@@ -597,65 +583,62 @@ object Multimodal {
     * images (animated GIF — frame-accurate transforms belong at the
     * production video seam) pass through unchanged rather than silently
     * losing frames. Binary-in / binary-out inside one mapPartitions pass,
-    * never across a shuffle. Undecodable rows drop (counted via
-    * `failedAcc`) — passing a broken payload through unchanged would just
-    * defer the failure to the next decoder.
+    * never across a shuffle. Undecodable rows drop through
+    * [[graft.job.RowSeam]] — passing a broken payload through unchanged
+    * would just defer the failure to the next decoder.
     */
   def resize(media: DataFrame, maxDim: Int,
       failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRow].mapPartitions { it =>
-      it.flatMap { m =>
-        rowSeam(failedAcc) { Iterator.single {
-        val h = decodeMeta(m.bytes)
-        h.format match {
-          case "grft" =>
-            val scale = math.min(1.0, maxDim.toDouble / math.max(h.width, h.height))
+    media.as[MediaRow].mapPartitions(rows => RowSeam(rows, failedAcc)(_.doc_id) { m =>
+      nonNull(m.doc_id, "doc_id")
+      val h = decodeMeta(m.bytes)
+      h.format match {
+        case "grft" =>
+          val scale = math.min(1.0, maxDim.toDouble / math.max(h.width, h.height))
+          val nw = math.max(1, (h.width * scale).toInt)
+          val nh = math.max(1, (h.height * scale).toInt)
+          val bb = java.nio.ByteBuffer.allocate(m.bytes.length)
+          bb.put("GRFT".getBytes("US-ASCII"))
+          bb.putInt(nw); bb.putInt(nh); bb.putInt(h.frames)
+          bb.put(m.bytes, 16, m.bytes.length - 16)
+          m.copy(bytes = bb.array())
+        case "wav" => m
+        // video containers and multi-frame images (AVI, MP4, animated
+        // GIF): frame-accurate transforms belong at the video seam
+        // (ffmpeg in production) — passing through unchanged beats
+        // silently re-encoding frame 0 as a 1-frame BMP and dropping
+        // the rest
+        case "avi" | "mp4" => m
+        case _ if h.frames > 1 => m
+        case _ =>
+          val scale = math.min(1.0, maxDim.toDouble / math.max(h.width, h.height))
+          if (scale >= 1.0) m
+          else {
+            val src = javax.imageio.ImageIO.read(
+              new java.io.ByteArrayInputStream(m.bytes))
+            // header sniffed OK but full decode failed: read returns
+            // null — fail this ROW
+            require(src != null, "image decode returned null")
             val nw = math.max(1, (h.width * scale).toInt)
             val nh = math.max(1, (h.height * scale).toInt)
-            val bb = java.nio.ByteBuffer.allocate(m.bytes.length)
-            bb.put("GRFT".getBytes("US-ASCII"))
-            bb.putInt(nw); bb.putInt(nh); bb.putInt(h.frames)
-            bb.put(m.bytes, 16, m.bytes.length - 16)
-            m.copy(bytes = bb.array())
-          case "wav" => m
-          // video containers and multi-frame images (AVI, MP4, animated
-          // GIF): frame-accurate transforms belong at the video seam
-          // (ffmpeg in production) — passing through unchanged beats
-          // silently re-encoding frame 0 as a 1-frame BMP and dropping
-          // the rest
-          case "avi" | "mp4" => m
-          case _ if h.frames > 1 => m
-          case _ =>
-            val scale = math.min(1.0, maxDim.toDouble / math.max(h.width, h.height))
-            if (scale >= 1.0) m
-            else {
-              val src = javax.imageio.ImageIO.read(
-                new java.io.ByteArrayInputStream(m.bytes))
-              // header sniffed OK but full decode failed: read returns
-              // null — fail this ROW (caught by rowSeam, counted)
-              require(src != null, "image decode returned null")
-              val nw = math.max(1, (h.width * scale).toInt)
-              val nh = math.max(1, (h.height * scale).toInt)
-              val dst = new java.awt.image.BufferedImage(nw, nh,
-                java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-              val g = dst.createGraphics()
-              try {
-                g.setRenderingHint(
-                  java.awt.RenderingHints.KEY_INTERPOLATION,
-                  java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                g.drawImage(src, 0, 0, nw, nh, null): Unit
-              } finally g.dispose()
-              val out = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(dst, "bmp", out)
-              m.copy(bytes = out.toByteArray)
-            }
-        }
-        } }
+            val dst = new java.awt.image.BufferedImage(nw, nh,
+              java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+            val g = dst.createGraphics()
+            try {
+              g.setRenderingHint(
+                java.awt.RenderingHints.KEY_INTERPOLATION,
+                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+              g.drawImage(src, 0, 0, nw, nh, null): Unit
+            } finally g.dispose()
+            val out = new java.io.ByteArrayOutputStream()
+            javax.imageio.ImageIO.write(dst, "bmp", out)
+            m.copy(bytes = out.toByteArray)
+          }
       }
-    }.toDF()
+    }).toDF()
   }
 
   /** Feature extraction: binary -> dense Array[Float] embedding with the
@@ -672,30 +655,27 @@ object Multimodal {
     *    channel 0 — the matching 1-D energy profile.
     *  - GRFT / unknown: deterministic hash-derived pseudo-features (the
     *    stub seam — stands in for a CNN/CLIP forward pass).
+    *
+    * A row that fails [[graft.job.RowSeam]] is replaced by its hash
+    * features, not dropped.
     */
   def extractFeatures(media: DataFrame, dim: Int = 16,
       failedAcc: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRow].map { m =>
+    media.as[MediaRow].mapPartitions(rows => RowSeam(rows, failedAcc)(_.doc_id)({ m =>
+      nonNull(m.doc_id, "doc_id")
+      (m.doc_id, m.media_ref, featureVector(nonNull(m.bytes, "bytes"), dim).toSeq)
+    }, (m, _) =>
       // degrade, don't drop: a row that loses its content features still
       // keeps its identity for downstream joins — hash features are the
-      // same deterministic stand-in the GRFT seam uses (per-vec failure
-      // counted via failedAcc). A null bytes cell must not NPE the
-      // fallback itself: hash the empty payload instead.
-      val bytes = if (m.bytes == null) Array.emptyByteArray else m.bytes
-      val vec =
-        if (m.bytes == null) {
-          failedAcc.foreach(_.add(1L)); hashFeatures(bytes, dim)
-        } else
-          try featureVector(bytes, dim)
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); hashFeatures(bytes, dim)
-          }
-      (m.doc_id, m.media_ref, vec.toSeq)
-    }.toDF("doc_id", "media_ref", "embedding")
+      // same deterministic stand-in the GRFT seam uses (a null bytes cell
+      // hashes the empty payload); a row with no id has none to keep
+      if (m.doc_id == null) null
+      else (m.doc_id, m.media_ref, hashFeatures(
+        if (m.bytes == null) Array.emptyByteArray else m.bytes, dim).toSeq)
+    )).toDF("doc_id", "media_ref", "embedding")
   }
 
   /** Perceptual average-hash (aHash) per media payload — the classic

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.html.HtmlExtract
+import graft.job.RowSeam
+import graft.job.RowSeam.nonNull
 import graft.ops.Web
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -203,12 +205,12 @@ object WebPrep {
     * split as dedupExactStream: the stream suppresses on arrival, the
     * periodic batch [[prepare]] stays the cross-horizon authority.
     *
-    * Conventions carried over: a null id/html/event-time row is counted
-    * on `failedAcc` and dropped (no poison rows into stateful stages —
-    * a streaming task failure crash-loops on checkpoint replay); rows
-    * whose dedup key is NULL (no fetch URL, unresolvable canonical) are
-    * EXCLUDED like `Web.urlDedupStream` excludes them — state equality
-    * would collapse every null-key page into one.
+    * Rows fail through [[graft.job.RowSeam]], a null event time
+    * included (no poison rows into stateful stages — a streaming task
+    * failure crash-loops on checkpoint replay); rows whose dedup key is
+    * NULL (no fetch URL, unresolvable canonical) are EXCLUDED like
+    * `Web.urlDedupStream` excludes them — state equality would collapse
+    * every null-key page into one.
     *
     * Output: the WebDoc columns + the event-time column + `dedup_url`
     * (the canonicalized dedup key of the kept first arrival).
@@ -225,15 +227,9 @@ object WebPrep {
         col(urlCol).cast("string"),
         col(eventTimeCol).cast("timestamp"))
       .as[(String, String, String, java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, html, url, ts) =>
-        if (id == null || html == null || ts == null) {
-          failedAcc.foreach(_.add(1L)); None
-        } else
-          try Some((HtmlExtract.extractAllRow(id, html, url), ts))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, html, url, ts) =>
+        nonNull(ts, eventTimeCol)
+        (HtmlExtract.extractAllRow(nonNull(id, "doc_id"), nonNull(html, "html"), url), ts)
       })
       .select(col("_1.*"), col("_2").as(eventTimeCol))
     streamPrepTail(extracted, eventTimeCol, watermark)
@@ -257,8 +253,8 @@ object WebPrep {
   /** Byte-level twin of [[prepareStream]], shaped for
     * [[graft.sources.Warc.responsesStream]]'s rows: the same three
     * stages on arrival, with the charset ladder inside the extraction
-    * pass (decode + extract in ONE map, one failure seam) and non-200
-    * rows dropped up front (redirect captures are edges, not pages).
+    * pass (decode + extract in ONE map, one [[graft.job.RowSeam]]) and
+    * non-200 rows dropped up front (redirect captures are edges, not pages).
     * Together they are the continuous crawl-to-corpus path:
     * {{{
     *   val corpus = WebPrep.prepareBytesStream(
@@ -282,15 +278,9 @@ object WebPrep {
         col(contentTypeCol).cast("string"), col(urlCol).cast("string"),
         col(eventTimeCol).cast("timestamp"))
       .as[(String, Array[Byte], String, String, java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, bytes, ct, url, ts) =>
-        if (id == null || bytes == null || ts == null) {
-          failedAcc.foreach(_.add(1L)); None
-        } else
-          try Some((HtmlExtract.extractAllRowBytes(id, bytes, ct, url), ts))
-          catch {
-            case scala.util.control.NonFatal(_) =>
-              failedAcc.foreach(_.add(1L)); None
-          }
+      .mapPartitions(rows => RowSeam(rows, failedAcc)(_._1) { case (id, bytes, ct, url, ts) =>
+        nonNull(ts, eventTimeCol)
+        (HtmlExtract.extractAllRowBytes(nonNull(id, "doc_id"), nonNull(bytes, bytesCol), ct, url), ts)
       })
       .select(col("_1.*"), col("_2").as(eventTimeCol))
     streamPrepTail(extracted, eventTimeCol, watermark)

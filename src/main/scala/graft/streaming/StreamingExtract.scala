@@ -1,10 +1,26 @@
 package graft.streaming
 
 import graft.extract.Extractor
+import graft.job.RowSeam
+import graft.job.RowSeam.nonNull
 import graft.model._
 import graft.reflow.ExtractConfig
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+/** One (band, band_hash) bucket row of an incoming document
+  * (nearDupPairsStream). Top-level so the Dataset encoders codegen
+  * cleanly (object-nested state classes trip janino).
+  */
+final case class BandedSig(band: Int, band_hash: Long, doc_id: Long,
+    ts: java.sql.Timestamp, sig: Seq[Long])
+
+/** Candidate near-dup pair from the stream (doc_a < doc_b). */
+final case class StreamPair(doc_a: Long, doc_b: Long, est_jaccard: Double)
+
+/** nearDupPairsStream bucket state: one entry per member in horizon. */
+final case class BucketEntry(doc_id: Long, ts_ms: Long, sig: Seq[Long])
+final case class BucketState(entries: List[BucketEntry])
 
 /** Structured-Streaming surface: continuous/incremental extraction.
   *
@@ -27,20 +43,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * micro-batch bounds work per trigger via maxFilesPerTrigger instead);
   * each micro-batch is embarrassingly parallel over its input partitions.
   */
-/** One (band, band_hash) bucket row of an incoming document
-  * (nearDupPairsStream). Top-level so the Dataset encoders codegen
-  * cleanly (object-nested state classes trip janino).
-  */
-final case class BandedSig(band: Int, band_hash: Long, doc_id: Long,
-    ts: java.sql.Timestamp, sig: Seq[Long])
-
-/** Candidate near-dup pair from the stream (doc_a < doc_b). */
-final case class StreamPair(doc_a: Long, doc_b: Long, est_jaccard: Double)
-
-/** nearDupPairsStream bucket state: one entry per member in horizon. */
-final case class BucketEntry(doc_id: Long, ts_ms: Long, sig: Seq[Long])
-final case class BucketState(entries: List[BucketEntry])
-
 object StreamingExtract {
 
   /** Streaming extraction transform — works on any streaming (or batch)
@@ -48,14 +50,16 @@ object StreamingExtract {
     * source/sink/trigger. (The batch job uses the Tungsten-direct
     * FastScan variant; streaming plans can't expose queryExecution.toRdd,
     * so this takes the typed-encoder path — same kernel, same output.)
+    * Failed rows, a null doc_id included, drop through [[RowSeam]].
     */
   def transform(docs: DataFrame, cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select("doc_id", "spans").as[DocRow].mapPartitions(_.flatMap { row =>
-      try Some(Extractor.extractRow(row, cfg))
-      catch { case _: ExtractionException => None }
-    })
+    docs.select("doc_id", "spans").as[DocRow].mapPartitions(rows =>
+      RowSeam(rows)(_.doc_id) { row =>
+        nonNull(row.doc_id, "doc_id")
+        Extractor.extractRow(row, cfg)
+      })
   }
 
   /** A streaming row with its extraction outcome — the batch job's
@@ -69,22 +73,20 @@ object StreamingExtract {
 
   /** transform with per-document outcome (the production streaming path:
     * `filter($"status" === "ok")` recovers transform's output; the failed
-    * remainder IS the streaming metrics signal).
+    * remainder IS the streaming metrics signal): a row that fails
+    * [[RowSeam]] becomes its status row.
     */
   def transformWithStatus(docs: DataFrame,
       cfg: ExtractConfig = ExtractConfig()): Dataset[ExtractedDocStatus] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select("doc_id", "spans").as[DocRow].mapPartitions(_.map { row =>
-      try {
+    docs.select("doc_id", "spans").as[DocRow].mapPartitions(rows =>
+      RowSeam(rows)(_.doc_id)({ row =>
+        nonNull(row.doc_id, "doc_id")
         val d = Extractor.extractRow(row, cfg)
         ExtractedDocStatus(d.doc_id, d.spans, d.text, "ok", "")
-      } catch {
-        case e: ExtractionException =>
-          ExtractedDocStatus(row.doc_id, Seq.empty, "", "failed",
-            String.valueOf(e.getMessage))
-      }
-    })
+      }, (row, e) =>
+        ExtractedDocStatus(row.doc_id, Seq.empty, "", "failed", String.valueOf(e.getMessage))))
   }
 
   /** File-source incremental pipeline: watches `inputDir` for new parquet

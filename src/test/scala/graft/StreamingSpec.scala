@@ -193,6 +193,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ok.toSeq == legacy.toSeq)
   }
 
+  test("a null doc_id fails the row: transform drops it, transformWithStatus reports it") {
+    import spark.implicits._
+    val good = Fixtures.corpus(2, seed = 23L)
+    val docs = spark.createDataset(good :+ DocRow(null, good.head.spans)).toDF()
+    assert(StreamingExtract.transform(docs).collect().map(_.doc_id).sorted.toSeq ==
+      good.map(_.doc_id).sorted)
+    val out = StreamingExtract.transformWithStatus(docs).collect()
+    assert(out.length == 3)
+    val failed = out.filter(_.doc_id == null)
+    assert(failed.map(d => (d.status, d.error, d.spans.isEmpty)).toSeq ==
+      Seq(("failed", "null doc_id", true)))
+    assert(out.count(_.status == "ok") == 2)
+  }
+
   test("HTML extraction runs unchanged on a stream (web ingest-on-arrival)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
