@@ -3,7 +3,7 @@ package graft
 import graft.extract.Extractor
 import graft.fixtures.Fixtures
 import graft.model._
-import graft.ops.{Clustering, Corpus, Dedup, Dsir, Multimodal, Pii, SemDedup, Similarity, SubstringDedup, TextAnalysis, Web}
+import graft.ops.{Clustering, Corpus, Dedup, Dsir, Materialize, Multimodal, Pii, SemDedup, Similarity, SubstringDedup, TextAnalysis, Web}
 import graft.reflow.ExtractConfig
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -388,8 +388,8 @@ object SparkEntry {
       // subtree — checkpoint the NARROW scored frame (~24 bytes/row, the
       // tokenBudgetTake materialization shape) so the quality regex pass
       // over the text pays once, not twice
-      Corpus.scoreBuckets(d.select(col("doc_id"), col("lang"))
-          .join(q, Seq("doc_id")).localCheckpoint(),
+      Corpus.scoreBuckets(Materialize.checkpoint(d.select(col("doc_id"), col("lang"))
+          .join(q, Seq("doc_id"))),
         stratum = col("lang"), score = col("quality"),
         labels = Seq("tail", "middle", "head"))
         .withColumnRenamed("id", "doc_id")
@@ -408,8 +408,7 @@ object SparkEntry {
         // clusterBest reads the quality frame twice (max-per-cluster agg
         // + the keeper rejoin); checkpoint the narrow (id, quality)
         // projection so the quality regex pass over the text pays once
-        TextAnalysis.qualityScore(d).select(col("doc_id"), col("quality"))
-          .localCheckpoint())
+        Materialize.checkpoint(TextAnalysis.qualityScore(d).select(col("doc_id"), col("quality"))))
         .orderBy(col("cluster"))
     }),
     // integer-exact k-means: 3 Lloyd rounds + final assignment, every

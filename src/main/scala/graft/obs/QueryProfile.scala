@@ -30,7 +30,7 @@ import scala.util.control.NonFatal
   *  - `shuffle_read_mb`, `shuffle_write_mb`, `spill_mb` (memory + disk);
   *  - `task_skew`: the worst max/median task time over the stages of at
   *    least 4 tasks, 1 when there are none (perfbench's `ops.<q>.task_skew`);
-  *  - `cached_mb_left`, `persisted_rdds_left`: what the run left cached;
+  *  - `cached_mb_left`, `persisted_rdds_left`: what stays cached after the next settle;
   *  - `top_stages`: the 3 stages with the most executor run time, each
   *    with its call site and operator scopes (AQE stages are submitted
   *    from a pool thread, so their call site says little).
@@ -56,6 +56,7 @@ object QueryProfile {
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
     spark.listenerManager.register(rec)
+    graft.BenchSurface.settle()
     val passes = try (0 to WarmPasses).map { pass =>
       entries.map { case (name, fn) => once(spark, rec, s"$pass/$name", fn(_, dir)) }
     } finally {
@@ -83,7 +84,6 @@ object QueryProfile {
   private def once(spark: SparkSession, rec: Recorder, group: String,
       build: SparkSession => DataFrame): Run = {
     val sc = spark.sparkContext
-    graft.BenchSurface.settle()
     val (persisted0, cached0) = (sc.getPersistentRDDs.size, cachedBytes(sc))
     val compile0 = CodeGenerator.compileTime
     rec.current = group
@@ -97,6 +97,7 @@ object QueryProfile {
     System.err.println(f"[profile] $group ${failure.fold(f"$wall%.2f s")(e => s"failed: $e")}")
     drain(sc)
     val q = rec.take(group)
+    graft.BenchSurface.settle() // the next run starts after this one too
     if (failure.isDefined) return Run(failure, ListMap.empty, Nil)
     def phase(p: String) = q.phaseMs(p) / 1e3
     val mb = 1048576.0

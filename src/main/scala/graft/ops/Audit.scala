@@ -27,21 +27,19 @@ object Audit {
     // sampleKey builds a call_function("md5_long") — register it here
     // instead of relying on an upstream operator having done so
     graft.functions.GraftFunctions.register(rows.sparkSession)
-    val sample = rows
-      .filter(Corpus.sampleKey(idCol, salt) <
-        math.round(sampleRate * Corpus.SampleBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def norm(df: DataFrame): DataFrame =
       df.select(
         least(col(aCol).cast("long"), col(bCol).cast("long")).as("pa"),
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("pb"))
         .distinct()
-    val exactPairs = norm(exact(sample))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val foundPairs = norm(approx(sample))
-    val nSample = sample.count()
-    val nExact = exactPairs.count()
-    val nFound = exactPairs.join(foundPairs, Seq("pa", "pb"), "left_semi").count()
+    val (nSample, nExact, nFound) = Materialize.scoped { s =>
+      val sample = s.persisted(rows.filter(Corpus.sampleKey(idCol, salt) <
+        math.round(sampleRate * Corpus.SampleBuckets)))
+      val exactPairs = s.persisted(norm(exact(sample)))
+      val foundPairs = norm(approx(sample))
+      (sample.count(), exactPairs.count(),
+        exactPairs.join(foundPairs, Seq("pa", "pb"), "left_semi").count())
+    }
     val spark = rows.sparkSession
     import spark.implicits._
     Seq((nSample, nExact, nFound,

@@ -20,13 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Pairs come from one self-join of the cells on (keys, cell) with a < b,
   * broadcast while the index is small and sort-merged past that.
-  *
-  * Cache lifetime: [[selfPairs]] persists its index (MEMORY_AND_DISK) for
-  * the counts, both join sides and later frames on the same `index`
-  * object. Its pairs are lazy and read that cache at action time, so the
-  * caller owns the cache, as with CorpusPrep.persistIntermediate: the
-  * ContextCleaner drops unreachable blocks, and a long-lived session
-  * should `spark.catalog.clearCache()` between operator instances.
+  * [[selfPairs]] builds the index once ([[Materialize.checkpoint]]) and
+  * reads it for the bound, the purge, the sizes and both join sides.
   */
 private[ops] object Blocking {
 
@@ -59,7 +54,7 @@ private[ops] object Blocking {
 
   /** An upper bound on any block's rows: the sum over partitions of each
     * one's largest key count, or over the cap past `TrackedKeys` keys in a
-    * partition. Map-only: no shuffle, and the pass fills the index cache.
+    * partition. Map-only: no shuffle.
     */
   private def rowsPerKeyBound(index: DataFrame, keys: Seq[String], cap: Int): Long =
     index.select(keys.map(col): _*).queryExecution.toRdd.mapPartitions { rows =>
@@ -81,14 +76,14 @@ private[ops] object Blocking {
       maxBlock: Int = Int.MaxValue, idsRepeat: Boolean = false,
       cap: Int = BlockCap): DataFrame = {
     val payloads = index.columns.toSeq.filterNot(c => c == "id" || keys.contains(c))
-    index.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = purge(index, keys, maxBlock, idsRepeat)
+    val built = Materialize.checkpoint(index)
+    val kept = purge(built, keys, maxBlock, idsRepeat)
     val cells =
-      if (rowsPerKeyBound(index, keys, cap) <= cap) // every block is one cell
+      if (rowsPerKeyBound(built, keys, cap) <= cap) // every block is one cell
         kept.select(col("*"), lit(0L).as("graft_sub"), lit(0L).as("graft_i"),
           lit(0L).as("graft_j"))
       else {
-        val sizes = blockSizes(index, keys, idsRepeat)
+        val sizes = blockSizes(built, keys, idsRepeat)
         val s = when(col(Size).isNull, lit(1L)).otherwise(ceil(col(Size) / cap))
         // each row joins the s cells (min(sub, u), max(sub, u)) of its block
         kept.join(broadcast(sizes.filter(col(Size) > cap)), keys, "left_outer")

@@ -67,9 +67,8 @@ object Clustering {
     require(k > 0 && iters >= 0, s"k=$k iters=$iters")
     val spark = vecs.sparkSession
     import spark.implicits._
-    val quant = quantized(vecs, scale, id, vec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { s =>
+      val quant = s.persisted(quantized(vecs, scale, id, vec))
       var cents: Array[Array[Long]] = quant.orderBy(col("id")).limit(k)
         .as[(Long, Seq[Long])].collect().map(_._2.toArray)
       require(cents.nonEmpty, "no input vectors to seed from")
@@ -107,7 +106,7 @@ object Clustering {
         cb.destroy()
       }
       cents
-    } finally quant.unpersist(): Unit
+    }
   }
 
   /** Assign every vector to its nearest centroid (exact integer squared
@@ -175,8 +174,8 @@ object Clustering {
     val spark = vecs.sparkSession
     graft.functions.GraftFunctions.register(spark) // sampleKey -> md5_long
     import spark.implicits._
-    val asn = kmeansMicro(vecs, k, iters, scale, id, vec)
-      .localCheckpoint() // sizes + filter read it; assignment runs once
+    // sizes + filter read it; assignment runs once
+    val asn = Materialize.checkpoint(kmeansMicro(vecs, k, iters, scale, id, vec))
     val sizes = asn.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val threshOf = sizes.toSeq.map { case (c, n) =>

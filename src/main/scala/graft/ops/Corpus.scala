@@ -958,7 +958,7 @@ object Corpus {
     * sums (one long each) come to the driver, prefix offsets broadcast
     * back, and a streaming mapPartitions pass emits running sums — two
     * narrow jobs, O(partitions) driver state, O(1) task memory. The
-    * layout is localCheckpoint()ed between the two jobs because the
+    * layout is checkpointed between the two jobs because the
     * range partitioner SAMPLES to place boundaries: an uncached
     * recompute between jobs could re-sample different boundaries and
     * misalign the offsets. The checkpoint freezes the partitioning (an
@@ -973,8 +973,7 @@ object Corpus {
       parts: Int = 0): DataFrame = {
     require(budget >= 0L, s"budget $budget")
     val spark = docs.sparkSession
-    val narrow = budgetLayout(docs, quality, id, nTokens, parts)
-      .localCheckpoint()
+    val narrow = Materialize.checkpoint(budgetLayout(docs, quality, id, nTokens, parts))
     val nParts = narrow.rdd.getNumPartitions
     val perPart = narrow
       .select(spark_partition_id().as("pid"), col("n_tokens"))

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Every candidate-pair operator here builds only its (key, id, payload)
   * index and its verification: pairs come from [[Blocking.selfPairs]],
   * which owns the purge, the hot-block split, the enumeration and the one
-  * persist of the index (its cache-lifetime contract applies).
+  * checkpoint of the index.
   */
 object Dedup {
 
@@ -274,10 +274,11 @@ object Dedup {
       .otherwise(array_distinct(transform(
         sequence(lit(0), size(toksC) - n),
         i => concat_ws(" ", slice(toksC, i + 1, lit(n))))))
-    val index = Partitioning.spreadSmall(
+    // checkpointed once for both Blocking calls
+    val index = Materialize.checkpoint(Partitioning.spreadSmall(
         docs.select(col("doc_id").cast("long").as("id"), col("text")))
       .select(col("id"), explode(shC).as("graft_sh"))
-      .select(col("id"), xxhash64(col("graft_sh")).as("g"))
+      .select(col("id"), xxhash64(col("graft_sh")).as("g")))
     val inter = Blocking.selfPairs(index, Seq("g"), maxDocFreq)
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
     // sizes over the SAME purged universe as the intersection: with the
@@ -285,8 +286,7 @@ object Dedup {
     // shingle sets. Deriving sizes from the unfiltered index would divide
     // a kept-only intersection by full-set sizes — two exact duplicates
     // that are mostly boilerplate would then score near 0 and slip the
-    // production near-dup net entirely. (`index` reads from the cache
-    // selfPairs put it in.)
+    // production near-dup net entirely.
     val sizes = Blocking.purge(index, Seq("g"), maxDocFreq)
       .groupBy(col("id")).agg(count(lit(1)).as("n"))
     val pairs = inter
@@ -350,8 +350,8 @@ object Dedup {
     * ordering to pick the SAME keeper as the distributed path.
     *
     * Scale shape: each round is two joins + one aggregate on the (small)
-    * pair set, not the corpus; persist-per-round cuts the lineage so the
-    * plan never grows.
+    * pair set, not the corpus; a checkpoint per round cuts the lineage so
+    * the plan never grows.
     */
   def duplicateClusters(pairs: DataFrame, maxRounds: Int = 64,
       driverUnionFindMax: Long = 1000000L,
@@ -374,61 +374,59 @@ object Dedup {
     // union-find is idempotent per edge and the pointer-jumping
     // min-aggregations absorb repeats (they only made the
     // driverUnionFindMax gate count conservative).
-    val edges = pairs.select(aCol.as("src"), bCol.as("dst"))
-      .union(pairs.select(bCol.as("src"), aCol.as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Hybrid: the pair set is tiny relative to the corpus for any sane
-    // near-dup threshold (it's the DUPLICATES, not the documents), so up
-    // to `driverUnionFindMax` edges (16 bytes each — the cap is ~16 MB)
-    // a driver-side union-find with path compression replaces the whole
-    // iterative job: one collect instead of 2 joins + 1 agg + 1 count PER
-    // ROUND. The distributed pointer-jumping loop below remains the path
-    // for genuinely huge duplicate graphs (boilerplate-heavy corpora).
-    val edgeCount = edges.count()
-    if (edgeCount <= driverUnionFindMax) {
-      val out =
-        if (numericIds)
-          spark.createDataset(unionFind(edges.as[(Long, Long)].collect()))
-        else
-          spark.createDataset(unionFind(
-            edges.as[(String, String)].collect())(utf8ByteOrdering))
-      edges.unpersist()
-      return out.toDF("doc_id", "cluster").orderBy(col("doc_id"))
+    Materialize.scoped { s =>
+      val edges = s.persisted(pairs.select(aCol.as("src"), bCol.as("dst"))
+        .union(pairs.select(bCol.as("src"), aCol.as("dst"))))
+      // Hybrid: the pair set is tiny relative to the corpus for any sane
+      // near-dup threshold (it's the DUPLICATES, not the documents), so up
+      // to `driverUnionFindMax` edges (16 bytes each — the cap is ~16 MB)
+      // a driver-side union-find with path compression replaces the whole
+      // iterative job: one collect instead of 2 joins + 1 agg + 1 count PER
+      // ROUND. The distributed pointer-jumping loop below remains the path
+      // for genuinely huge duplicate graphs (boilerplate-heavy corpora).
+      if (edges.count() <= driverUnionFindMax) {
+        val out =
+          if (numericIds)
+            spark.createDataset(unionFind(edges.as[(Long, Long)].collect()))
+          else
+            spark.createDataset(unionFind(
+              edges.as[(String, String)].collect())(utf8ByteOrdering))
+        out.toDF("doc_id", "cluster").orderBy(col("doc_id"))
+      } else {
+        // a checkpoint per round: the pointer-jumping round references
+        // `labels` three times, so without a REAL lineage cut the logical plan
+        // grows ~3^rounds and plan stringification alone OOMs the driver
+        var labels = Materialize.checkpoint(
+          edges.groupBy(col("src")).agg(min(col("dst")).as("m"))
+            .select(col("src").as("id"), least(col("src"), col("m")).as("cluster")))
+        var changed = 1L
+        var round = 0
+        while (changed > 0) {
+          if (round >= maxRounds)
+            throw new IllegalStateException(
+              s"duplicateClusters did not converge in $maxRounds rounds " +
+                "(pointer jumping needs ~log2(diameter); raise maxRounds)")
+          // neighbor's current label, propagated across each edge
+          val viaNeighbor = edges
+            .join(labels.withColumnRenamed("id", "dst"), "dst")
+            .select(col("src").as("id"), col("cluster"))
+          // pointer jumping: the label of my label
+          val viaPointer = labels.toDF("id", "lbl")
+            .join(labels.toDF("lbl", "lbl2"), "lbl")
+            .select(col("id"), col("lbl2").as("cluster"))
+          val next = Materialize.checkpoint(labels.select(col("id"), col("cluster"))
+            .union(viaNeighbor)
+            .union(viaPointer)
+            .groupBy(col("id")).agg(min(col("cluster")).as("cluster")))
+          changed = next.join(labels.withColumnRenamed("cluster", "old"), "id")
+            .filter(col("cluster") < col("old")).count()
+          labels = next
+          round += 1
+        }
+        labels.select(col("id").as("doc_id"), col("cluster"))
+          .orderBy(col("doc_id"))
+      }
     }
-    // localCheckpoint (not persist): the pointer-jumping round references
-    // `labels` three times, so without a REAL lineage cut the logical plan
-    // grows ~3^rounds and plan stringification alone OOMs the driver
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("m"))
-      .select(col("src").as("id"), least(col("src"), col("m")).as("cluster"))
-      .localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      if (round >= maxRounds)
-        throw new IllegalStateException(
-          s"duplicateClusters did not converge in $maxRounds rounds " +
-            "(pointer jumping needs ~log2(diameter); raise maxRounds)")
-      // neighbor's current label, propagated across each edge
-      val viaNeighbor = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("cluster"))
-      // pointer jumping: the label of my label
-      val viaPointer = labels.toDF("id", "lbl")
-        .join(labels.toDF("lbl", "lbl2"), "lbl")
-        .select(col("id"), col("lbl2").as("cluster"))
-      val next = labels.select(col("id"), col("cluster"))
-        .union(viaNeighbor)
-        .union(viaPointer)
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-        .localCheckpoint()
-      changed = next.join(labels.withColumnRenamed("cluster", "old"), "id")
-        .filter(col("cluster") < col("old")).count()
-      labels = next
-      round += 1
-    }
-    edges.unpersist()
-    labels.select(col("id").as("doc_id"), col("cluster"))
-      .orderBy(col("doc_id"))
   }
 
   /** Pick each duplicate cluster's REPRESENTATIVE by quality instead of

@@ -69,10 +69,10 @@ object Dsir {
     }
 
     // the raw side's gram split + md5 bucketing feeds BOTH the fit
-    // histogram and the scoring pass — localCheckpoint it so that work
+    // histogram and the scoring pass — checkpoint it so that work
     // (the dominant cost: one md5 per gram instance) runs once, and the
     // int bucket arrays, not the text, are what's retained
-    val narrow = gramBuckets(raw).localCheckpoint()
+    val narrow = Materialize.checkpoint(gramBuckets(raw))
     // ONE histogram job for both sides (r8): the target and raw
     // histograms used to be two separate collect actions; a side tag +
     // one groupBy halves the fit's job count and the result is the same

@@ -64,7 +64,7 @@ object LinkGraph {
     * after round r, so `maxHops` is covered in `ceil(log2(maxHops))`
     * self-joins — 4 shuffle rounds for the default 16, vs 16 for a naive
     * walk. Each round is a narrow (url, url, int, bool) join keyed on the
-    * current node; rounds are `localCheckpoint`ed (the
+    * current node; rounds are checkpointed (the
     * [[Dedup.duplicateClusters]] pointer-jumping convention) because each
     * doubling round references the previous round TWICE — without the
     * cut, the plan tree doubles per round.
@@ -88,11 +88,10 @@ object LinkGraph {
     // done = v has no outgoing edge (terminal). Left join against the
     // distinct source keys; marker column null ⇔ terminal.
     val srcKeys = fm.select(col("u").as("graft_k"), lit(1).as("graft_m"))
-    var state = fm
+    var state = Materialize.checkpoint(fm
       .join(srcKeys, col("v") === col("graft_k"), "left")
       .select(col("u"), col("v"), lit(1L).as("h"),
-        col("graft_m").isNull.as("done"))
-      .localCheckpoint()
+        col("graft_m").isNull.as("done")))
     var covered = 1L
     // early exit (r8): once every chain is resolved, a further doubling
     // round is the identity (advanced is empty) — probing the already-
@@ -106,8 +105,8 @@ object LinkGraph {
         .join(b, col("a.v") === col("b.u"))
         .select(col("a.u").as("u"), col("b.v").as("v"),
           (col("a.h") + col("b.h")).as("h"), col("b.done").as("done"))
-      state = state.filter(col("done")).unionByName(advanced)
-        .localCheckpoint()
+      state = Materialize.checkpoint(
+        state.filter(col("done")).unionByName(advanced))
       covered *= 2
     }
     state.select(col("u").as(srcCol),
@@ -201,7 +200,7 @@ object LinkGraph {
     *
     * Output: (`host_a`, `host_b`, `shared_docs`) with host_a < host_b.
     * Plan: two narrow id-keyed joins (pairs are ids only; urls project
-    * to hosts before the join, and the projection is localCheckpointed
+    * to hosts before the join, and the projection is checkpointed
     * once so the corpus-sized docs scan + hostOf regex chain pay once,
     * not once per join side), one map-side-combinable count on the
     * host-pair key. The kept pairs are edges: mirror GROUPS (a site with
@@ -214,10 +213,9 @@ object LinkGraph {
   def mirrorHosts(docs: DataFrame, pairs: DataFrame, minShared: Long = 3L,
       urlCol: String = "url", idACol: String = "doc_a",
       idBCol: String = "doc_b"): DataFrame = {
-    val hosts = docs
+    val hosts = Materialize.checkpoint(docs
       .select(col("doc_id"), Web.hostOf(col(urlCol)).as("graft_host"))
-      .filter(col("graft_host").isNotNull && col("graft_host") =!= "")
-      .localCheckpoint()
+      .filter(col("graft_host").isNotNull && col("graft_host") =!= ""))
     val ha = hosts.select(col("doc_id").as(idACol),
       col("graft_host").as("graft_host_a"))
     val hb = hosts.select(col("doc_id").as(idBCol),
@@ -257,7 +255,7 @@ object LinkGraph {
     * Each iteration is one narrow (url, double) shuffle: contributions
     * aggregate per dst after a rank⋈edge join, the dangling mass rides a
     * broadcast single-row cross join (NO driver collect — the whole loop
-    * stays one lazy plan), and ranks `localCheckpoint` per iteration to
+    * stays one lazy plan), and ranks are checkpointed per iteration to
     * keep the plan tree linear in `iterations` rather than exponential
     * (each step references the previous ranks twice: contributions +
     * dangling sum).
@@ -270,15 +268,13 @@ object LinkGraph {
       damping: Double = 0.85, srcCol: String = "url",
       dstCol: String = "dst_url"): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges
+    val e = Materialize.checkpoint(edges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(col(srcCol).as("graft_src"), col(dstCol).as("graft_dst"))
-      .distinct()
-      .localCheckpoint()
-    val nodes = e.select(col("graft_src").as("url"))
+      .distinct())
+    val nodes = Materialize.checkpoint(e.select(col("graft_src").as("url"))
       .union(e.select(col("graft_dst").as("url")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // distinct key name: outdeg derives FROM e, and the contribution
     // step joins both — a shared column name would be a self-join
     // ambiguity
@@ -290,12 +286,10 @@ object LinkGraph {
     // the dangling-node SET is static for the whole run (it depends only
     // on the checkpointed edge set) — precompute it once instead of
     // re-deriving it per iteration through a full ranks⋈outdeg left join
-    val dangling = nodes
-      .join(outdeg, col("url") === col("graft_od_src"), "left_anti")
-      .localCheckpoint()
-    var ranks = nodes.crossJoin(nFrame)
-      .select(col("url"), (lit(1.0) / col("graft_n")).as("rank"))
-      .localCheckpoint()
+    val dangling = Materialize.checkpoint(nodes
+      .join(outdeg, col("url") === col("graft_od_src"), "left_anti"))
+    var ranks = Materialize.checkpoint(nodes.crossJoin(nFrame)
+      .select(col("url"), (lit(1.0) / col("graft_n")).as("rank")))
     for (_ <- 1 to iterations) {
       val contribs = ranks
         .join(outdeg, col("url") === col("graft_od_src"))
@@ -305,15 +299,14 @@ object LinkGraph {
       val danglingMass = broadcast(ranks
         .join(dangling, Seq("url"), "left_semi")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("graft_dm")))
-      ranks = nodes
+      ranks = Materialize.checkpoint(nodes
         .join(contribs, nodes("url") === col("graft_dst"), "left")
         .crossJoin(danglingMass)
         .crossJoin(nFrame)
         .select(nodes("url"),
           (lit(1.0 - damping) / col("graft_n") + lit(damping) *
             (coalesce(col("graft_contrib"), lit(0.0)) +
-              col("graft_dm") / col("graft_n"))).as("rank"))
-        .localCheckpoint()
+              col("graft_dm") / col("graft_n"))).as("rank")))
     }
     ranks
   }

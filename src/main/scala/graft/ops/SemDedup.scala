@@ -107,8 +107,7 @@ object SemDedup {
     * centroid-angular-bound trick in `Similarity.ivfTopK` instead. The
     * refine loop scans the source once per Lloyd round (cached inside
     * refineCentroids) and the assignment pass scans it once more — at
-    * 1e9-embedding scale persist `vecs` upstream; like
-    * CorpusPrep.persistIntermediate, callers own cache lifetime.
+    * 1e9-embedding scale checkpoint `vecs` upstream ([[Materialize]]).
     */
   def semDedupKmeans(vecs: DataFrame, nClusters: Int = 8, iters: Int = 3,
       threshold: Double = 0.9, sortOutput: Boolean = true): DataFrame = {
@@ -170,54 +169,54 @@ object SemDedup {
     }
     // unit-normalized ONCE and persisted as doubles: every Lloyd round
     // reads the converted form instead of re-normalizing per iteration
-    val corp = vecs.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .map { case (id, e) => (id, unit(e.map(_.toDouble).toArray)) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents: Array[Array[Double]] = corp.orderBy(col("_1")).limit(k)
-      .collect().map(_._2)
-    (0 until iters).foreach { _ =>
-      val cb = spark.sparkContext.broadcast(cents)
-      // one pass: per-partition (cluster -> fixed-point component sums),
-      // tiny k x dim output per partition, Long-exact merge driver-side
-      val partials = corp.mapPartitions { it =>
-        val cs = cb.value
-        val sums = Array.ofDim[Long](cs.length,
-          if (cs.isEmpty) 0 else cs(0).length)
-        val seen = new Array[Boolean](cs.length)
-        it.foreach { case (_, u) =>
-          var best = 0; var bestDot = Double.NegativeInfinity; var i = 0
-          while (i < cs.length) {
-            var d = 0.0; var j = 0
-            val m = math.min(cs(i).length, u.length)
-            while (j < m) { d += cs(i)(j) * u(j); j += 1 }
-            if (d > bestDot) { bestDot = d; best = i }
-            i += 1
+    Materialize.scoped { s =>
+      val corp = s.persisted(vecs.select(col("vec_id").cast("long"), col("embedding"))
+        .as[(Long, Seq[Float])]
+        .map { case (id, e) => (id, unit(e.map(_.toDouble).toArray)) })
+      var cents: Array[Array[Double]] = corp.orderBy(col("_1")).limit(k)
+        .collect().map(_._2)
+      (0 until iters).foreach { _ =>
+        val cb = spark.sparkContext.broadcast(cents)
+        // one pass: per-partition (cluster -> fixed-point component sums),
+        // tiny k x dim output per partition, Long-exact merge driver-side
+        val partials = corp.mapPartitions { it =>
+          val cs = cb.value
+          val sums = Array.ofDim[Long](cs.length,
+            if (cs.isEmpty) 0 else cs(0).length)
+          val seen = new Array[Boolean](cs.length)
+          it.foreach { case (_, u) =>
+            var best = 0; var bestDot = Double.NegativeInfinity; var i = 0
+            while (i < cs.length) {
+              var d = 0.0; var j = 0
+              val m = math.min(cs(i).length, u.length)
+              while (j < m) { d += cs(i)(j) * u(j); j += 1 }
+              if (d > bestDot) { bestDot = d; best = i }
+              i += 1
+            }
+            seen(best) = true
+            val row = sums(best)
+            var j = 0
+            val m = math.min(row.length, u.length)
+            while (j < m) { row(j) += math.round(u(j) * FixedPointScale); j += 1 }
           }
-          seen(best) = true
-          val row = sums(best)
-          var j = 0
-          val m = math.min(row.length, u.length)
-          while (j < m) { row(j) += math.round(u(j) * FixedPointScale); j += 1 }
+          (0 until cs.length).iterator.filter(seen)
+            .map(c => (c, sums(c).toSeq))
         }
-        (0 until cs.length).iterator.filter(seen)
-          .map(c => (c, sums(c).toSeq))
+        // merge partials on executors: Long addition commutes/associates, so
+        // ANY reduce order gives bit-identical sums; k x dim reaches the driver
+        val sums = partials.groupByKey(_._1)
+          .reduceGroups { (a, b) =>
+            (a._1, a._2.zip(b._2).map { case (x, y) => x + y })
+          }.map(_._2).collect()
+        val next = cents.map(_.clone())
+        sums.foreach { case (c, acc) =>
+          next(c) = unit(acc.map(_.toDouble / FixedPointScale).toArray)
+        }
+        cents = next
+        cb.destroy()
       }
-      // merge partials on executors: Long addition commutes/associates, so
-      // ANY reduce order gives bit-identical sums; k x dim reaches the driver
-      val sums = partials.groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          (a._1, a._2.zip(b._2).map { case (x, y) => x + y })
-        }.map(_._2).collect()
-      val next = cents.map(_.clone())
-      sums.foreach { case (c, acc) =>
-        next(c) = unit(acc.map(_.toDouble / FixedPointScale).toArray)
-      }
-      cents = next
-      cb.destroy()
+      cents
     }
-    corp.unpersist()
-    cents
   }
 
   /** The shared duplicate-marking layer over an assignment
@@ -229,15 +228,15 @@ object SemDedup {
       threshold: Double, sortOutput: Boolean): DataFrame = {
     val spark = assignment.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val index = assignment.select(col("cluster_id"), col("vec_id").as("id"),
-      col("embedding").as("e"), expr("vec_norm(embedding)").as("n"))
+    // checkpointed once for selfPairs and the join-back
+    val index = Materialize.checkpoint(assignment.select(col("cluster_id"),
+      col("vec_id").as("id"), col("embedding").as("e"), expr("vec_norm(embedding)").as("n")))
     val dupOf = Blocking.selfPairs(index, Seq("cluster_id"))
       .withColumn("cosine", round(
         when(col("n_a") * col("n_b") === 0.0, lit(0.0))
           .otherwise(expr("dot_product(e_a, e_b)") / (col("n_a") * col("n_b"))), 6))
       .filter(col("cosine") >= threshold)
       .groupBy(col("b").as("vec_id")).agg(min(col("a")).as("dup_of"))
-    // `index` reads from the cache selfPairs put it in
     val out = index.select(col("id").as("vec_id"), col("cluster_id"))
       .join(dupOf, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster_id"),

@@ -15,12 +15,6 @@ import org.apache.spark.sql.functions._
   *    shuffle on the bucket key, search within buckets — the 100 TB path
   *    when the query set is large too.
   *  - cosine near-dup: LSH buckets + verified cosine >= threshold.
-  *
-  * Cache lifetime: lshTopK/cosineNearDupPairs return LAZY DataFrames
-  * whose plan reads an internal persist/broadcast at action time, so
-  * those cannot be released before returning — the caller-owned-lifetime
-  * contract of graft.ops.Blocking applies (ivfTopK, which materializes its
-  * result driver-side, releases its own caches before returning).
   */
 object Similarity extends Serializable {
 
@@ -222,11 +216,6 @@ object Similarity extends Serializable {
     val spark = corpus.sparkSession
     import spark.implicits._
 
-    val corp = corpus.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .map { case (id, e) => (id, e, norm(asArray(e))) }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     def unit(e: Seq[Float], n: Double): Array[Double] = {
       val a = new Array[Double](e.length)
       if (n > 0) { var i = 0; while (i < a.length) { a(i) = e(i) / n; i += 1 } }
@@ -249,148 +238,154 @@ object Similarity extends Serializable {
       best
     }
 
-    // deterministic init: the nClusters smallest vec_ids (normalized)
-    var centroids: Array[Array[Double]] = corp
-      .orderBy(col("_1")).limit(nClusters).collect()
-      .map { case (_, e, n) => unit(e, n) }
-    if (centroids.isEmpty) return spark.emptyDataset[Scored]
-      .toDF("query_id", "vec_id", "score")
+    val merged: Seq[Scored] = Materialize.scoped { s =>
+      val corp = s.persisted(corpus.select(col("vec_id").cast("long"), col("embedding"))
+        .as[(Long, Seq[Float])]
+        .map { case (id, e) => (id, e, norm(asArray(e))) })
 
-    (0 until kmeansIters).foreach { _ =>
-      val cb = spark.sparkContext.broadcast(centroids)
-      val sums = corp.map { case (_, e, n) =>
-        val u = unit(e, n)
-        (nearest(cb.value, u), (u, 1L))
-      }.groupByKey(_._1)
-        .mapGroups { (c, it) =>
-          var cnt = 0L
-          var acc: Array[Double] = null
-          it.foreach { case (_, (u, _)) =>
-            if (acc == null) acc = u.clone()
-            else {
-              // min-guard: a ragged (malformed shorter) embedding must
-              // degrade like every other Similarity path, not AIOOBE the
-              // task — the 'never returns a wrong answer' contract only
-              // holds if the job survives the row
-              var i = 0
-              val m = math.min(acc.length, u.length)
-              while (i < m) { acc(i) += u(i); i += 1 }
-            }
-            cnt += 1
-          }
-          (c, acc, cnt)
-        }.collect()
-      val next = centroids.map(_.clone())
-      sums.foreach { case (c, acc, cnt) =>
-        if (cnt > 0) {
-          val nn = math.sqrt(dotD(acc, acc))
-          if (nn > 0) { var i = 0; while (i < acc.length) { acc(i) /= nn; i += 1 } }
-          next(c) = acc
-        }
-      }
-      centroids = next
-      cb.destroy()
-    }
-
-    val cb = spark.sparkContext.broadcast(centroids)
-    // final assignment + per-cluster angular radius (zero-norm members
-    // force radius = pi so their cluster is never pruned — conservative)
-    val assigned = corp.map { case (id, e, n) =>
-      val u = unit(e, n)
-      val c = nearest(cb.value, u)
-      val ang = if (n == 0) math.Pi else clampAcos(dotD(cb.value(c), u))
-      (c, id, e, n, ang)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val radius: Map[Int, Double] = assigned
-      .groupByKey(_._1).mapGroups((c, it) => (c, it.map(_._5).max))
-      .collect().toMap
-
-    val qs = {
-      val raw = queries.select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Seq[Float])].collect().distinct // see bruteForceTopK
-      // qUnits below is keyed by vec_id: two surviving rows sharing a
-      // vec_id with DIFFERENT embeddings would collapse to one unit
-      // vector, silently mis-pruning clusters that hold true neighbors
-      // of the other — the id is the result key, so conflicting
-      // embeddings under one id is caller error; fail loudly
-      val dup = raw.groupBy(_._1).filter(_._2.length > 1).keys
-      require(dup.isEmpty,
-        s"ivfTopK: query vec_id(s) ${dup.toSeq.sorted.take(5).mkString(", ")} " +
-          "carry conflicting embeddings — vec_id must uniquely identify a query vector")
-      raw.map { case (id, e) => (id, asArray(e), norm(asArray(e))) }
-    }
-
-    // unit query vectors hoisted out of the per-cluster bound loop
-    // (phase 1 + phase 2 evaluate the bound ~2*Q*C times; the conversion
-    // is invariant per query)
-    val qUnits: Map[Long, Array[Double]] =
-      qs.map(q => q._1 -> unit(q._2.toSeq, q._3)).toMap
-
-    /** upper bound on cos(q, any member of cluster c) */
-    def bound(q: (Long, Array[Float], Double), c: Int): Double = {
-      if (q._3 == 0) return 1.0 // zero-norm query: scan everything
-      val theta = clampAcos(dotD(cb.value(c), qUnits(q._1)))
-      math.cos(math.max(0.0, theta - radius.getOrElse(c, math.Pi)))
-    }
-
-    /** one heap pass over `assigned`, each query restricted to its cluster
-      * set; merged driver-side (queries x k x partitions rows — small).
-      */
-    def scanTopK(allowed: Map[Long, Set[Int]]): Map[Long, Seq[Scored]] = {
-      val act = allowed.filter(_._2.nonEmpty)
-      if (act.isEmpty) return Map.empty
-      val qb = spark.sparkContext.broadcast(
-        qs.filter(q => act.contains(q._1)).map(q => (q._1, q._2, q._3, act(q._1))))
-      val partial = assigned.mapPartitions { it =>
-        val qss = qb.value
-        val worstFirst: Ordering[Scored] = Ordering.by(s => (-s.score, s.vec_id))
-        val heaps = qss.map(_ => new scala.collection.mutable.PriorityQueue[Scored]()(worstFirst))
-        it.foreach { case (c, id, e, nv, _) =>
-          val v = asArray(e)
-          var i = 0
-          while (i < qss.length) {
-            val (qid, qv, qn, set) = qss(i)
-            if (set.contains(c)) {
-              val denom = nv * qn
-              val sc = round6(if (denom == 0) 0.0 else dot(qv, v) / denom)
-              val h = heaps(i)
-              if (h.size < k) h.enqueue(Scored(qid, id, sc))
-              else {
-                val w = h.head
-                if (sc > w.score || (sc == w.score && id < w.vec_id)) {
-                  h.dequeue(); h.enqueue(Scored(qid, id, sc))
+      // deterministic init: the nClusters smallest vec_ids (normalized)
+      var centroids: Array[Array[Double]] = corp
+        .orderBy(col("_1")).limit(nClusters).collect()
+        .map { case (_, e, n) => unit(e, n) }
+      if (centroids.isEmpty) Seq.empty[Scored]
+      else {
+        (0 until kmeansIters).foreach { _ =>
+          val cb = spark.sparkContext.broadcast(centroids)
+          val sums = corp.map { case (_, e, n) =>
+            val u = unit(e, n)
+            (nearest(cb.value, u), (u, 1L))
+          }.groupByKey(_._1)
+            .mapGroups { (c, it) =>
+              var cnt = 0L
+              var acc: Array[Double] = null
+              it.foreach { case (_, (u, _)) =>
+                if (acc == null) acc = u.clone()
+                else {
+                  // min-guard: a ragged (malformed shorter) embedding must
+                  // degrade like every other Similarity path, not AIOOBE the
+                  // task — the 'never returns a wrong answer' contract only
+                  // holds if the job survives the row
+                  var i = 0
+                  val m = math.min(acc.length, u.length)
+                  while (i < m) { acc(i) += u(i); i += 1 }
                 }
+                cnt += 1
+              }
+              (c, acc, cnt)
+            }.collect()
+          val next = centroids.map(_.clone())
+          sums.foreach { case (c, acc, cnt) =>
+            if (cnt > 0) {
+              val nn = math.sqrt(dotD(acc, acc))
+              if (nn > 0) { var i = 0; while (i < acc.length) { acc(i) /= nn; i += 1 } }
+              next(c) = acc
+            }
+          }
+          centroids = next
+          cb.destroy()
+        }
+
+        val cb = spark.sparkContext.broadcast(centroids)
+        // final assignment + per-cluster angular radius (zero-norm members
+        // force radius = pi so their cluster is never pruned — conservative)
+        val assigned = s.persisted(corp.map { case (id, e, n) =>
+          val u = unit(e, n)
+          val c = nearest(cb.value, u)
+          val ang = if (n == 0) math.Pi else clampAcos(dotD(cb.value(c), u))
+          (c, id, e, n, ang)
+        })
+        val radius: Map[Int, Double] = assigned
+          .groupByKey(_._1).mapGroups((c, it) => (c, it.map(_._5).max))
+          .collect().toMap
+
+        val qs = {
+          val raw = queries.select(col("vec_id").cast("long"), col("embedding"))
+            .as[(Long, Seq[Float])].collect().distinct // see bruteForceTopK
+          // qUnits below is keyed by vec_id: two surviving rows sharing a
+          // vec_id with DIFFERENT embeddings would collapse to one unit
+          // vector, silently mis-pruning clusters that hold true neighbors
+          // of the other — the id is the result key, so conflicting
+          // embeddings under one id is caller error; fail loudly
+          val dup = raw.groupBy(_._1).filter(_._2.length > 1).keys
+          require(dup.isEmpty,
+            s"ivfTopK: query vec_id(s) ${dup.toSeq.sorted.take(5).mkString(", ")} " +
+              "carry conflicting embeddings — vec_id must uniquely identify a query vector")
+          raw.map { case (id, e) => (id, asArray(e), norm(asArray(e))) }
+        }
+
+        // unit query vectors hoisted out of the per-cluster bound loop
+        // (phase 1 + phase 2 evaluate the bound ~2*Q*C times; the conversion
+        // is invariant per query)
+        val qUnits: Map[Long, Array[Double]] =
+          qs.map(q => q._1 -> unit(q._2.toSeq, q._3)).toMap
+
+        /** upper bound on cos(q, any member of cluster c) */
+        def bound(q: (Long, Array[Float], Double), c: Int): Double = {
+          if (q._3 == 0) return 1.0 // zero-norm query: scan everything
+          val theta = clampAcos(dotD(cb.value(c), qUnits(q._1)))
+          math.cos(math.max(0.0, theta - radius.getOrElse(c, math.Pi)))
+        }
+
+        /** one heap pass over `assigned`, each query restricted to its cluster
+          * set; merged driver-side (queries x k x partitions rows — small).
+          */
+        def scanTopK(allowed: Map[Long, Set[Int]]): Map[Long, Seq[Scored]] = {
+          val act = allowed.filter(_._2.nonEmpty)
+          if (act.isEmpty) return Map.empty
+          val qb = spark.sparkContext.broadcast(
+            qs.filter(q => act.contains(q._1)).map(q => (q._1, q._2, q._3, act(q._1))))
+          val partial = assigned.mapPartitions { it =>
+            val qss = qb.value
+            val worstFirst: Ordering[Scored] = Ordering.by(s => (-s.score, s.vec_id))
+            val heaps = qss.map(_ => new scala.collection.mutable.PriorityQueue[Scored]()(worstFirst))
+            it.foreach { case (c, id, e, nv, _) =>
+              val v = asArray(e)
+              var i = 0
+              while (i < qss.length) {
+                val (qid, qv, qn, set) = qss(i)
+                if (set.contains(c)) {
+                  val denom = nv * qn
+                  val sc = round6(if (denom == 0) 0.0 else dot(qv, v) / denom)
+                  val h = heaps(i)
+                  if (h.size < k) h.enqueue(Scored(qid, id, sc))
+                  else {
+                    val w = h.head
+                    if (sc > w.score || (sc == w.score && id < w.vec_id)) {
+                      h.dequeue(); h.enqueue(Scored(qid, id, sc))
+                    }
+                  }
+                }
+                i += 1
               }
             }
-            i += 1
+            heaps.iterator.flatMap(_.iterator)
+          }.collect()
+          partial.groupBy(_.query_id).map { case (q, arr) =>
+            q -> arr.toSeq.sortBy(s => (-s.score, s.vec_id)).take(k)
           }
         }
-        heaps.iterator.flatMap(_.iterator)
-      }.collect()
-      partial.groupBy(_.query_id).map { case (q, arr) =>
-        q -> arr.toSeq.sortBy(s => (-s.score, s.vec_id)).take(k)
+
+        val allClusters = radius.keySet
+        // phase 1: the 2 most promising clusters per query
+        val p1: Map[Long, Set[Int]] = qs.map { q =>
+          q._1 -> allClusters.toSeq.sortBy(c => -bound(q, c)).take(2).toSet
+        }.toMap
+        val r1 = scanTopK(p1)
+        // phase 2: every unscanned cluster that could still beat the kth best
+        val p2: Map[Long, Set[Int]] = qs.map { q =>
+          val got = r1.getOrElse(q._1, Seq.empty)
+          val sk = if (got.length >= k) got.last.score else -2.0
+          q._1 -> (allClusters -- p1(q._1)).filter(c => bound(q, c) >= sk - 1e-6)
+        }.toMap
+        val r2 = scanTopK(p2)
+
+        cb.destroy()
+        qs.flatMap { q =>
+          (r1.getOrElse(q._1, Seq.empty) ++ r2.getOrElse(q._1, Seq.empty))
+            .sortBy(s => (-s.score, s.vec_id)).take(k)
+        }.toSeq
       }
     }
-
-    val allClusters = radius.keySet
-    // phase 1: the 2 most promising clusters per query
-    val p1: Map[Long, Set[Int]] = qs.map { q =>
-      q._1 -> allClusters.toSeq.sortBy(c => -bound(q, c)).take(2).toSet
-    }.toMap
-    val r1 = scanTopK(p1)
-    // phase 2: every unscanned cluster that could still beat the kth best
-    val p2: Map[Long, Set[Int]] = qs.map { q =>
-      val got = r1.getOrElse(q._1, Seq.empty)
-      val sk = if (got.length >= k) got.last.score else -2.0
-      q._1 -> (allClusters -- p1(q._1)).filter(c => bound(q, c) >= sk - 1e-6)
-    }.toMap
-    val r2 = scanTopK(p2)
-
-    val merged = qs.flatMap { q =>
-      (r1.getOrElse(q._1, Seq.empty) ++ r2.getOrElse(q._1, Seq.empty))
-        .sortBy(s => (-s.score, s.vec_id)).take(k)
-    }.toSeq
-    assigned.unpersist(); corp.unpersist(); cb.destroy()
     spark.createDataset(merged)
       .toDF("query_id", "vec_id", "score")
       .withColumn("score", round(col("score"), 6))

@@ -136,15 +136,13 @@ object Web {
     * 8-byte md5_long keys instead.
     */
   def urlDedup(docs: DataFrame, urlCol: String = "url"): DataFrame = {
-    // persisted: the canonical projection is read three times (keeper
+    // checkpointed: the canonical projection is read three times (keeper
     // aggregation, join-back, null branch) and Catalyst does not dedupe
     // identical subtrees — without this the canonicalUrl regex chain
-    // runs 3x per row. Narrow (id, url) rows; caller-owned lifetime as
-    // documented on Dedup's internal indexes.
-    val withCanon = Partitioning.spreadSmall(
+    // runs 3x per row
+    val withCanon = Materialize.checkpoint(Partitioning.spreadSmall(
         docs.select(col("doc_id"), col(urlCol)))
-      .select(col("doc_id"), canonicalUrl(col(urlCol)).as("canonical_url"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), canonicalUrl(col(urlCol)).as("canonical_url")))
     val nonNull = withCanon.filter(col("canonical_url").isNotNull)
     val keepers = nonNull.groupBy(col("canonical_url"))
       .agg(min(col("doc_id")).as("keeper"))
@@ -169,11 +167,10 @@ object Web {
     */
   def urlDedupAtScale(docs: DataFrame, urlCol: String = "url"): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    // persisted for the same three-reads reason as [[urlDedup]]
-    val withCanon = Partitioning.spreadSmall(
+    // checkpointed for the same three-reads reason as [[urlDedup]]
+    val withCanon = Materialize.checkpoint(Partitioning.spreadSmall(
         docs.select(col("doc_id"), col(urlCol)))
-      .select(col("doc_id"), canonicalUrl(col(urlCol)).as("canonical_url"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), canonicalUrl(col(urlCol)).as("canonical_url")))
     val nonNull = withCanon.filter(col("canonical_url").isNotNull)
       .withColumn("url_h", expr("md5_long(canonical_url)"))
     val keepers = nonNull.groupBy(col("url_h"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.ops.{Audit, Corpus, Dedup, Pii, SubstringDedup}
+import graft.ops.{Audit, Corpus, Dedup, Materialize, Pii, SubstringDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -60,24 +60,17 @@ object CorpusPrep {
         * smaller driver heaps (or boilerplate-heavy corpora whose pair
         * graphs are huge) can tune the cutover from the pipeline config.
         */
-      driverUnionFindMax: Long = 1000000L,
-      /** Persist the corpus after the narrowing stages (quality + exact
-        * dedup): the near-dedup stage alone traverses it three times
-        * (minhash bands, then both sides of the candidate-verify join)
-        * and decontamination twice more — without a persist the quality
-        * scan re-runs each time. MEMORY_AND_DISK, so it degrades to
-        * spill, never OOM; callers own the lifetime (unpersist via
-        * spark.catalog.clearCache() or the returned plan's lineage).
-        */
-      persistIntermediate: Boolean = true)
+      driverUnionFindMax: Long = 1000000L)
 
   /** The cumulative pipeline: (stage name, surviving rows AFTER that
-    * stage), first entry is the input. Lazy DataFrames — nothing runs
-    * until an action; `prepare` takes the last, `audit` counts each.
+    * stage), first entry is the input; `prepare` takes the last, `audit`
+    * counts each. When a later stage re-reads the narrowed corpus, this
+    * call checkpoints it, and the last narrowing stage's entry is that
+    * checkpoint.
     */
   def stages(docs: DataFrame, evalCorpus: Option[DataFrame] = None,
       cfg: PrepConfig = PrepConfig()): Seq[(String, DataFrame)] = {
-    val out = Seq.newBuilder[(String, DataFrame)]
+    val out = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
     // kernel spread at the pipeline entry (identity at scale): the
     // quality gate's regex/token expressions otherwise run serial on a
     // tiny input's single scan partition, and every later stage inherits
@@ -96,10 +89,12 @@ object CorpusPrep {
       cur = Dedup.dedupExact(cur)
       out += ("exact_dedup" -> cur)
     }
-    if (cfg.persistIntermediate &&
-        (cfg.nearDedup.nonEmpty || cfg.substringDedup.nonEmpty ||
-          evalCorpus.nonEmpty))
-      cur = cur.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // near-dedup reads it three times, substring dedup and decontamination
+    // twice each: the quality scan runs once
+    if (cfg.nearDedup.nonEmpty || cfg.substringDedup.nonEmpty || evalCorpus.nonEmpty) {
+      cur = Materialize.checkpoint(cur)
+      out(out.length - 1) = out.last._1 -> cur
+    }
     cfg.nearDedup.foreach { p =>
       val clusters = Dedup.duplicateClusters(
         // clustering only consumes the pair SET — skip the gate dump's
@@ -135,7 +130,7 @@ object CorpusPrep {
         .drop("stratum", "sample_key")
       out += ("sample" -> cur)
     }
-    out.result()
+    out.toSeq
   }
 
   /** Surviving rows (original schema preserved). */

@@ -247,7 +247,7 @@ object CrawlLoop {
     var cycle = if (done.isEmpty) 0 else done.max + 1
     var continue = true
     // the per-cycle landed writes (docs, fetched log, next frontier) are
-    // independent given the persisted intermediates — overlapping them
+    // independent given the persisted cycle frames — overlapping them
     // trims the measured fixed per-cycle barrier cost (each was a
     // driver-synchronous job launch + parquet commit in sequence); a
     // failure in any write still aborts the cycle BEFORE its metrics
@@ -273,7 +273,7 @@ object CrawlLoop {
     // cycle and falls back to the footer read once.
     var prevFrontierOut: Option[Long] = None
     try {
-    while (cycle < cfg.cycles && continue) {
+    while (cycle < cfg.cycles && continue) graft.ops.Materialize.scoped { s =>
       val t0 = System.nanoTime()
       // the per-cycle rules (the static-overload caller sees one frame
       // every cycle; a refresh seam sees its cycle's)
@@ -322,8 +322,7 @@ object CrawlLoop {
             .filter(!col("blocked"))
             .select(cols.head, cols.tail: _*)
         }
-      val gated = WebPrep.frontierGated(blockFree, robotsTxt, cfg.userAgent)
-        .persist()
+      val gated = s.persisted(WebPrep.frontierGated(blockFree, robotsTxt, cfg.userAgent))
       // the fetched-set key: raw url strings, or the 8-byte md5_long
       // layout under cfg.hashedUrlKeys (both sides of the diff are
       // already canonical — seeds/frontier rows pass canonicalUrl before
@@ -350,7 +349,7 @@ object CrawlLoop {
             .drop("cycle")
         else if (cfg.hashedUrlKeys) Seq.empty[Long].toDF("url_h")
         else Seq.empty[String].toDF("url")
-      val toFetch = (
+      val toFetch = s.persisted(
         if (cfg.hashedUrlKeys)
           gated.filter(col("url").isNotNull)
             .withColumn("graft_url_h", expr("md5_long(url)"))
@@ -358,8 +357,7 @@ object CrawlLoop {
               "left_anti")
             .drop("graft_url_h")
         else WebPrep.frontierNew(gated, fetchedLog)
-          .filter(col("url").isNotNull)
-      ).persist()
+          .filter(col("url").isNotNull))
       // the three lineage counts START here but are awaited at the
       // single merged barrier below (with the extraction count and the
       // three writes): every per-cycle action used to be its own
@@ -389,10 +387,10 @@ object CrawlLoop {
       // under priority ranking the horizon cap keeps the TOP-in-degree
       // urls of each host (fetchSchedule's priorityCol contract; the
       // salted two-phase superset argument holds for any priority)
-      val plan = WebPrep.fetchSchedule(toFetch, robotsTxt, cfg.userAgent,
-        cfg.defaultDelaySeconds, cfg.maxPerHost,
+      val plan = s.persisted(WebPrep.fetchSchedule(toFetch, robotsTxt,
+        cfg.userAgent, cfg.defaultDelaySeconds, cfg.maxPerHost,
         priorityCol = if (cfg.priorityByInDegree) Some("in_degree")
-          else None).select(col("url")).persist()
+          else None).select(col("url")))
       // horizon rollover: URLs the per-host cap deferred re-enter the
       // next cycle's frontier instead of silently vanishing — under
       // priority ranking they KEEP their in-degree (new links to them
@@ -421,8 +419,8 @@ object CrawlLoop {
       val pages = web.join(plan, Seq("url"))
         .groupBy(col("url")).agg(max(col("html")).as("html"))
         .withColumn("doc_id", col("url"))
-      val extracted = graft.html.HtmlExtract
-        .extractAll(pages, "doc_id", "html", Some("url")).toDF().persist()
+      val extracted = s.persisted(graft.html.HtmlExtract
+        .extractAll(pages, "doc_id", "html", Some("url")).toDF())
       // fetchedN joins the merged barrier too: its first materialization
       // races the corpus/frontier writes to fill the extracted cache,
       // which the cache locking already serializes per block
@@ -495,8 +493,6 @@ object CrawlLoop {
           gatedN, toFetchN, fetchedN, keptN, frontierOutN, wallMs, status,
           System.currentTimeMillis())))
         .write.mode(SaveMode.Append).format(cfg.format).save(metricsPath(cfg))
-      gated.unpersist(); toFetch.unpersist(); plan.unpersist()
-      extracted.unpersist()
       if (status == "exhausted") continue = false
       cycle += 1
     }

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.html.HtmlExtract
 import graft.job.RowSeam
 import graft.job.RowSeam.nonNull
-import graft.ops.Web
+import graft.ops.{Materialize, Web}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -327,16 +327,14 @@ object WebPrep {
     * deduplicated narrow url rows; the fetch+parse runs map-only on the
     * executors, memory bounded by the 50 MB spec cap.
     *
-    * The RETURNED frame is `persist()`ed: the fetch runs inside a
-    * transformation, so WITHOUT the cache every action over the result
-    * would re-fetch every child sitemap (duplicate traffic against
-    * hosts the politeness machinery elsewhere rations) and
-    * re-increment `failedAcc`. The caller owns the cache's lifecycle —
-    * call `unpersist()` on the returned frame (it is the cached one)
-    * or land it. Residual caveat, as for any side-effecting task: a
-    * task RETRY or speculative twin during the first materialization
-    * can still fetch a child twice — exactly-once belongs to a landed
-    * table, not a cache.
+    * The RETURNED frame is a checkpoint ([[Materialize]]), so the
+    * children are fetched once, in this call: a lazy result would
+    * re-fetch every child sitemap on every action over it (duplicate
+    * traffic against hosts the politeness machinery elsewhere rations)
+    * and re-increment `failedAcc`. Residual caveat, as for any
+    * side-effecting task: a task RETRY or speculative twin during the
+    * checkpoint can still fetch a child twice — exactly-once belongs to
+    * a landed table, not a checkpoint.
     */
   def expandSitemapIndex(entries: DataFrame, fetch: String => Array[Byte],
       robotsTxt: Option[DataFrame] = None, userAgent: String = "*",
@@ -368,16 +366,11 @@ object WebPrep {
         }
       })
       .toDF("sitemap", "kind", "loc", "lastmod", "changefreq", "priority")
-    entries.select("sitemap", "kind", "loc", "lastmod", "changefreq",
-        "priority")
+    Materialize.checkpoint(entries.select("sitemap", "kind", "loc",
+        "lastmod", "changefreq", "priority")
       // the expanded references are consumed; page rows + nested refs remain
       .filter(col("kind") =!= "sitemap")
-      .unionByName(childEntries)
-      // one fetch per child per call, not per downstream action — the
-      // cache sits on the RETURNED frame so the caller's unpersist()
-      // actually releases it (a persist on the internal child frame
-      // would be unreachable from outside and leak per call)
-      .persist()
+      .unionByName(childEntries))
   }
 
   /** The composed index-aware seed feed the [[graft.sources.Sitemap]]
@@ -538,17 +531,16 @@ object WebPrep {
   def frontierNewBloom(frontier: DataFrame, fetched: DataFrame,
       urlCol: String = "url", fetchedUrlCol: String = "url",
       expectedItems: Long = 0L, fpp: Double = 0.01): DataFrame = {
-    // localCheckpoint: the canonical chain (~9 regex passes over every
+    // checkpoint: the canonical chain (~9 regex passes over every
     // fetched row) would otherwise run THREE times — the sizing count,
     // the bloom build, and the settle join's build side. `frontier` is
-    // still referenced by both union branches (probe + settle) — cache
+    // still referenced by both union branches (probe + settle) — checkpoint
     // it caller-side when it is itself expensive to produce. The bloom
     // broadcast is reclaimed by Spark's ContextCleaner once the returned
     // plan is dropped (no explicit destroy: the result is lazy).
-    val fetchedCanon = fetched
+    val fetchedCanon = Materialize.checkpoint(fetched
       .select(Web.canonicalUrl(col(fetchedUrlCol)).as(urlCol))
-      .filter(col(urlCol).isNotNull)
-      .localCheckpoint()
+      .filter(col(urlCol).isNotNull))
     val n = if (expectedItems > 0L) expectedItems
       else math.max(1L, fetchedCanon.count())
     val bf = fetchedCanon.stat.bloomFilter(urlCol, n, fpp)

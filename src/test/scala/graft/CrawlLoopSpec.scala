@@ -490,4 +490,20 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(full(0) == Set("https://crawl.example/start"))
     assert(metrics(cfg2).count(_._1 == 0) == 1) // exactly one cycle-0 row
   }
+
+  test("a cycle that throws still releases its cached frames") {
+    val (web, seeds, robots) = siteFrames()
+    val cfg = freshCfg(cycles = 3)
+    // a regular file where the docs table goes: the cycle's docs write
+    // fails after gated, toFetch, plan and extracted are cached
+    java.nio.file.Files.write(java.nio.file.Paths.get(cfg.outDir, "docs"),
+      "not a directory".getBytes("UTF-8"))
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = ProfileSpec.persistedAfterGc(sc, Int.MaxValue, 0L)
+    intercept[Exception](CrawlLoop.run(spark, web, seeds, robots, cfg))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(ProfileSpec.persistedAfterGc(sc, before, 10000L) == before)
+    assert(!new java.io.File(cfg.outDir, "metrics").exists()) // no cycle completed
+  }
 }

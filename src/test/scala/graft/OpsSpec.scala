@@ -1121,6 +1121,34 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sub.getAs[Double]("recall") == 1.0)
   }
 
+  test("pairRecall leaves no cache behind") {
+    val sp = spark
+    import sp.implicits._
+    val docs = (1L to 30L).map(i => (i, s"gemeinsamer text nummer ${i % 5} und noch etwas"))
+      .toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    val audit = graft.ops.Audit.pairRecall(docs, col("doc_id"), sampleRate = 1.0,
+      salt = "audit-leak", aCol = "doc_a", bCol = "doc_b")(
+      approx = Dedup.minHashDuplicatePairs(_),
+      exact = Dedup.ngramJaccardPairs(_, sortOutput = false))
+    assert(audit.collect()(0).getAs[Long]("sampled_rows") == 30)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("Materialize: scoped frames are released on a throw; a checkpoint is not taken twice") {
+    import graft.ops.Materialize
+    spark.catalog.clearCache()
+    val err = intercept[IllegalStateException](Materialize.scoped { s =>
+      assert(s.persisted(spark.range(100).toDF("id")).count() == 100)
+      assert(!spark.sharedState.cacheManager.isEmpty)
+      throw new IllegalStateException("planted")
+    })
+    assert(err.getMessage == "planted" && spark.sharedState.cacheManager.isEmpty)
+    val cut = Materialize.checkpoint(spark.range(100).toDF("id"))
+    assert(Materialize.checkpoint(cut) eq cut)
+    assert(spark.sharedState.cacheManager.isEmpty && cut.count() == 100)
+  }
+
   test("media near-dup: identical payloads pair at cosine 1.0, distinct payloads don't") {
     val sp = spark
     import sp.implicits._

@@ -2,7 +2,10 @@ package graft
 
 import graft.ops.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +33,27 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
   private def sfPresent = new java.io.File(sf).exists()
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** The physical plan (before adaptive re-planning) of the first `action`
+    * that `run` executed, as a [[QueryExecutionListener]] reports it.
+    */
+  private def actionPlan(action: String)(run: => Any): String = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == action) seen.put(qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan.toString
+          case p => p.toString
+        })
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      Option(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail(s"no $action action ran"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q01: date filter pushed to the parquet scan, columns pruned") {
     assume(sfPresent)
@@ -248,7 +272,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val robots = Seq(("h5.example", "User-Agent: *\nDisallow: /x\n"))
       .toDF("host", "robots_txt")
     val fetch: String => Array[Byte] = _ => "<urlset></urlset>".getBytes("UTF-8")
-    val p = plan(graft.pipeline.WebPrep.expandSitemapIndex(
+    // the returned frame is a checkpoint (its own plan is a scan): read
+    // the plan the checkpoint action executed
+    val p = actionPlan("localCheckpoint")(graft.pipeline.WebPrep.expandSitemapIndex(
       entries, fetch, robotsTxt = Some(robots)))
     // the robots gate on child urls joins by broadcast, never sort-merge
     assert(p.contains("BroadcastHashJoin"), p)

@@ -2,6 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.obs.QueryProfile
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,7 +10,12 @@ import scala.jdk.CollectionConverters._
 
 /** The query profiler: per-layer fields of a real query, a planted cache
   * leak and a planted failure, and the warm distribution of every field.
-  * Uses the driver-provided sf0.001 tables (skipped when absent).
+  * And a long-lived session leaks no cached blocks: every declared query
+  * runs once, cold, to the noop sink; after each write the CacheManager
+  * holds nothing, and once the query's frame is dropped a GC poll brings
+  * `getPersistentRDDs` back to its size before the query (checkpointed
+  * frames own their blocks, see `graft.ops.Materialize`). Uses the
+  * driver-provided sf0.001 tables (skipped when absent).
   */
 class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -85,5 +91,44 @@ class ProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(e.get(name).get("warm_errors").size == 0)
     }
     spark.catalog.clearCache()
+  }
+
+  // declared after the profile case: one write per declared query warms
+  // the analyzer enough that a later cold q07 analysis phase can read
+  // under the tracker's 1 ms resolution
+  test("leaks: every declared query leaves no persist behind and its checkpoints go with its frame") {
+    assume(new java.io.File(sf).exists())
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val leaks = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val before = ProfileSpec.persistedAfterGc(sc, Int.MaxValue, 0L)
+      // the frame lives only inside this call, so it is unreachable after
+      def write(): Unit =
+        SparkEntry.queries(name)(spark, sf).write.mode("overwrite").format("noop").save()
+      write()
+      val cached = !spark.sharedState.cacheManager.isEmpty
+      spark.catalog.clearCache()
+      val left = ProfileSpec.persistedAfterGc(sc, before, 10000L) - before
+      if (cached || left > 0) Some(s"$name: cached=$cached persisted_rdds_left=$left") else None
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
+}
+
+object ProfileSpec {
+
+  /** `sc.getPersistentRDDs.size` after GC polls, stopping as soon as it is
+    * at most `target` or after `timeoutMs`.
+    */
+  def persistedAfterGc(sc: SparkContext, target: Int, timeoutMs: Long): Int = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var n = Int.MaxValue
+    while ({
+      System.gc()
+      Thread.sleep(50)
+      n = sc.getPersistentRDDs.size
+      n > target && System.nanoTime() < deadline
+    }) ()
+    n
   }
 }

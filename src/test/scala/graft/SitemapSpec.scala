@@ -249,4 +249,18 @@ class SitemapSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map("https://idx.example/a" -> "2026-01-03",
       "https://idx.example/b" -> ""), got)
   }
+
+  test("frontierFromSitemapIndex leaves no cache behind") {
+    sparkUsed = true
+    val sp = spark
+    import sp.implicits._
+    val entries = Seq(("idx", "sitemap", "https://idx.example/child.xml", "", "", ""))
+      .toDF("sitemap", "kind", "loc", "lastmod", "changefreq", "priority")
+    val page = bytes("<urlset><url><loc>https://idx.example/a</loc></url></urlset>")
+    val fetch: String => Array[Byte] = _ => page
+    spark.catalog.clearCache()
+    val seeds = graft.pipeline.WebPrep.frontierFromSitemapIndex(entries, fetch)
+    assert(seeds.collect().map(_.getString(0)).toSeq == Seq("https://idx.example/a"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
