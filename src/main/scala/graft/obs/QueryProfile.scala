@@ -20,8 +20,14 @@ import scala.util.control.NonFatal
   *
   * A run's record holds:
   *  - `wall_s`, driver wall of build + write;
+  *  - `build_s`, driver wall of the build alone (a DataFrame-API frame is
+  *    analyzed while it is built, and any eager action of the entry runs
+  *    here too);
   *  - `analysis_s`, `optimization_s`, `planning_s`: `QueryPlanningTracker`
-  *    phases summed over every SQL execution the run started;
+  *    phases summed over every SQL execution the run started. These cover
+  *    only work inside an execution: analysis done while a DataFrame-API
+  *    frame is built is not in `analysis_s` (it often reads 0), but in
+  *    `build_s`;
   *  - `codegen_s`: Janino compile time (`CodeGenerator.compileTime`, the
   *    exact sum behind `CodegenMetrics`' compile-time histogram);
   *  - `jobs`, `stages` (that ran tasks) and `jobs_s`, the union of the job
@@ -89,9 +95,14 @@ object QueryProfile {
     rec.current = group
     sc.setJobGroup(group, group)
     val t0 = System.nanoTime()
+    var built = 0.0
     val failure =
-      try { build(spark).write.mode("overwrite").format("noop").save(); None }
-      catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+      try {
+        val df = build(spark)
+        built = (System.nanoTime() - t0) / 1e9
+        df.write.mode("overwrite").format("noop").save()
+        None
+      } catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
       finally sc.clearJobGroup()
     val wall = (System.nanoTime() - t0) / 1e9
     System.err.println(f"[profile] $group ${failure.fold(f"$wall%.2f s")(e => s"failed: $e")}")
@@ -103,7 +114,8 @@ object QueryProfile {
     val mb = 1048576.0
     val skews = q.stages.values.filter(_.tasks.length >= 4).map(s =>
       s.tasks.max / math.max(1.0, median(s.tasks.map(_.toDouble).toSeq)))
-    val fields = ListMap("wall_s" -> wall, "analysis_s" -> phase("analysis"),
+    val fields = ListMap("wall_s" -> wall, "build_s" -> built,
+      "analysis_s" -> phase("analysis"),
       "optimization_s" -> phase("optimization"), "planning_s" -> phase("planning"),
       "codegen_s" -> (CodeGenerator.compileTime - compile0) / 1e9,
       "jobs" -> q.jobs.toDouble, "stages" -> q.stages.size.toDouble,

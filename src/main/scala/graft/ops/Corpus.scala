@@ -700,10 +700,11 @@ object Corpus {
 
   /** 100 TB face of [[dedupParagraphsGlobal]]: the keeper aggregation
     * and join-back key `md5_long(line)` (8 bytes) instead of the
-    * paragraph string — the [[graft.ops.Web.urlDedupAtScale]]
-    * convention (mean web paragraph ~200+ bytes, so the wide shuffle
-    * shrinks ~25x; collision odds as documented there). CorpusSpec
-    * pins output equality against the exact operator.
+    * paragraph string (mean web paragraph ~200+ bytes, so the wide
+    * shuffle shrinks ~25x). A 64-bit md5 collision would merge two
+    * distinct paragraphs (~N^2/2^65 pairs — at 10^12 paragraphs about
+    * 0.03 expected collisions). CorpusSpec pins output equality against
+    * the exact operator.
     */
   def dedupParagraphsGlobalAtScale(docs: DataFrame, minChars: Int = 10)
       : DataFrame = {

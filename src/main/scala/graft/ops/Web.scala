@@ -130,10 +130,9 @@ object Web {
     * preserving: documents with a null url cannot be URL-compared, so
     * each is its own keeper (canonical_url null, keep true) rather than
     * silently vanishing through null-unsafe join equality. Two narrow
-    * shuffles (group + join-back), same shape as Dedup.dedupExact. This
-    * string-keyed form is the gate/oracle surface (DuckDB re-derives the
-    * key); production at 100 TB uses [[urlDedupAtScale]], which shuffles
-    * 8-byte md5_long keys instead.
+    * shuffles (group + join-back), same shape as Dedup.dedupExact, both
+    * keyed on the canonical string (the gate/oracle surface: DuckDB
+    * re-derives the key).
     */
   def urlDedup(docs: DataFrame, urlCol: String = "url"): DataFrame = {
     // checkpointed: the canonical projection is read three times (keeper
@@ -147,35 +146,6 @@ object Web {
     val keepers = nonNull.groupBy(col("canonical_url"))
       .agg(min(col("doc_id")).as("keeper"))
     nonNull.join(keepers, Seq("canonical_url"))
-      .select(col("doc_id"), col("canonical_url"),
-        (col("doc_id") === col("keeper")).as("keep"))
-      .unionByName(withCanon.filter(col("canonical_url").isNull)
-        .select(col("doc_id"), col("canonical_url"), lit(true).as("keep")))
-  }
-
-  /** 100 TB face of [[urlDedup]]: identical output contract, but the
-    * aggregation and join-back are keyed on `md5_long(canonical_url)` —
-    * an 8-byte long — instead of the canonical string, so the group-by
-    * shuffle rows and the join hash table carry fixed-width keys rather
-    * than full URLs (mean crawl URL ~70 bytes; the keeper-side shuffle
-    * shrinks ~10x). Same wrapper convention as
-    * `Dedup.winnowOverlapPairsAtScale`: the exact operator stays the
-    * oracle-checked gate surface, the AtScale variant is the production
-    * default. An md5 64-bit collision would merge two distinct URLs
-    * (~N^2/2^65 pairs — at 10^12 URLs about 0.03 expected collisions);
-    * OpsSpec pins keep-set equality vs the string-keyed operator.
-    */
-  def urlDedupAtScale(docs: DataFrame, urlCol: String = "url"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // checkpointed for the same three-reads reason as [[urlDedup]]
-    val withCanon = Materialize.checkpoint(Partitioning.spreadSmall(
-        docs.select(col("doc_id"), col(urlCol)))
-      .select(col("doc_id"), canonicalUrl(col(urlCol)).as("canonical_url")))
-    val nonNull = withCanon.filter(col("canonical_url").isNotNull)
-      .withColumn("url_h", expr("md5_long(canonical_url)"))
-    val keepers = nonNull.groupBy(col("url_h"))
-      .agg(min(col("doc_id")).as("keeper"))
-    nonNull.join(keepers, Seq("url_h"))
       .select(col("doc_id"), col("canonical_url"),
         (col("doc_id") === col("keeper")).as("keep"))
       .unionByName(withCanon.filter(col("canonical_url").isNull)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * checkpoint/resume contract as [[graft.job.ExtractJob]]. One cycle:
   *
   *   frontier -> robots gate ([[WebPrep.frontierGated]])
-  *            -> minus fetched set ([[WebPrep.frontierNew]])
+  *            -> minus fetched set (left-anti join on the landed url)
   *            -> politeness plan ([[WebPrep.fetchSchedule]], horizon-capped)
   *            -> fetch (here: a join against the landed `web` table —
   *               the seam where a real fetcher cluster sits)
@@ -41,33 +41,29 @@ import org.apache.spark.sql.functions._
   * all keyed on the same canonical url. For custom cycles in the
   * ≤~10^9-fetched-URL regime, [[WebPrep.frontierNewBloom]] is the
   * exact-result bloom-prefiltered face of the fetched-set diff (this
-  * loop's built-in diff stays the plain anti-join: `hashedUrlKeys`
-  * owns the 10^12 tier); a richer priority than in-degree comes from
-  * [[graft.ops.LinkGraph.pageRank]] over the accumulated link output,
-  * joined onto the frontier as `priorityCol`.
+  * loop's built-in diff stays the plain anti-join); a richer priority
+  * than in-degree comes from [[graft.ops.LinkGraph.pageRank]] over the
+  * accumulated link output, joined onto the frontier as `priorityCol`.
+  *
+  * One key everywhere: the canonical url string. Seeds and discovered
+  * links pass [[graft.ops.Web.canonicalUrl]] once, before they land, so
+  * the frontier, the plan and the fetched log all hold canonical urls
+  * and the fetched-set diff compares them as landed — never
+  * re-canonicalized (the chain is not idempotent: `…/a//` lands as
+  * `…/a/`, which a second pass would turn into `…/a`).
   *
   * Scale shape per cycle: frontier frames are NARROW (url-only) through
   * every shuffle; the wide fetched rows join the plan on the url key
   * exactly once and move map-only through extraction; the fetched-set
   * diff reads a dedicated url-only fetch-log table (never the wide
-  * corpus rows). The fetched-set anti-join grows with the crawl — at
-  * 10^12 URLs set `CrawlConfig.hashedUrlKeys` to route it (and the
-  * frontier dedup) through `Web.urlDedupAtScale`'s md5_long layout;
-  * the join stays AQE broadcast-or-SMJ either way.
+  * corpus rows), an AQE broadcast-or-SMJ anti-join.
   */
 object CrawlLoop {
 
-  /** `hashedUrlKeys`: the 10^12-URL layout the object scaladoc
-    * promises — the fetched-set anti-join and the frontier dedup key
-    * `md5_long(url)` (8 bytes) instead of the raw URL string (mean
-    * crawl URL ~70 bytes), the same convention as
-    * [[graft.ops.Web.urlDedupAtScale]]; the fetched log lands as
-    * `url_h` longs. Kept output (docs, frontier, metrics) is IDENTICAL
-    * either way (CrawlLoopSpec pins the equality) — only shuffle/log
-    * width changes; collision odds as documented on urlDedupAtScale.
-    * NOTE: flip it only on a FRESH outDir — the fetched log's landed
-    * schema differs between modes, so resuming a string-keyed crawl
-    * hashed (or vice versa) fails on read.
+  /** `cycles` and `maxPerHost` must be at least 1: a zero per-host cap
+    * plans no url, so every cycle would land empty tables and record
+    * `done`, and the crawl would never exhaust. Both are checked when
+    * the config is built, before any Spark work.
     */
   final case class CrawlConfig(
       outDir: String,
@@ -77,20 +73,12 @@ object CrawlLoop {
       defaultDelaySeconds: Double = 1.0,
       maxPerHost: Int = 86400,
       format: String = "parquet",
-      hashedUrlKeys: Boolean = false,
-      // drop crawl-trap URLs (Web.isUrlTrap: length/depth/loop
-      // signature) from every cycle's frontier BEFORE the robots gate —
-      // on by default because an unfiltered trap family (calendar
-      // pages, session-id loops) otherwise eats the politeness budget
-      // of its host forever; trap rows never enter the fetched log, so
-      // flipping the flag later reconsiders them
-      trapFilter: Boolean = true,
       // host-suffix blocklist (Web.domainBlocklist semantics: an entry
       // blocks the host and every subdomain) applied to every cycle's
       // frontier BEFORE the robots gate — consent/safety enforcement
       // belongs at FETCH time, not just curation time: a blocked host
       // never consumes politeness budget, robots fetches, or bandwidth.
-      // Like trapFilter, blocked urls never enter the fetched log, so
+      // Like crawl traps, blocked urls never enter the fetched log, so
       // editing the list later reconsiders them
       blocklist: Set[String] = Set.empty,
       // rank the frontier by link in-degree (WebPrep.frontierRanked's
@@ -100,9 +88,12 @@ object CrawlLoop {
       // politeness plan passes priorityCol so the per-host horizon cap
       // keeps the most-referenced URLs instead of the
       // lexicographically-first. Off = the plain url-ordered frontier.
-      // Like hashedUrlKeys this changes the landed frontier schema —
-      // flip it only on a FRESH outDir
-      priorityByInDegree: Boolean = false)
+      // This changes the landed frontier schema — flip it only on a
+      // FRESH outDir
+      priorityByInDegree: Boolean = false) {
+    require(cycles >= 1, s"cycles must be >= 1, got $cycles")
+    require(maxPerHost >= 1, s"maxPerHost must be >= 1, got $maxPerHost")
+  }
 
   /** Per-cycle lineage metrics (one row per completed cycle). */
   final case class CycleMetric(run_id: String, cycle: Int,
@@ -240,8 +231,6 @@ object CrawlLoop {
   def run(spark: SparkSession, web: DataFrame, seeds: DataFrame,
       cfg: CrawlConfig, robotsOf: Int => DataFrame): Unit = {
     import spark.implicits._
-    require(cfg.cycles > 0, "cycles must be positive")
-    if (cfg.hashedUrlKeys) graft.functions.GraftFunctions.register(spark)
     val (done, exhausted) = completedCycles(spark, cfg)
     if (exhausted) return
     var cycle = if (done.isEmpty) 0 else done.max + 1
@@ -278,10 +267,9 @@ object CrawlLoop {
       // the per-cycle rules (the static-overload caller sees one frame
       // every cycle; a refresh seam sees its cycle's)
       val robotsTxt = robotsOf(cycle)
-      // the landed-table schemas are fully determined by cfg (the
-      // scaladoc already requires a fresh outDir when a schema-changing
-      // flag flips), so the per-cycle reads declare them explicitly —
-      // schema inference re-read a parquet footer every cycle, pure
+      // the landed-table schemas are fully determined by cfg (a fresh
+      // outDir is required when priorityByInDegree flips), so the
+      // per-cycle reads declare them explicitly — schema inference re-read a parquet footer every cycle, pure
       // driver-side fixed cost in the per-cycle barrier
       val frontierSchema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("url",
@@ -306,12 +294,13 @@ object CrawlLoop {
       // narrow url-only frames; gated caches so the robots-gate UDF pass
       // runs once (the count and the anti-join lineage share it).
       // frontier.count() on the landed dir is a footer-level read (empty
-      // projection), not a data pass
-      val trapFree =
-        if (cfg.trapFilter)
-          frontier.filter(!coalesce(
-            graft.ops.Web.isUrlTrap(col("url")), lit(true)))
-        else frontier
+      // projection), not a data pass. Crawl-trap urls (Web.isUrlTrap:
+      // length/depth/loop signature) drop BEFORE the robots gate — an
+      // unfiltered trap family (calendar pages, session-id loops) would
+      // otherwise eat its host's politeness budget forever; trap rows
+      // never enter the fetched log
+      val trapFree = frontier.filter(!coalesce(
+        graft.ops.Web.isUrlTrap(col("url")), lit(true)))
       val blockFree =
         if (cfg.blocklist.isEmpty) trapFree
         else {
@@ -323,15 +312,8 @@ object CrawlLoop {
             .select(cols.head, cols.tail: _*)
         }
       val gated = s.persisted(WebPrep.frontierGated(blockFree, robotsTxt, cfg.userAgent))
-      // the fetched-set key: raw url strings, or the 8-byte md5_long
-      // layout under cfg.hashedUrlKeys (both sides of the diff are
-      // already canonical — seeds/frontier rows pass canonicalUrl before
-      // landing, so hashing needs no re-canonicalization)
       val fetchedSchema = org.apache.spark.sql.types.StructType(Seq(
-        if (cfg.hashedUrlKeys)
-          org.apache.spark.sql.types.StructField("url_h",
-            org.apache.spark.sql.types.LongType)
-        else org.apache.spark.sql.types.StructField("url",
+        org.apache.spark.sql.types.StructField("url",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("cycle",
           org.apache.spark.sql.types.IntegerType)))
@@ -347,17 +329,11 @@ object CrawlLoop {
             // retry unit)
             .filter(col("cycle") < cycle)
             .drop("cycle")
-        else if (cfg.hashedUrlKeys) Seq.empty[Long].toDF("url_h")
         else Seq.empty[String].toDF("url")
-      val toFetch = s.persisted(
-        if (cfg.hashedUrlKeys)
-          gated.filter(col("url").isNotNull)
-            .withColumn("graft_url_h", expr("md5_long(url)"))
-            .join(fetchedLog, col("graft_url_h") === col("url_h"),
-              "left_anti")
-            .drop("graft_url_h")
-        else WebPrep.frontierNew(gated, fetchedLog)
-          .filter(col("url").isNotNull))
+      // the fetched-set diff on the landed url: both sides are already
+      // canonical (see the object scaladoc), so no re-canonicalization
+      val toFetch = s.persisted(gated.filter(col("url").isNotNull)
+        .join(fetchedLog, Seq("url"), "left_anti"))
       // the three lineage counts START here but are awaited at the
       // single merged barrier below (with the extraction count and the
       // three writes): every per-cycle action used to be its own
@@ -432,32 +408,16 @@ object CrawlLoop {
       // output: a dead url or a page whose extraction failed must not
       // pass the fetched-set diff again every time a later page re-links
       // it — permanent-skip is the crawl default; retries belong to the
-      // fetch seam, which can re-inject urls via the seeds of a later run
-      val fetchedOut =
-        if (cfg.hashedUrlKeys) plan.select(expr("md5_long(url)").as("url_h"))
-        else plan
-      // frontier dedup: distinct on the url string, or the AtScale
-      // shape (group on the 8-byte hash, keep min url — identical
-      // output up to the documented collision odds). Under priority
+      // fetch seam, which can re-inject urls via the seeds of a later run.
+      // Frontier dedup: distinct on the url string. Under priority
       // ranking the merge SUMS in-degree: a rolled-over url keeps its
       // accumulated count and this cycle's fresh links add to it
       val frontierNext =
-        if (cfg.priorityByInDegree) {
-          val fresh = WebPrep.frontierRankedExtracted(extracted)
+        if (cfg.priorityByInDegree)
+          WebPrep.frontierRankedExtracted(extracted)
             .select(col("url"), col("in_degree"))
             .unionByName(rollover)
-          if (cfg.hashedUrlKeys)
-            fresh.groupBy(expr("md5_long(url)"))
-              .agg(min(col("url")).as("url"),
-                sum(col("in_degree")).as("in_degree"))
-              .select(col("url"), col("in_degree"))
-          else fresh.groupBy(col("url"))
-            .agg(sum(col("in_degree")).as("in_degree"))
-        } else if (cfg.hashedUrlKeys)
-          WebPrep.frontierExtracted(extracted)
-            .select(col("url")).union(rollover)
-            .groupBy(expr("md5_long(url)")).agg(min(col("url")).as("url"))
-            .select(col("url"))
+            .groupBy(col("url")).agg(sum(col("in_degree")).as("in_degree"))
         else WebPrep.frontierExtracted(extracted)
           .select(col("url")).union(rollover).distinct()
       // kept/frontier-out counts ride the writes as observe() metrics
@@ -476,7 +436,7 @@ object CrawlLoop {
             .save(s"${docsDir(cfg)}/cycle=$cycle")
         },
         scala.concurrent.Future {
-          fetchedOut.write.mode(SaveMode.Overwrite).format(cfg.format)
+          plan.write.mode(SaveMode.Overwrite).format(cfg.format)
             .save(s"${fetchedDir(cfg)}/cycle=$cycle")
         },
         scala.concurrent.Future {

@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: extraction + gate are map-only. The dedup decision runs
   * over a NARROW (doc_id, dedup_url) projection through `Web.urlDedup`
-  * (its group/join shuffles carry only ids + keys; swap in
-  * `Web.urlDedupAtScale`'s md5_long layout at 100 TB), and the wide
+  * (its group/join shuffles carry only ids + keys), and the wide
   * WebDoc rows join the keeper set once via a left-semi join on the
   * UNIFORM doc_id key — the wide columns never shuffle on the skewed
   * URL key (one viral canonical would be a hot key; doc_id is not).
@@ -489,10 +488,13 @@ object WebPrep {
 
   /** The frontier diff the scaladoc of [[frontier]] promises: frontier
     * minus the already-fetched set, as an operator. `fetched` URLs are
-    * canonicalized with the SAME chain the frontier keys on (the chain
-    * is idempotent, so feeding back an already-canonical crawl log is
-    * fine), then anti-joined on the url key — AQE picks broadcast vs
-    * sort-merge by the fetched side's actual size. Null-url frontier
+    * canonicalized with the SAME chain the frontier keys on, then
+    * anti-joined on the url key — AQE picks broadcast vs sort-merge by
+    * the fetched side's actual size. The chain is NOT idempotent:
+    * `https://x.example/a//` canonicalizes to `…/a/`, and a second pass
+    * turns that into `…/a` — so a log of already-canonical keys (a
+    * crawl's own landed fetch log) must be diffed as it is, with a plain
+    * anti-join on the landed url, as [[CrawlLoop]] does. Null-url frontier
     * rows survive (null equals nothing in an anti join), mirroring
     * urlDedup's null-preserving contract.
     */
@@ -517,10 +519,9 @@ object WebPrep {
     * through the shuffle; at 1% fpp the anti-join sees ~hits + 1% of the
     * rest instead of the whole frontier. Regime bound, stated honestly:
     * the driver-merged filter costs ~1.2 bytes/key at 1% fpp, so it
-    * broadcasts comfortably to ~10^9 fetched URLs (~1.2 GB); the
-    * 10^12-URL layout stays [[graft.pipeline.CrawlLoop]]'s `hashedUrlKeys`
-    * anti-join, where 8-byte keys make the shuffle itself cheap. The two
-    * are complementary, not competing.
+    * broadcasts comfortably to ~10^9 fetched URLs (~1.2 GB); past that,
+    * the plain anti-join (the one [[graft.pipeline.CrawlLoop]] runs) is
+    * the diff.
     *
     * `expectedItems` sizes the filter; 0 (default) spends one count()
     * action on the fetched side first. Null-url frontier rows survive

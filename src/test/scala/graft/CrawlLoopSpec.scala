@@ -280,13 +280,13 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("url")
     val robots = Seq(("pr.example", "User-Agent: *\n"))
       .toDF("host", "robots_txt")
-    def crawl(ranked: Boolean, hashed: Boolean) = {
+    def crawl(ranked: Boolean) = {
       val cfg = freshCfg(cycles = 6).copy(maxPerHost = 2,
-        priorityByInDegree = ranked, hashedUrlKeys = hashed)
+        priorityByInDegree = ranked)
       CrawlLoop.run(spark, web, seeds, robots, cfg)
       (docsByCycle(cfg), cfg)
     }
-    val (ranked, rankedCfg) = crawl(ranked = true, hashed = false)
+    val (ranked, rankedCfg) = crawl(ranked = true)
     assert(ranked(1) == Set("https://pr.example/zz",
       "https://pr.example/aa"), ranked)
     assert(ranked(2) == Set("https://pr.example/ab"), ranked)
@@ -297,12 +297,9 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(deg("https://pr.example/zz") == 2L &&
       deg("https://pr.example/aa") == 1L, deg)
     // unranked baseline takes the lexicographic pair — the differential
-    val (plain, _) = crawl(ranked = false, hashed = false)
+    val (plain, _) = crawl(ranked = false)
     assert(plain(1) == Set("https://pr.example/aa",
       "https://pr.example/ab"), plain)
-    // hashedUrlKeys composes: identical corpus and layering
-    val (hashed, _) = crawl(ranked = true, hashed = true)
-    assert(hashed == ranked, hashed)
   }
 
   test("planWithValidators: a bare 304 refreshes nothing it did not resend; a full capture replaces wholesale") {
@@ -368,7 +365,7 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(metrics(cfg).count(m => m._1 == 1 && m._6 == "exhausted") == 0)
   }
 
-  test("trapFilter: looping trap links never enter the plan or the fetched log; flag off crawls them") {
+  test("crawl traps: looping trap links never enter the plan or the fetched log") {
     val sp = spark
     import sp.implicits._
     val trap = "https://crawl.example/a/b" + "/loop" * 4
@@ -391,16 +388,10 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url").collect().map(_.getString(0)).toSet
     assert(urls == Set("https://crawl.example/start",
       "https://crawl.example/echt"), urls)
-    // the trap never even entered the fetch log (flipping the flag
-    // later may reconsider it)
+    // the trap never even entered the fetch log
     val fetched = spark.read.parquet(cfg.outDir + "/fetched")
       .select("url").collect().map(_.getString(0)).toSet
     assert(!fetched.contains(trap), fetched)
-    // flag off: the trap IS crawled (the filter is policy, not a bug)
-    val cfg2 = freshCfg(cycles = 10).copy(trapFilter = false)
-    CrawlLoop.run(spark, web, seeds, robots, cfg2)
-    assert(CrawlLoop.readDocs(spark, cfg2)
-      .select("url").collect().map(_.getString(0)).toSet.contains(trap))
   }
 
   test("blocklist: a blocked host's subdomain never enters the plan or fetch log; flag off crawls it") {
@@ -440,31 +431,42 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("url").collect().map(_.getString(0)).toSet.contains(badUrl))
   }
 
-  test("hashedUrlKeys: the md5_long key layout crawls the identical corpus, frontier and metrics") {
-    val (web, seeds, robots) = siteFrames()
-    val a = freshCfg(cycles = 10)
-    val b = freshCfg(cycles = 10).copy(hashedUrlKeys = true)
-    CrawlLoop.run(spark, web, seeds, robots, a)
-    CrawlLoop.run(spark, web, seeds, robots, b)
-    // keep-set equality per cycle (the urlDedupAtScale pin, loop-level)
-    assert(docsByCycle(a) == docsByCycle(b))
-    assert(metrics(a).toSeq == metrics(b).toSeq)
-    // the hashed fetched log really is the 8-byte layout...
-    val log = spark.read.parquet(b.outDir + "/fetched")
-    assert(log.columns.toSet == Set("url_h", "cycle"), log.columns.toSeq)
-    assert(log.schema("url_h").dataType ==
-      org.apache.spark.sql.types.LongType)
-    // ...and holds exactly md5_long of the string log's urls
-    graft.functions.GraftFunctions.register(spark)
-    import org.apache.spark.sql.functions.{col, expr}
-    val fromString = spark.read.parquet(a.outDir + "/fetched")
-      .select(expr("md5_long(url)").as("h")).collect()
-      .map(_.getLong(0)).toSet
-    val hashed = log.select(col("url_h")).collect().map(_.getLong(0)).toSet
-    assert(hashed == fromString)
-    // resume works within the hashed layout too
-    CrawlLoop.run(spark, web, seeds, robots, b) // exhausted: no-op
-    assert(docsByCycle(b) == docsByCycle(a))
+  test("fetched-set diff on the landed url: a canonical key ending in '/' is fetched once") {
+    val sp = spark
+    import sp.implicits._
+    // `/a//` lands as `…/a/`; canonicalizing that key a second time would
+    // give `…/a`, which never matches the log entry `…/a/`
+    val web = Seq(
+      ("https://rf.example/start",
+        "<html><body><article><p>Startseite mit Inhalt hier.</p>" +
+          "<a href=\"/a//\">a</a></article></body></html>"),
+      ("https://rf.example/a/",
+        "<html><body><article><p>Seite A mit Inhalt hier.</p>" +
+          "<a href=\"/a//\">a</a><a href=\"/start\">s</a>" +
+          "</article></body></html>"))
+      .toDF("url", "html")
+    val seeds = Seq("https://rf.example/start").toDF("url")
+    val robots = Seq(("rf.example", "User-Agent: *\n"))
+      .toDF("host", "robots_txt")
+    val cfg = freshCfg(cycles = 6)
+    CrawlLoop.run(spark, web, seeds, robots, cfg)
+    val byCycle = docsByCycle(cfg)
+    assert(byCycle.count(_._2.contains("https://rf.example/a/")) == 1,
+      byCycle)
+    val fetchedCycles = spark.read.parquet(cfg.outDir + "/fetched")
+      .filter($"url" === "https://rf.example/a/").select("cycle").collect()
+    assert(fetchedCycles.length == 1, fetchedCycles.toSeq)
+    val ms = metrics(cfg)
+    assert(ms.last._6 == "exhausted" && ms.length < 6, ms.mkString(";"))
+  }
+
+  test("CrawlConfig rejects zero cycles and a zero per-host cap before any Spark work") {
+    val e1 = intercept[IllegalArgumentException](
+      CrawlConfig(outDir = "unused", cycles = 0))
+    assert(e1.getMessage.contains("cycles"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      CrawlConfig(outDir = "unused", cycles = 3, maxPerHost = 0))
+    assert(e2.getMessage.contains("maxPerHost"), e2.getMessage)
   }
 
   test("a different run_id in an existing outDir is refused, not silently mixed") {

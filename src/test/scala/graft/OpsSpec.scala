@@ -678,25 +678,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(RobotsTxt.crawlDelay("Crawl-delay: 5\nUser-Agent: a\nDisallow: /\n", "a") == None)
   }
 
-  test("urlDedupAtScale: identical keep-set to the string-keyed operator") {
-    val sp = spark
-    import sp.implicits._
-    val rows = ((1L to 40L).map { i =>
-      val v = i % 4
-      val u =
-        if (v == 0) s"http://Example${i / 4}.com/P?utm_source=x"
-        else if (v == 1) s"https://example${i / 4}.com:443/P"
-        else if (v == 2) s"https://example${i / 4}.com/P#f"
-        else s"https://example${i / 4}.com/other/${i}"
-      (i, u)
-    } ++ Seq((50L, null.asInstanceOf[String]))).toDF("doc_id", "url")
-    def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1),
-        r.getBoolean(2))).sortBy(_._1).toSeq
-    assert(norm(graft.ops.Web.urlDedupAtScale(rows)) ==
-      norm(graft.ops.Web.urlDedup(rows)))
-  }
-
   // ---------- multimodal plumbing ----------
 
   test("multimodal: meta decode + frame sampling shapes") {

@@ -288,20 +288,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hashEx.exists(_.contains("graft_host")), hashEx)
   }
 
-  test("urlDedupAtScale: aggregation + join keyed on md5_long, not URL strings") {
-    val sp = spark
-    import sp.implicits._
-    val rows = (1L to 50L).map(i => (i, s"https://example${i % 7}.com/p/$i"))
-      .toDF("doc_id", "url")
-    val p = plan(graft.ops.Web.urlDedupAtScale(rows))
-    // every hashpartitioning exchange on the dedup path keys on url_h
-    // (the 8-byte hash) — never on the canonical string
-    val exchanges = "Exchange hashpartitioning\\(([a-zA-Z_0-9#]+)"
-      .r.findAllMatchIn(p).map(_.group(1)).toSeq
-    assert(exchanges.nonEmpty, p)
-    assert(exchanges.forall(_.startsWith("url_h")), s"$exchanges\n$p")
-  }
-
   test("dedupParagraphsGlobalAtScale: keeper shuffle keyed on the 8-byte hash, not paragraph strings") {
     val sp = spark
     import sp.implicits._
