@@ -4,7 +4,7 @@ import graft.extract.Extractor
 import graft.html.HtmlExtract
 import graft.model._
 import graft.reflow.ExtractConfig
-import java.util.concurrent.{Callable, ExecutionException, Executors, Future, TimeUnit}
+import java.util.concurrent.Future
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -26,18 +26,16 @@ import scala.util.control.NonFatal
   *    reference has the same hot spot: per-PDF runtime dominated by LM
   *    calls, development/notes/03_notes.md);
   *  - resume: the corpus is processed in `chunks` deterministic slices
-  *    (pmod(xxhash64(doc_id), chunks)); each completed chunk OVERWRITES its
-  *    own chunk= directory (the retry unit — idempotent on any crash/retry
-  *    interleaving) and then appends a metrics row; on restart, chunks with
-  *    a 'done' metrics row are skipped — exact resume, verified by the
-  *    resume-equivalence test (FIXTURES.md §4). At most two chunks are in
-  *    flight: chunk k+1 is extracted and written while chunk k's straggler
-  *    tail, commit and metrics append run. Rows are appended on the calling
-  *    thread, in chunk order, each after its own chunk committed (commit
-  *    -> row), so a crash can leave a chunk committed without its row;
-  *    resume re-extracts it into the same Overwrite. After a failure no
-  *    chunk is admitted, the in-flight one is awaited (its row appended if
-  *    it committed) and the first error is rethrown. With `bucketedInput` the
+  *    (pmod(xxhash64(doc_id), chunks)), each a unit of the landed-run
+  *    contract ([[Landed]]): it OVERWRITES its own chunk= directory, then
+  *    appends its metrics rows; on restart, chunks with a 'done' metrics
+  *    row are skipped — exact resume, verified by the resume-equivalence
+  *    test (FIXTURES.md §4). At most two chunks are in flight: chunk k+1
+  *    is extracted and written while chunk k's straggler tail, commit and
+  *    metrics append run. Rows are appended on the calling thread, in
+  *    chunk order. After a failure no chunk is admitted, the in-flight one
+  *    is awaited (its row appended if it committed) and the first error
+  *    is rethrown. With `bucketedInput` the
   *    input is laid out as bucket= partition dirs (bucketizeInput), so
   *    chunk selection is partition pruning and a k-chunk run scans the
   *    input ONCE total, not k times. On Iceberg the same flow maps to a
@@ -298,27 +296,15 @@ object ExtractJob {
       new PartitionInstrumentation(rows, kernel, acc, runId, chunkId)))
   }
 
-  /** Chunk ids already recorded complete in the metrics table (resume).
-    * A MISSING metrics table means a fresh run (empty set); an EXISTING
-    * table that cannot be read fails loudly — silently returning empty
-    * would reprocess every chunk and (pre-Overwrite) duplicate output.
+  /** Chunk ids of this run recorded complete in the metrics table, read
+    * through [[Landed.resume]].
     */
-  def completedChunks(spark: SparkSession, cfg: JobConfig): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(cfg.metricsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else try {
-      val df = spark.read.format(cfg.format).load(cfg.metricsPath)
-      df.filter(col("run_id") === cfg.runId && col("status").startsWith("done"))
+  def completedChunks(spark: SparkSession, cfg: JobConfig): Set[Int] =
+    Landed.resume(spark, cfg.metricsPath, cfg.format)(
+      _.filter(col("run_id") === cfg.runId && col("status").startsWith("done"))
         .select("chunk_id").distinct()
-        .collect().map(_.getInt(0)).toSet
-    } catch {
-      case NonFatal(e) =>
-        throw new IllegalStateException(
-          s"metrics table ${cfg.metricsPath} exists but is unreadable — " +
-            "refusing to guess the resume state", e)
-    }
-  }
+        .collect().map(_.getInt(0)).toSet)
+      .getOrElse(Set.empty)
 
   /** Lay the input out as `bucket=N` partition directories keyed on
     * pmod(xxhash64(doc_id), chunks) — one pass over the raw table. A
@@ -390,15 +376,9 @@ object ExtractJob {
       // committed, re-extract only the missing ones (left-anti on doc_id)
       val docLevel = cfg.resumeGranularity == "doc"
       val survivors: Option[DataFrame] =
-        if (!docLevel) None
-        else {
-          val p = new org.apache.hadoop.fs.Path(chunkDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(p))
-            scala.util.Try(spark.read.format(cfg.format).load(chunkDir)
-              .select("doc_id")).toOption
-          else None
-        }
+        if (!docLevel || !Landed.exists(spark, chunkDir)) None
+        else scala.util.Try(spark.read.format(cfg.format).load(chunkDir)
+          .select("doc_id")).toOption
       val sliceTodo = survivors match {
         case Some(done) =>
           // broadcast when small; AQE/sort-merge otherwise — doc_id is
@@ -429,47 +409,28 @@ object ExtractJob {
         "done", "", System.currentTimeMillis()))
     }
 
-    // pool threads are started here, by the caller, so they inherit its
-    // Spark local properties (job group, description, scheduler pool)
-    val pool = Executors.newFixedThreadPool(InFlight, { r =>
-      val t = new Thread(r, s"graft-extract-${cfg.runId}")
-      t.setDaemon(true)
-      t
-    })
-    val inFlight = scala.collection.mutable.Queue.empty[Future[Seq[PartitionMetric]]]
-    var error: Throwable = null
-    // waits for the oldest write, then records its completion: the chunk
-    // committed -> its rows, on this thread, in chunk order (exact resume
-    // boundary); one file per append, so resume reads one file per chunk
-    def settle(): Unit =
-      try spark.createDataset(inFlight.dequeue().get()).coalesce(1)
-        .write.mode(SaveMode.Append).format(cfg.format).save(cfg.metricsPath)
-      catch {
-        case NonFatal(e) =>
-          val cause = e match {
-            case x: ExecutionException => x.getCause
-            case x => x
-          }
-          if (error == null) error = cause else error.addSuppressed(cause)
-      }
-    def failed = inFlight.exists(w => w.isDone && scala.util.Try(w.get()).isFailure)
-    try {
+    // rows are appended here, on the calling thread, in chunk order, each
+    // after its own chunk committed: the exact resume boundary
+    Landed.jobs(s"graft-extract-${cfg.runId}", InFlight) { js =>
+      val inFlight = scala.collection.mutable.Queue.empty[Future[Seq[PartitionMetric]]]
+      var error: Throwable = null
+      def settle(): Unit =
+        try Landed.append(spark, js.await(inFlight.dequeue()), cfg.metricsPath, cfg.format)
+        catch {
+          case NonFatal(e) => if (error == null) error = e else error.addSuppressed(e)
+        }
+      def failed = inFlight.exists(w => w.isDone && scala.util.Try(w.get()).isFailure)
       val todo = (0 until cfg.chunks).filterNot(done).iterator
       while (error == null && todo.hasNext && !failed) {
         if (inFlight.size == InFlight) settle()
         else {
           val chunk = todo.next()
-          val write: Callable[Seq[PartitionMetric]] = () => writeChunk(chunk)
-          inFlight += pool.submit(write)
+          inFlight += js.submit(writeChunk(chunk))
         }
       }
       while (inFlight.nonEmpty) settle()
-    } finally {
-      // also on an interrupt of the caller: no job of the run outlives it
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      if (error != null) throw error
     }
-    if (error != null) throw error
   }
 
   /** Read the combined output of all chunks. */

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.job.Landed
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** The batch crawl-cycle driver: [[WebPrep]]'s operators composed into
   * the iteration a crawler actually runs, with the same landed-table
@@ -21,10 +23,11 @@ import org.apache.spark.sql.functions._
   *               `outDir/frontier/cycle=N`
   *            -> one metrics row appended (exact resume boundary).
   *
-  * Resume mirrors ExtractJob's: a cycle with a `done` metrics row for
-  * this run_id is never re-run; a crash mid-cycle re-runs that cycle
-  * whole (each cycle's two directory writes are Overwrite — the cycle is
-  * the idempotent retry unit); a run whose metrics carry `exhausted` is
+  * Resume follows the landed-run contract of [[graft.job.Landed]], as
+  * ExtractJob's does: a cycle with a `done` metrics row for this run_id
+  * is never re-run; a crash mid-cycle re-runs that cycle whole (each
+  * cycle's three directory writes are Overwrite — the cycle is the
+  * idempotent retry unit); a run whose metrics carry `exhausted` is
   * complete regardless of `cycles`. The loop is driver-orchestrated like
   * any iterative Spark algorithm (PageRank-style): each cycle is a fully
   * distributed job, the driver holds only counters, and lineage is
@@ -38,12 +41,14 @@ import org.apache.spark.sql.functions._
   * via [[WebPrep.frontierFromSitemaps]], freshness recrawl via
   * [[WebPrep.frontierStale]] or the change-rate-adaptive
   * [[WebPrep.recrawlSchedule]] over this loop's own `fetched/` log —
-  * all keyed on the same canonical url. For custom cycles in the
-  * ≤~10^9-fetched-URL regime, [[WebPrep.frontierNewBloom]] is the
-  * exact-result bloom-prefiltered face of the fetched-set diff (this
-  * loop's built-in diff stays the plain anti-join); a richer priority
-  * than in-degree comes from [[graft.ops.LinkGraph.pageRank]] over the
-  * accumulated link output, joined onto the frontier as `priorityCol`.
+  * all keyed on the same canonical url. Custom cycles diff a RAW fetch
+  * log with [[WebPrep.frontierNew]] or its exact bloom-prefiltered face
+  * [[WebPrep.frontierNewBloom]] (≤~10^9 fetched URLs); a landed, canonical
+  * log such as `fetched/` takes a plain anti-join on `url`, as this loop
+  * does (a second canonical pass turns `…/a/` into `…/a`: refetched every
+  * cycle). A richer priority than in-degree comes from
+  * [[graft.ops.LinkGraph.pageRank]] over the accumulated link output,
+  * joined onto the frontier as `priorityCol`.
   *
   * One key everywhere: the canonical url string. Seeds and discovered
   * links pass [[graft.ops.Web.canonicalUrl]] once, before they land, so
@@ -101,6 +106,11 @@ object CrawlLoop {
       docs_kept: Long, frontier_out: Long, wall_ms: Long, status: String,
       ts: Long)
 
+  // threads of a cycle's job pool: every job of its merged barrier runs at
+  // once, so later jobs' tasks fill the executors earlier jobs' stragglers
+  // free up (guide §2.6 back-fill)
+  private val CycleJobs = 8
+
   private def docsDir(cfg: CrawlConfig) = s"${cfg.outDir}/docs"
   private def frontierDir(cfg: CrawlConfig) = s"${cfg.outDir}/frontier"
   // the fetch LOG is its own narrow table, distinct from the corpus: it
@@ -110,30 +120,14 @@ object CrawlLoop {
   private def fetchedDir(cfg: CrawlConfig) = s"${cfg.outDir}/fetched"
   private def metricsPath(cfg: CrawlConfig) = s"${cfg.outDir}/metrics"
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Completed cycles of this run (+ whether the crawl already reported
-    * exhaustion) — the resume state. An unreadable existing metrics
-    * table is an error, never a silent restart-from-zero (the ExtractJob
-    * rule).
+    * exhaustion) — the resume state, read through [[Landed.resume]].
     */
   def completedCycles(spark: SparkSession, cfg: CrawlConfig)
       : (Set[Int], Boolean) = {
-    if (!exists(spark, metricsPath(cfg))) return (Set.empty, false)
-    val all =
-      try {
-        spark.read.format(cfg.format).load(metricsPath(cfg))
-          .select(col("run_id"), col("cycle"), col("status"))
-          .collect()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          throw new IllegalStateException(
-            s"crawl metrics ${metricsPath(cfg)} exists but is unreadable — " +
-              "refusing to guess the resume state", e)
-      }
+    val all = Landed.resume(spark, metricsPath(cfg), cfg.format)(
+      _.select(col("run_id"), col("cycle"), col("status")).collect())
+      .getOrElse(Array.empty[Row])
     // one outDir = one crawl lineage: a different run_id would restart
     // the cycle counter over this run's landed cycle dirs while the
     // old run's higher cycles survive — a silently MIXED corpus. Fail
@@ -235,227 +229,187 @@ object CrawlLoop {
     if (exhausted) return
     var cycle = if (done.isEmpty) 0 else done.max + 1
     var continue = true
-    // the per-cycle landed writes (docs, fetched log, next frontier) are
-    // independent given the persisted cycle frames — overlapping them
-    // trims the measured fixed per-cycle barrier cost (each was a
-    // driver-synchronous job launch + parquet commit in sequence); a
-    // failure in any write still aborts the cycle BEFORE its metrics
-    // row, so the cycle stays the idempotent Overwrite retry unit.
-    // Pool sized for the single merged barrier below (3 lineage counts +
-    // extraction count + 3 writes in flight at once — guide §2.6
-    // back-fill: later jobs' tasks fill executors the earlier jobs'
-    // stragglers free up)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    def awaitAll(fs: Seq[scala.concurrent.Future[_]]): Unit = {
-      // wait for EVERY write before rethrowing, so a failed cycle never
-      // leaves a concurrent write racing a retry's Overwrite
-      val rs = fs.map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-      rs.foreach(_.get)
-    }
     // frontier_in of cycle N is BY CONSTRUCTION the row count of the
     // frontier dir cycle N-1 landed — i.e. last cycle's frontier_out
     // metric. Carrying it in a driver var saves the per-cycle footer
     // count job; a resumed run has no in-memory value for its first
     // cycle and falls back to the footer read once.
     var prevFrontierOut: Option[Long] = None
-    try {
+    // one Landed.jobs pool per cycle, opened inside the cycle's scope:
+    // its jobs end before the scope releases the frames they read
     while (cycle < cfg.cycles && continue) graft.ops.Materialize.scoped { s =>
-      val t0 = System.nanoTime()
-      // the per-cycle rules (the static-overload caller sees one frame
-      // every cycle; a refresh seam sees its cycle's)
-      val robotsTxt = robotsOf(cycle)
-      // the landed-table schemas are fully determined by cfg (a fresh
-      // outDir is required when priorityByInDegree flips), so the
-      // per-cycle reads declare them explicitly — schema inference re-read a parquet footer every cycle, pure
-      // driver-side fixed cost in the per-cycle barrier
-      val frontierSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("url",
-          org.apache.spark.sql.types.StringType) +:
-        (if (cfg.priorityByInDegree)
-          Seq(org.apache.spark.sql.types.StructField("in_degree",
-            org.apache.spark.sql.types.LongType))
-        else Nil))
-      val frontier0 =
-        if (cycle == 0)
-          seeds.select(graft.ops.Web.canonicalUrl(col("url")).as("url"))
-            .filter(col("url").isNotNull).distinct()
-        else spark.read.format(cfg.format).schema(frontierSchema)
-          .load(s"${frontierDir(cfg)}/cycle=${cycle - 1}")
-      // under priority ranking every frontier frame carries in_degree;
-      // seeds start at 0 (nothing links them yet — they are fetched
-      // unconditionally anyway, the cap orders only what competes)
-      val frontier =
-        if (cfg.priorityByInDegree && !frontier0.columns.contains("in_degree"))
-          frontier0.withColumn("in_degree", lit(0L))
-        else frontier0
-      // narrow url-only frames; gated caches so the robots-gate UDF pass
-      // runs once (the count and the anti-join lineage share it).
-      // frontier.count() on the landed dir is a footer-level read (empty
-      // projection), not a data pass. Crawl-trap urls (Web.isUrlTrap:
-      // length/depth/loop signature) drop BEFORE the robots gate — an
-      // unfiltered trap family (calendar pages, session-id loops) would
-      // otherwise eat its host's politeness budget forever; trap rows
-      // never enter the fetched log
-      val trapFree = frontier.filter(!coalesce(
-        graft.ops.Web.isUrlTrap(col("url")), lit(true)))
-      val blockFree =
-        if (cfg.blocklist.isEmpty) trapFree
-        else {
-          // select-restore the frontier's own columns: domainBlocklist
-          // appends (and would clobber) host/flag columns
-          val cols = trapFree.columns
-          graft.ops.Web.domainBlocklist(trapFree, cfg.blocklist, "url")
-            .filter(!col("blocked"))
-            .select(cols.head, cols.tail: _*)
-        }
-      val gated = s.persisted(WebPrep.frontierGated(blockFree, robotsTxt, cfg.userAgent))
-      val fetchedSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("url",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("cycle",
-          org.apache.spark.sql.types.IntegerType)))
-      val fetchedLog =
-        if (exists(spark, fetchedDir(cfg)))
-          spark.read.format(cfg.format).schema(fetchedSchema)
-            .load(fetchedDir(cfg))
-            // COMPLETED cycles only: a crashed attempt of THIS cycle may
-            // have landed its own fetched/cycle=N before dying ahead of
-            // the metrics row — reading it back would make the retry see
-            // to_fetch=0, overwrite the cycle with nothing and falsely
-            // record exhaustion (the cycle must stay the idempotent
-            // retry unit)
-            .filter(col("cycle") < cycle)
-            .drop("cycle")
-        else Seq.empty[String].toDF("url")
-      // the fetched-set diff on the landed url: both sides are already
-      // canonical (see the object scaladoc), so no re-canonicalization
-      val toFetch = s.persisted(gated.filter(col("url").isNotNull)
-        .join(fetchedLog, Seq("url"), "left_anti"))
-      // the three lineage counts START here but are awaited at the
-      // single merged barrier below (with the extraction count and the
-      // three writes): every per-cycle action used to be its own
-      // driver-synchronous barrier — counts, then fetchedN, then writes,
-      // then footer re-counts — and at fixture scale the fixed job-launch
-      // cost of those barriers WAS the crawl wall (x23/x31). The counts
-      // race to fill the shared gated/toFetch caches with the downstream
-      // jobs — Spark's block-level cache locking makes that safe
-      var frontierIn = prevFrontierOut.getOrElse(0L)
-      var gatedN = 0L
-      var toFetchN = 0L
-      val countFutures = (if (prevFrontierOut.isEmpty)
-        Seq(scala.concurrent.Future { frontierIn = frontier.count() })
-      else Nil) ++ Seq(
-        // ONE job for both lineage counts (a tagged union over the two
-        // cached frames) instead of two — same exact counts of the same
-        // frames, one less per-cycle job launch; the scan fills the
-        // shared gated/toFetch caches exactly like the two counts did
-        scala.concurrent.Future {
-          val cs = gated.select(lit(0).as("graft_k"))
-            .unionByName(toFetch.select(lit(1).as("graft_k")))
-            .groupBy(col("graft_k")).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          gatedN = cs.getOrElse(0, 0L)
-          toFetchN = cs.getOrElse(1, 0L)
-        })
-      // under priority ranking the horizon cap keeps the TOP-in-degree
-      // urls of each host (fetchSchedule's priorityCol contract; the
-      // salted two-phase superset argument holds for any priority)
-      val plan = s.persisted(WebPrep.fetchSchedule(toFetch, robotsTxt,
-        cfg.userAgent, cfg.defaultDelaySeconds, cfg.maxPerHost,
-        priorityCol = if (cfg.priorityByInDegree) Some("in_degree")
-          else None).select(col("url")))
-      // horizon rollover: URLs the per-host cap deferred re-enter the
-      // next cycle's frontier instead of silently vanishing — under
-      // priority ranking they KEEP their in-degree (new links to them
-      // add to it at the frontier merge below)
-      val keepCols = col("url") +: (if (cfg.priorityByInDegree)
-        Seq(col("in_degree")) else Nil)
-      val horizonRollover = toFetch.select(keepCols: _*)
-        .join(plan, Seq("url"), "left_anti")
-      // robots-BLOCKED urls roll over too, un-fetched: under the
-      // per-cycle robotsOf seam a rule may reopen later, and the
-      // re-test must run against THAT cycle's rules — evicting gated
-      // rows would make the refresh seam vacuous for exactly the urls
-      // it exists to reconsider. A permanently-blocked set circulates
-      // as narrow url rows only; it never enters to_fetch, the plan,
-      // or the fetched log, and a crawl still exhausts on to_fetch=0
-      // (the blocked residue stays visible in the final frontier dir)
-      val blocked = trapFree.select(keepCols: _*)
-        .filter(col("url").isNotNull)
-        .join(gated.select(col("url")), Seq("url"), "left_anti")
-      val rollover = horizonRollover.unionByName(blocked)
-      // a web table may carry several rows per url (WARC relandings
-      // refetch pages); collapse AFTER the plan join so the dedup
-      // shuffle moves only this cycle's bounded fetch set, with a
-      // deterministic winner (max payload — [[webFromBytes]] already
-      // resolves refetches latest-fetch-wins upstream)
-      val pages = web.join(plan, Seq("url"))
-        .groupBy(col("url")).agg(max(col("html")).as("html"))
-        .withColumn("doc_id", col("url"))
-      val extracted = s.persisted(graft.html.HtmlExtract
-        .extractAll(pages, "doc_id", "html", Some("url")).toDF())
-      // fetchedN joins the merged barrier too: its first materialization
-      // races the corpus/frontier writes to fill the extracted cache,
-      // which the cache locking already serializes per block
-      var fetchedN = 0L
-      val fetchedFuture =
-        scala.concurrent.Future { fetchedN = extracted.count() }
-      val corpus = WebPrep.prepareExtracted(extracted)
-      // the log records ATTEMPTS (the politeness plan), not extraction
-      // output: a dead url or a page whose extraction failed must not
-      // pass the fetched-set diff again every time a later page re-links
-      // it — permanent-skip is the crawl default; retries belong to the
-      // fetch seam, which can re-inject urls via the seeds of a later run.
-      // Frontier dedup: distinct on the url string. Under priority
-      // ranking the merge SUMS in-degree: a rolled-over url keeps its
-      // accumulated count and this cycle's fresh links add to it
-      val frontierNext =
-        if (cfg.priorityByInDegree)
-          WebPrep.frontierRankedExtracted(extracted)
-            .select(col("url"), col("in_degree"))
-            .unionByName(rollover)
-            .groupBy(col("url")).agg(sum(col("in_degree")).as("in_degree"))
-        else WebPrep.frontierExtracted(extracted)
-          .select(col("url")).union(rollover).distinct()
-      // kept/frontier-out counts ride the writes as observe() metrics
-      // (CollectMetrics counts exactly the rows the write lands — the
-      // same value the old footer re-read returned, without two more
-      // post-write jobs), and EVERYTHING — lineage counts, extraction
-      // count, three writes — meets at ONE merged barrier: the cycle
-      // pays one driver-synchronous wait instead of four
-      val keptObs = org.apache.spark.sql.Observation(s"graft-kept-$cycle")
-      val frontierObs =
-        org.apache.spark.sql.Observation(s"graft-frontier-$cycle")
-      awaitAll(countFutures ++ Seq(fetchedFuture,
-        scala.concurrent.Future {
-          corpus.observe(keptObs, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite).format(cfg.format)
-            .save(s"${docsDir(cfg)}/cycle=$cycle")
-        },
-        scala.concurrent.Future {
-          plan.write.mode(SaveMode.Overwrite).format(cfg.format)
-            .save(s"${fetchedDir(cfg)}/cycle=$cycle")
-        },
-        scala.concurrent.Future {
-          frontierNext.observe(frontierObs, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite).format(cfg.format)
-            .save(s"${frontierDir(cfg)}/cycle=$cycle")
-        }))
-      val keptN = keptObs.get("n").asInstanceOf[Long]
-      val frontierOutN = frontierObs.get("n").asInstanceOf[Long]
-      prevFrontierOut = Some(frontierOutN)
-      val status = if (toFetchN == 0) "exhausted" else "done"
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      spark.createDataset(Seq(CycleMetric(cfg.runId, cycle, frontierIn,
-          gatedN, toFetchN, fetchedN, keptN, frontierOutN, wallMs, status,
-          System.currentTimeMillis())))
-        .write.mode(SaveMode.Append).format(cfg.format).save(metricsPath(cfg))
-      if (status == "exhausted") continue = false
-      cycle += 1
+      Landed.jobs(s"graft-crawl-${cfg.runId}", CycleJobs) { js =>
+        val t0 = System.nanoTime()
+        // the per-cycle rules (the static-overload caller sees one frame
+        // every cycle; a refresh seam sees its cycle's)
+        val robotsTxt = robotsOf(cycle)
+        // the landed-table schemas are fully determined by cfg (a fresh
+        // outDir is required when priorityByInDegree flips), so the
+        // per-cycle reads declare them: schema inference would read a
+        // parquet footer every cycle, driver-side cost in the barrier
+        val frontierSchema = StructType(StructField("url", StringType) +:
+          (if (cfg.priorityByInDegree) Seq(StructField("in_degree", LongType)) else Nil))
+        val frontier0 =
+          if (cycle == 0)
+            seeds.select(graft.ops.Web.canonicalUrl(col("url")).as("url"))
+              .filter(col("url").isNotNull).distinct()
+          else spark.read.format(cfg.format).schema(frontierSchema)
+            .load(s"${frontierDir(cfg)}/cycle=${cycle - 1}")
+        // under priority ranking every frontier frame carries in_degree;
+        // seeds start at 0 (nothing links them yet — they are fetched
+        // unconditionally anyway, the cap orders only what competes)
+        val frontier =
+          if (cfg.priorityByInDegree && !frontier0.columns.contains("in_degree"))
+            frontier0.withColumn("in_degree", lit(0L))
+          else frontier0
+        // narrow url-only frames; gated caches so the robots-gate UDF pass
+        // runs once (the count and the anti-join lineage share it).
+        // frontier.count() on the landed dir is a footer-level read (empty
+        // projection), not a data pass. Crawl-trap urls (Web.isUrlTrap:
+        // length/depth/loop signature) drop BEFORE the robots gate — an
+        // unfiltered trap family (calendar pages, session-id loops) would
+        // otherwise eat its host's politeness budget forever; trap rows
+        // never enter the fetched log
+        val trapFree = frontier.filter(!coalesce(
+          graft.ops.Web.isUrlTrap(col("url")), lit(true)))
+        val blockFree =
+          if (cfg.blocklist.isEmpty) trapFree
+          else {
+            // select-restore the frontier's own columns: domainBlocklist
+            // appends (and would clobber) host/flag columns
+            val cols = trapFree.columns
+            graft.ops.Web.domainBlocklist(trapFree, cfg.blocklist, "url")
+              .filter(!col("blocked"))
+              .select(cols.head, cols.tail: _*)
+          }
+        val gated = s.persisted(WebPrep.frontierGated(blockFree, robotsTxt, cfg.userAgent))
+        val fetchedSchema =
+          StructType(Seq(StructField("url", StringType), StructField("cycle", IntegerType)))
+        val fetchedLog =
+          if (Landed.exists(spark, fetchedDir(cfg)))
+            spark.read.format(cfg.format).schema(fetchedSchema)
+              .load(fetchedDir(cfg))
+              // COMPLETED cycles only: a crashed attempt of THIS cycle may
+              // have landed its own fetched/cycle=N before dying ahead of
+              // the metrics row — reading it back would make the retry see
+              // to_fetch=0, overwrite the cycle with nothing and falsely
+              // record exhaustion (the cycle must stay the idempotent
+              // retry unit)
+              .filter(col("cycle") < cycle)
+              .drop("cycle")
+          else Seq.empty[String].toDF("url")
+        // the fetched-set diff on the landed url: both sides are already
+        // canonical (see the object scaladoc), so no re-canonicalization
+        val toFetch = s.persisted(gated.filter(col("url").isNotNull)
+          .join(fetchedLog, Seq("url"), "left_anti"))
+        // the lineage counts START here but are awaited at the single
+        // merged barrier below (with the extraction count and the three
+        // writes): at fixture scale the fixed job-launch cost of each
+        // driver-synchronous barrier is the crawl wall (x23/x31). The
+        // counts race to fill the shared gated/toFetch caches with the
+        // downstream jobs — Spark's block-level cache locking makes that safe
+        val frontierInF =
+          if (prevFrontierOut.isEmpty) Some(js.submit(frontier.count())) else None
+        // ONE job for both lineage counts: a tagged union over the two
+        // cached frames, one job launch less per cycle
+        val countsF = js.submit(gated.select(lit(0).as("graft_k"))
+          .unionByName(toFetch.select(lit(1).as("graft_k")))
+          .groupBy(col("graft_k")).agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+        // under priority ranking the horizon cap keeps the TOP-in-degree
+        // urls of each host (fetchSchedule's priorityCol contract; the
+        // salted two-phase superset argument holds for any priority)
+        val plan = s.persisted(WebPrep.fetchSchedule(toFetch, robotsTxt,
+          cfg.userAgent, cfg.defaultDelaySeconds, cfg.maxPerHost,
+          priorityCol = if (cfg.priorityByInDegree) Some("in_degree")
+            else None).select(col("url")))
+        // horizon rollover: URLs the per-host cap deferred re-enter the
+        // next cycle's frontier instead of silently vanishing — under
+        // priority ranking they KEEP their in-degree (new links to them
+        // add to it at the frontier merge below)
+        val keepCols = col("url") +: (if (cfg.priorityByInDegree)
+          Seq(col("in_degree")) else Nil)
+        val horizonRollover = toFetch.select(keepCols: _*)
+          .join(plan, Seq("url"), "left_anti")
+        // robots-BLOCKED urls roll over too, un-fetched: under the
+        // per-cycle robotsOf seam a rule may reopen later, and the
+        // re-test must run against THAT cycle's rules — evicting gated
+        // rows would make the refresh seam vacuous for exactly the urls
+        // it exists to reconsider. A permanently-blocked set circulates
+        // as narrow url rows only; it never enters to_fetch, the plan,
+        // or the fetched log, and a crawl still exhausts on to_fetch=0
+        // (the blocked residue stays visible in the final frontier dir)
+        val blocked = trapFree.select(keepCols: _*)
+          .filter(col("url").isNotNull)
+          .join(gated.select(col("url")), Seq("url"), "left_anti")
+        val rollover = horizonRollover.unionByName(blocked)
+        // a web table may carry several rows per url (WARC relandings
+        // refetch pages); collapse AFTER the plan join so the dedup
+        // shuffle moves only this cycle's bounded fetch set, with a
+        // deterministic winner (max payload — [[webFromBytes]] already
+        // resolves refetches latest-fetch-wins upstream)
+        val pages = web.join(plan, Seq("url"))
+          .groupBy(col("url")).agg(max(col("html")).as("html"))
+          .withColumn("doc_id", col("url"))
+        val extracted = s.persisted(graft.html.HtmlExtract
+          .extractAll(pages, "doc_id", "html", Some("url")).toDF())
+        // the extraction count joins the barrier too: its first materialization
+        // races the corpus/frontier writes to fill the extracted cache,
+        // which the cache locking already serializes per block
+        val fetchedF = js.submit(extracted.count())
+        val corpus = WebPrep.prepareExtracted(extracted)
+        // the log records ATTEMPTS (the politeness plan), not extraction
+        // output: a dead url or a page whose extraction failed must not
+        // pass the fetched-set diff again every time a later page re-links
+        // it — permanent-skip is the crawl default; retries belong to the
+        // fetch seam, which can re-inject urls via the seeds of a later run.
+        // Frontier dedup: distinct on the url string. Under priority
+        // ranking the merge SUMS in-degree: a rolled-over url keeps its
+        // accumulated count and this cycle's fresh links add to it
+        val frontierNext =
+          if (cfg.priorityByInDegree)
+            WebPrep.frontierRankedExtracted(extracted)
+              .select(col("url"), col("in_degree"))
+              .unionByName(rollover)
+              .groupBy(col("url")).agg(sum(col("in_degree")).as("in_degree"))
+          else WebPrep.frontierExtracted(extracted)
+            .select(col("url")).union(rollover).distinct()
+        // kept/frontier-out counts ride the writes as observe() metrics
+        // (CollectMetrics counts exactly the rows the write lands, with no
+        // post-write job), and EVERYTHING — lineage counts, extraction
+        // count, three writes — meets at ONE merged barrier: the cycle
+        // pays one driver-synchronous wait instead of four
+        val keptObs = Observation(s"graft-kept-$cycle")
+        val frontierObs = Observation(s"graft-frontier-$cycle")
+        js.awaitAll(frontierInF.toSeq ++ Seq(countsF, fetchedF,
+          js.submit {
+            corpus.observe(keptObs, count(lit(1)).as("n"))
+              .write.mode(SaveMode.Overwrite).format(cfg.format)
+              .save(s"${docsDir(cfg)}/cycle=$cycle")
+          },
+          js.submit {
+            plan.write.mode(SaveMode.Overwrite).format(cfg.format)
+              .save(s"${fetchedDir(cfg)}/cycle=$cycle")
+          },
+          js.submit {
+            frontierNext.observe(frontierObs, count(lit(1)).as("n"))
+              .write.mode(SaveMode.Overwrite).format(cfg.format)
+              .save(s"${frontierDir(cfg)}/cycle=$cycle")
+          }))
+        val frontierIn = prevFrontierOut.getOrElse(js.await(frontierInF.get))
+        val counts = js.await(countsF)
+        val toFetchN = counts.getOrElse(1, 0L)
+        val frontierOutN = frontierObs.get("n").asInstanceOf[Long]
+        prevFrontierOut = Some(frontierOutN)
+        val status = if (toFetchN == 0) "exhausted" else "done"
+        Landed.append(spark, Seq(CycleMetric(cfg.runId, cycle, frontierIn,
+          counts.getOrElse(0, 0L), toFetchN, js.await(fetchedF),
+          keptObs.get("n").asInstanceOf[Long], frontierOutN,
+          (System.nanoTime() - t0) / 1000000, status, System.currentTimeMillis())),
+          metricsPath(cfg), cfg.format)
+        if (status == "exhausted") continue = false
+        cycle += 1
+      }
     }
-    } finally pool.shutdown()
   }
 }

@@ -487,10 +487,10 @@ object WebPrep {
   }
 
   /** The frontier diff the scaladoc of [[frontier]] promises: frontier
-    * minus the already-fetched set, as an operator. `fetched` URLs are
-    * canonicalized with the SAME chain the frontier keys on, then
-    * anti-joined on the url key — AQE picks broadcast vs sort-merge by
-    * the fetched side's actual size. The chain is NOT idempotent:
+    * minus the already-fetched set, as an operator, over a RAW fetch log:
+    * `fetched` URLs are canonicalized with the SAME chain the frontier
+    * keys on, then anti-joined on the url key — AQE picks broadcast vs
+    * sort-merge by the fetched side's actual size. The chain is NOT idempotent:
     * `https://x.example/a//` canonicalizes to `…/a/`, and a second pass
     * turns that into `…/a` — so a log of already-canonical keys (a
     * crawl's own landed fetch log) must be diffed as it is, with a plain
@@ -513,6 +513,12 @@ object WebPrep {
     * union is therefore EQUAL to [[frontierNew]] for every fpp — the
     * filter moves cost, never answers (PipelineSpec pins the equality on
     * a randomized frontier).
+    *
+    * Like [[frontierNew]] it takes a RAW fetch log: the chain is NOT
+    * idempotent (`…/a//` → `…/a/` → `…/a`), so a crawl's own landed,
+    * already-canonical log is diffed with a plain anti-join on the url,
+    * as [[CrawlLoop]] does — fed here, a url ending in `/` never matches
+    * its log entry and is fetched again in every cycle that links it.
     *
     * When it wins: a discovery-heavy cycle (most frontier URLs are new —
     * the steady state of an expanding crawl) sends only the revisit tail

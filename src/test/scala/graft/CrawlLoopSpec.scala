@@ -38,6 +38,16 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
         c -> rs.map(_.getString(1)).toSet
       }
 
+  /** Delivers every listener event posted so far (waitUntilEmpty is
+    * Spark-internal).
+    */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+      .invoke(bus, Long.box(60000L))
+  }
+
   private def metrics(cfg: CrawlConfig) =
     spark.read.parquet(cfg.outDir + "/metrics")
       .orderBy("cycle").collect()
@@ -507,5 +517,78 @@ class CrawlLoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(ProfileSpec.persistedAfterGc(sc, before, 10000L) == before)
     assert(!new java.io.File(cfg.outDir, "metrics").exists()) // no cycle completed
+  }
+
+  test("an unreadable crawl metrics table fails the run instead of restarting it") {
+    val (web, seeds, robots) = siteFrames()
+    val cfg = freshCfg(cycles = 2)
+    val m = java.nio.file.Paths.get(cfg.outDir, "metrics")
+    java.nio.file.Files.createDirectories(m)
+    java.nio.file.Files.writeString(m.resolve("part-00000.parquet"), "not parquet")
+    val e = intercept[IllegalStateException](CrawlLoop.run(spark, web, seeds, robots, cfg))
+    assert(e.getMessage.contains("refusing to guess"), e.getMessage)
+    assert(!new java.io.File(cfg.outDir, "docs").exists())
+  }
+
+  test("every job of a crawl run carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (web, seeds, robots) = siteFrames()
+    val cfg = freshCfg(cycles = 2)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    drainListenerBus()
+    sc.addSparkListener(listener)
+    sc.setJobGroup("crawl-group", "cycles in flight")
+    try CrawlLoop.run(spark, web, seeds, robots, cfg)
+    finally sc.clearJobGroup()
+    drainListenerBus()
+    sc.removeSparkListener(listener)
+    assert(metrics(cfg).length == 2)
+    val seen = scala.jdk.CollectionConverters.CollectionHasAsScala(groups).asScala.toSeq
+    // per cycle: the lineage counts, the extraction count, three writes
+    // and the metrics append
+    assert(seen.length >= 12 && seen.forall(_ == "crawl-group"), seen)
+  }
+
+  test("a failed cycle leaves no job running: its lineage counts end before run throws") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sp = spark
+    import sp.implicits._
+    // the cycle-0 lineage counts read the seeds through a slow UDF, and
+    // the web frame has no `html` column, so the cycle throws an
+    // AnalysisException while those counts still run
+    val slow = org.apache.spark.sql.functions.udf { (u: String) => Thread.sleep(1000); u }
+    val seeds = Seq("https://crawl.example/start", "https://crawl.example/impressum")
+      .toDF("url").select(slow($"url").as("url"))
+    val web = graft.fixtures.HtmlFixtures.site(depth = 2, fanout = 2).toDF("url", "page")
+    val robots = Seq(graft.fixtures.HtmlFixtures.siteRobots()).toDF("host", "robots_txt")
+    val cfg = freshCfg(cycles = 2)
+    val sc = spark.sparkContext
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.add(e.time)
+    }
+    drainListenerBus()
+    sc.addSparkListener(listener)
+    try {
+      intercept[org.apache.spark.sql.AnalysisException](
+        CrawlLoop.run(spark, web, seeds, robots, cfg))
+      val returned = System.currentTimeMillis()
+      drainListenerBus()
+      assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // an orphaned count would start or end within its ~1 s per row
+      Thread.sleep(3000)
+      drainListenerBus()
+      assert(!events.isEmpty) // the counts did run
+      val late = scala.jdk.CollectionConverters.CollectionHasAsScala(events).asScala
+        .filter(_ > returned)
+      assert(late.isEmpty, s"job events after run returned at $returned: $late")
+    } finally sc.removeSparkListener(listener)
   }
 }
